@@ -2935,9 +2935,11 @@ object GraftCli {
   private def textQuery(storeDir: String, terms: Seq[String], k: Int,
                         out: String): Unit = {
     val spark = GraftSession.local()
-    // the serve front door: an opted-in store (or fleet — semicolon-
-    // separated dirs) prunes, a plain one serves unpruned — same rows
-    // either way (textqueryp/textquerysharded stay as explicit verbs)
+    // the serve front door: an opted-in fleet (semicolon-separated
+    // dirs) prunes, and so does an opted-in store whose bucket files
+    // overlap in term range; a store pruning cannot help serves
+    // unpruned — same rows either way (textqueryp/textquerysharded
+    // stay as explicit verbs)
     val dirs = storeDir.split(";").toSeq.filter(_.nonEmpty)
     val hits = graft.operators.TextIndex.serve(spark, dirs, terms, k)
     hits.write.mode("overwrite").parquet(out)

@@ -74,17 +74,24 @@ object TextIndex {
   /** Wall-clock per ingest phase, accumulated across calls — the
     * attribution ledger behind SCALE.md's per-feature ingest cost
     * table ([[graft.tools.IngestProfile]] clears, runs, reads). Two
-    * nanoTime calls per phase; always on. */
+    * nanoTime calls per phase; always on. The [[ObserveMiss]] key is
+    * the one count in it: fallback hits, not seconds. */
   private[graft] val phaseSeconds =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
+  private def addPhase(key: String, v: Double): Unit =
+    phaseSeconds.merge(key, Double.box(v),
+      (a, b) => Double.box(a.doubleValue + b.doubleValue))
   private def timed[T](phase: String)(f: => T): T = {
     val t0 = java.lang.System.nanoTime()
     val r = f
-    phaseSeconds.merge(phase,
-      Double.box((java.lang.System.nanoTime() - t0) / 1e9),
-      (a, b) => Double.box(a.doubleValue + b.doubleValue))
+    addPhase(phase, (java.lang.System.nanoTime() - t0) / 1e9)
     r
   }
+
+  /** [[phaseSeconds]] key counting [[awaitObserved]] misses: each time
+    * a batched serve's observed metrics row was not there in time and
+    * the serve re-ran the explicit fallback job. */
+  private[graft] val ObserveMiss = "observe_miss"
 
   private def ingestFlag(name: String): Boolean =
     !sys.env.get(name).orElse(Option(java.lang.System.getProperty(name)))
@@ -137,12 +144,14 @@ object TextIndex {
     postingsFrom(tokenized(docs, idCol, textCol, None), nBuckets)
 
   /** Exact corpus stats over ALL docs (matching [[Curation.bm25TopK]]'s
-    * `stats` aggregate): document count and BIGINT token-count sum. */
+    * `stats` aggregate): document count and BIGINT token-count sum —
+    * (0, 0) for an empty frame, where `sum` alone would be null. */
   private def docStats(docs: DataFrame, idCol: String,
                        textCol: String): (Long, Long) = {
     val r = docs
       .select(size(split(col(textCol), TOK)).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n"), sum(col("dl")).as("sdl")).head()
+      .agg(count(lit(1)).as("n"),
+        coalesce(sum(col("dl")), lit(0L)).as("sdl")).head()
     (r.getLong(0), r.getLong(1))
   }
 
@@ -935,7 +944,9 @@ object TextIndex {
     * into the same frozen-bucket layout, extend the w-zone sidecar
     * over the new files only, bump `(n, sdl)`. Existing postings are
     * untouched — the batched cost is the batch's, like
-    * [[Similarity.ivfStoreAppend]]. */
+    * [[Similarity.ivfStoreAppend]]. An empty batch is a no-op: its
+    * write lands no file, and the observed count of zero returns
+    * before any sidecar is touched. */
   def append(newDocs: DataFrame, idCol: String, textCol: String,
              storeDir: String, filesPerBucket: Int = 1,
              marker: Option[Long] = None): Unit = {
@@ -967,6 +978,8 @@ object TextIndex {
     }
     val (n1, sdl1) = observed(obs,
       () => docStats(newDocs, idCol, textCol))
+    // an empty batch landed no postings file: every sidecar stays as is
+    if (n1 == 0L) return
     // doclen + stats + bitset from the BATCH's write only — the
     // appended cost stays the batch's, never the store's
     val written = timed("list_written") {
@@ -1341,6 +1354,8 @@ object TextIndex {
     }
     val (n1, sdl1) = observed(obs,
       () => docStats(newDocs, idCol, textCol))
+    // an empty batch landed no postings file: every sidecar stays as is
+    if (n1 == 0L) return
     val written = timed("list_written") {
       newlyWritten(spark, storeDir, before)
     }
@@ -2275,7 +2290,8 @@ object TextIndex {
     * the row arrives via the async listener bus (normally well under
     * a second behind the action), so wait two and return empty on a
     * miss — the callers all fall back to the explicit job, never an
-    * indefinite block on a swallowed metrics node. */
+    * indefinite block on a swallowed metrics node, and count the
+    * fallback under [[ObserveMiss]] so a late listener bus shows. */
   private def awaitObserved(obs: Observation): Map[String, Any] =
     try {
       val row = scala.concurrent.Await.result(obs.future,
@@ -2295,7 +2311,7 @@ object TextIndex {
       .localCheckpoint()
     val n = awaitObserved(obs).get("n") match {
       case Some(l: java.lang.Long) => l.longValue
-      case _ => cp.limit(1).count()
+      case _ => addPhase(ObserveMiss, 1); cp.limit(1).count()
     }
     (cp, n > 0L)
   }
@@ -2310,8 +2326,9 @@ object TextIndex {
         s.map(_.asInstanceOf[Number].intValue).toSeq
       case Some(a: Array[_]) =>
         a.toSeq.map(_.asInstanceOf[Number].intValue)
-      case _ => cp.select(col("tb")).distinct()
-        .collect().map(_.getInt(0)).toSeq
+      case _ =>
+        addPhase(ObserveMiss, 1)
+        cp.select(col("tb")).distinct().collect().map(_.getInt(0)).toSeq
     }
     (cp, buckets.distinct.sorted)
   }
@@ -4190,29 +4207,85 @@ object TextIndex {
   }
 
   // ------------------------------------------------------------------
-  // ONE SERVE FRONT DOOR. The ranked-serve matrix is now
+  // ONE SERVE FRONT DOOR. The ranked-serve matrix is
   // {plain, pruned} × {single, batched} × {single-store, sharded} ×
   // {BM25, LM}, and every cell is an explicit verb — correct, but a
-  // caller picking by method name can silently land on a slow path
-  // (unpruned on an opted-in store) or an inapplicable one. serve()/
-  // serveBatch() inspect the stores — shard count, `_blockmax`
-  // opt-in — and dispatch to the fastest EXACT path; the pruned verbs
-  // themselves keep the tombstone / heal-failure / mixed-fleet
-  // delegations, so the front door never needs to re-check those.
-  // Every explicit verb stays public: the front door is a default,
-  // not a replacement. [[lastServeRoute]] records the chosen verb
-  // (the dispatch-matrix spec pins it; never feeds an answer).
+  // caller picking by method name can silently land on a slow path or
+  // an inapplicable one. serve()/serveBatch() inspect the stores and
+  // dispatch to the cheapest EXACT path (both routes of every cell are
+  // bit-identical, so the rule only changes cost):
+  //   - a FLEET prunes when every shard opted into `_blockmax`: a
+  //     shared cross-shard θ can prove a whole weak shard sub-θ;
+  //   - a SINGLE opted-in store prunes only when two data files of one
+  //     `tb` bucket overlap in their `w` zones ([[zonesDisjoint]]);
+  //     otherwise pruning provably skips nothing. build and compact
+  //     write postings with repartitionByRange(nb × filesPerBucket,
+  //     tb, w), so with disjoint zones each query term lives in exactly
+  //     one file; [[prunedServe]]'s survivor rule keeps f iff
+  //     max(cap, 0) + restPlus(w) ≥ θ, which with one file per term
+  //     reads totalPlus ≥ θ; and θ ≤ the k-th exact score ≤ totalPlus.
+  //     Every relevant file survives, so the pruned route would read
+  //     each twice (probe, survivors) plus the sidecar — 13 jobs where
+  //     topK runs 5. Appends land files whose zones overlap the old
+  //     ones, which brings pruning back until the next compact;
+  //   - a missing zone sidecar, or one not covering every live file,
+  //     proves nothing and keeps the pruned route;
+  //   - a store without `_blockmax` serves unpruned.
+  // The pruned verbs themselves keep the tombstone / heal-failure /
+  // mixed-fleet delegations, so the front door never re-checks those.
+  // Every explicit verb stays public: the front door is a default, not
+  // a replacement. [[lastServeRoute]] records the route taken (the
+  // dispatch-matrix spec pins it; never feeds an answer).
 
   @volatile private[graft] var lastServeRoute: Option[String] = None
 
   private def hasBlockmax(spark: SparkSession, dir: String): Boolean =
     graft.sinks.HadoopSwap.exists(spark, blockmaxPath(dir))
 
+  /** Whether no two data files of one `tb` bucket overlap in their `w`
+    * zones — the single-store condition under which block-max pruning
+    * skips nothing (the front-door comment above). The zones come
+    * through the fingerprint-keyed sidecar cache, so a warm store state
+    * costs two listings and no Spark job. False — "not proven" — when
+    * the sidecar is missing, does not map exactly the live files, or a
+    * zone lacks a bound. Zones compare in UTF-8 byte order, the order
+    * the writer's min/max used. The cache key is the scheme-qualified
+    * root the zone-prune rule also loads under, so a serve that goes on
+    * to read the store reuses this load instead of repeating it. */
+  private[graft] def zonesDisjoint(spark: SparkSession,
+                                   dir: String): Boolean = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val live = graft.sinks.SkippingStore.listDataFileRelPaths(spark, dir)
+    val zones = scala.util.Try(graft.sinks.SkippingStore
+        .loadMultiSidecarCached(spark,
+          graft.sinks.Constraints.qualified(spark, dir), live))
+      .toOption.flatten.flatMap(_.byCol.get("w"))
+      .filter(_.forall(z => z.zminStr.isDefined && z.zmaxStr.isDefined))
+    // per bucket directory, sorted by zone min: disjoint iff each zone
+    // ends strictly before the next one starts
+    zones.exists(_.groupBy(z => z.file.take(z.file.lastIndexOf('/') + 1))
+      .values.forall { bucket =>
+        val byMin = bucket.map(z => (UTF8String.fromString(z.zminStr.get),
+            UTF8String.fromString(z.zmaxStr.get)))
+          .sortWith((a, b) => a._1.compareTo(b._1) < 0)
+        byMin.zip(byMin.drop(1)).forall { case (a, b) =>
+          a._2.compareTo(b._1) < 0 }
+      })
+  }
+
+  /** Whether the front door takes the block-max pruned route: every
+    * store opted in and, for a single store, its zones overlap. */
+  private def prunes(spark: SparkSession, storeDirs: Seq[String]): Boolean =
+    storeDirs.forall(hasBlockmax(spark, _)) &&
+      (storeDirs.size > 1 || !zonesDisjoint(spark, storeDirs.head))
+
   /** Serve a ranked term query from one store or a shard fleet,
-    * picking the fastest exact path. `scorer`: "bm25" (default) or
-    * "lm" (Dirichlet; `mu`). Answers are bit-identical whichever path
-    * dispatch lands on — that is the pruning/scatter contract this
-    * file proves — so the choice is pure mechanics. */
+    * picking the cheapest exact path by the rule above: pruned on a
+    * fleet of opted-in shards, or on one opted-in store whose bucket
+    * files overlap in `w`; unpruned otherwise. `scorer`: "bm25"
+    * (default) or "lm" (Dirichlet; `mu`). Answers are bit-identical
+    * whichever path dispatch lands on — that is the pruning/scatter
+    * contract this file proves — so the choice is pure mechanics. */
   def serve(spark: SparkSession, storeDirs: Seq[String],
             terms: Seq[String], k: Int, scorer: String = "bm25",
             k1: Double = 1.2, b: Double = 0.75,
@@ -4221,8 +4294,7 @@ object TextIndex {
     val sc = scorer.toLowerCase(java.util.Locale.ROOT)
     require(sc == "bm25" || sc == "lm",
       s"unknown scorer '$scorer' — expected bm25 or lm")
-    val pruned = storeDirs.forall(hasBlockmax(spark, _))
-    val route = (storeDirs.size == 1, pruned, sc) match {
+    val route = (storeDirs.size == 1, prunes(spark, storeDirs), sc) match {
       case (true, true, "bm25") => "topKPruned"
       case (true, false, "bm25") => "topK"
       case (true, true, "lm") => "lmTopKPruned"
@@ -4248,7 +4320,12 @@ object TextIndex {
   }
 
   /** [[serve]] for a whole `(idCol, termsCol: array<string>)` query
-    * frame — the batched column of the same dispatch matrix. */
+    * frame — the batched column of the same dispatch matrix, under the
+    * same rule: one opted-in store whose bucket files share no term
+    * serves through [[topKBatch]] / [[lmTopKBatch]] (the batched
+    * survivor rule keeps every relevant file there too — 13 jobs
+    * instead of 45 for a batch of 16), a fleet or an overlapping store
+    * through the pruned batch. */
   def serveBatch(spark: SparkSession, storeDirs: Seq[String],
                  queries: DataFrame, idCol: String, termsCol: String,
                  k: Int, scorer: String = "bm25", k1: Double = 1.2,
@@ -4257,8 +4334,7 @@ object TextIndex {
     val sc = scorer.toLowerCase(java.util.Locale.ROOT)
     require(sc == "bm25" || sc == "lm",
       s"unknown scorer '$scorer' — expected bm25 or lm")
-    val pruned = storeDirs.forall(hasBlockmax(spark, _))
-    val route = (storeDirs.size == 1, pruned, sc) match {
+    val route = (storeDirs.size == 1, prunes(spark, storeDirs), sc) match {
       case (true, true, "bm25") => "topKPrunedBatch"
       case (true, false, "bm25") => "topKBatch"
       case (true, true, "lm") => "lmTopKPrunedBatch"
@@ -4533,7 +4609,9 @@ object TextIndex {
   /** Create (or exactly rebuild) the `_blockmax` sidecar over every
     * live data file. Opt-in, like [[buildVocab]]: once it exists,
     * appends/heals extend it from the new files alone. Lands
-    * scaffold-then-swap (the shared sidecar crash discipline). */
+    * scaffold-then-swap (the shared sidecar crash discipline), then
+    * memos the files it covered under the new sidecar state, so the
+    * first append need not read the sidecar back to learn them. */
   def buildBlockStats(spark: SparkSession, storeDir: String): Unit = {
     val files = graft.sinks.SkippingStore
       .listDataFileRelPaths(spark, storeDir)
@@ -4547,6 +4625,7 @@ object TextIndex {
       graft.sinks.HadoopSwap.swapInto(spark, s"$side.fold-$stamp", side,
         s"$side.old-$stamp")
     }
+    memoBlockCovered(spark, storeDir, files.toSet)
   }
 
   /** File-coverage-keyed extension — a no-op on stores that never
@@ -4568,6 +4647,14 @@ object TextIndex {
     * UUIDs). Bounded like the stats memo. */
   private val blockCoveredMemo = new java.util.concurrent
     .ConcurrentHashMap[String, (String, Set[String])]()
+
+  /** Memo `covered` under the sidecar's current listing signature. */
+  private def memoBlockCovered(spark: SparkSession, dir: String,
+                               covered: Set[String]): Unit = {
+    if (blockCoveredMemo.size > 64) blockCoveredMemo.clear()
+    blockCoveredMemo.put(dir, (dirListingSig(spark, blockmaxPath(dir)),
+      covered))
+  }
 
   private[graft] def maybeExtendBlockStats(spark: SparkSession,
                                            dir: String): Unit = {
@@ -4604,9 +4691,7 @@ object TextIndex {
       // memo the post-write coverage under the post-write signature:
       // the extension covered `missing`, and a fold only drops rows
       // of non-live files, which `missing` never re-lists
-      if (blockCoveredMemo.size > 64) blockCoveredMemo.clear()
-      blockCoveredMemo.put(dir,
-        (dirListingSig(spark, side), covered ++ missing))
+      memoBlockCovered(spark, dir, covered ++ missing)
     }
     ()
   }

@@ -31,26 +31,53 @@ object Pipeline {
     * driver calls them sequentially, and a multi-store fixture's
     * builds are a textbook case: disjoint output dirs, disjoint input
     * slices, no shared state beyond the session). Results return in
-    * input order; the first failure rethrows its real cause. Each
-    * store's own build pipeline stays sequential inside its task, so
-    * every store's bytes are identical to the sequential run —
-    * only the wall-clock overlap changes. */
-  private def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
+    * input order. Each store's own build pipeline stays sequential
+    * inside its task, so every store's bytes are identical to the
+    * sequential run — only the wall-clock overlap changes.
+    *
+    * Failure: results are awaited in COMPLETION order, so the first
+    * failure is seen as soon as it happens. It cancels the siblings
+    * (`shutdownNow` interrupts the running ones and drops the queued),
+    * waits a bounded time for them to stop, and rethrows its real
+    * cause with every other sibling's own failure attached as
+    * suppressed — interrupts the cancel itself caused are not
+    * failures and are not attached. */
+  private[graft] def inParallel[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.size <= 1) items.map(f)
     else {
+      import java.util.concurrent.{ExecutionException, TimeUnit}
       val pool = java.util.concurrent.Executors
         .newFixedThreadPool(math.min(items.size, 6))
+      val done = new java.util.concurrent.ExecutorCompletionService[B](pool)
       try {
         val futs = items.map(a =>
-          pool.submit(new java.util.concurrent.Callable[B] {
+          done.submit(new java.util.concurrent.Callable[B] {
             override def call(): B = f(a)
           }))
-        try futs.map(_.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
+        futs.indices.foreach { _ =>
+          val fut = done.take()
+          try fut.get()
+          catch {
+            case e: ExecutionException =>
+              pool.shutdownNow()
+              pool.awaitTermination(30, TimeUnit.SECONDS)
+              val first = e.getCause
+              futs.filter(o => (o ne fut) && o.isDone && !o.isCancelled)
+                .foreach { o =>
+                  try o.get()
+                  catch {
+                    case oe: ExecutionException
+                        if !oe.getCause.isInstanceOf[InterruptedException]
+                          && (oe.getCause ne first) =>
+                      first.addSuppressed(oe.getCause)
+                    case _: ExecutionException =>
+                  }
+                }
+              throw first
+          }
         }
-      } finally pool.shutdown()
+        futs.map(_.get())
+      } finally pool.shutdownNow()
     }
 
   /** `cell=` partition-directory count of a postings store, through the

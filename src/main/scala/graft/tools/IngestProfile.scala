@@ -28,7 +28,8 @@ object IngestProfile {
     def snap(): Map[String, Double] = {
       import scala.jdk.CollectionConverters._
       val m = TextIndex.phaseSeconds.asScala.toMap
-        .map { case (k, v) => k -> v.doubleValue }
+        .collect { case (k, v) if k != TextIndex.ObserveMiss =>
+          k -> v.doubleValue }
       TextIndex.phaseSeconds.clear()
       m
     }

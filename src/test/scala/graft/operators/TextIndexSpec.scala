@@ -1266,4 +1266,55 @@ class TextIndexSpec extends SparkSpec {
     assert(fgot == fwant)
     assert(!fgot.exists(_._1 == 2L))
   }
+
+  /** Every file under `dir` (sidecars included) with its length,
+    * except the `_SUCCESS` markers a write job rewrites. */
+  private def storeFiles(dir: String): Map[String, Long] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(root, true)
+    val out = Map.newBuilder[String, Long]
+    while (it.hasNext) {
+      val st = it.next()
+      val rel = st.getPath.toUri.getPath.stripPrefix(root.toUri.getPath)
+      if (!st.getPath.getName.contains("_SUCCESS")) out += rel -> st.getLen
+    }
+    out.result()
+  }
+
+  test("appending an empty batch is a no-op: no file, no sidecar row") {
+    val dir = tmp("empty_append")
+    TextIndex.build(docs, "doc_id", "text", dir, nBuckets = 4,
+      filesPerBucket = 2)
+    TextIndex.buildBlockStats(spark, dir)
+    TextIndex.buildVocab(spark, dir)
+    val before = storeFiles(dir)
+    val want = rows(TextIndex.topK(spark, dir, Seq("alpha", "mu"), 8))
+    TextIndex.append(Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    assert(storeFiles(dir) == before)
+    assert(rows(TextIndex.topK(spark, dir, Seq("alpha", "mu"), 8)) == want)
+    // and the store still takes a real batch afterwards
+    TextIndex.append(Seq((1000L, "alpha alpha mu")).toDF("doc_id", "text"),
+      "doc_id", "text", dir)
+    assert(rows(TextIndex.topK(spark, dir, Seq("alpha", "mu"), 100))
+      .exists(_._1 == 1000L))
+  }
+
+  test("a warm batched serve reads its probed buckets from the observed " +
+      "metrics row: no observation miss") {
+    val dir = tmp("observe")
+    TextIndex.build(docs, "doc_id", "text", dir, nBuckets = 4)
+    val queries = Seq((0L, Seq("alpha", "beta")), (1L, Seq("mu")))
+      .toDF("query_id", "terms")
+    def serve() = TextIndex.topKBatch(spark, dir, queries, "query_id",
+      "terms", 5).collect()
+    def misses =
+      Option(TextIndex.phaseSeconds.get(TextIndex.ObserveMiss))
+        .fold(0.0)(_.doubleValue)
+    val want = serve()
+    val before = misses
+    assert(serve().toSeq == want.toSeq)
+    assert(misses == before, "a warm topKBatch fell back to the bucket job")
+  }
 }

@@ -861,4 +861,98 @@ class TextPruneSpec extends SparkSpec {
     assert(got == rows(TextIndex.topK(spark, dir, Seq("x"), 3)))
     assert(!TextIndex.lastPruneStats.get.delegated)
   }
+
+  /** A Zipf(1)-shaped corpus over 300 words: `w000` is the most
+    * frequent. Deterministic per seed and id range. */
+  private def zipfDocs(from: Long, until: Long, seed: Int): DataFrame = {
+    val cdf = (1 to 300).map(1.0 / _).scanLeft(0.0)(_ + _).tail
+    val rnd = new Random(seed)
+    (from until until).map { i =>
+      val n = 8 + rnd.nextInt(33)
+      (i, Seq.fill(n) {
+        val u = rnd.nextDouble() * cdf.last
+        f"w${cdf.indexWhere(_ >= u)}%03d"
+      }.mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  test("the front door serves a store whose bucket files share no term " +
+      "unpruned — appends bring pruning back, compact removes it again; " +
+      "on such a store the pruned verbs skip nothing") {
+    val dir = tmp("route")
+    val base = zipfDocs(0, 400, 5)
+    TextIndex.build(base, "doc_id", "text", dir, nBuckets = 4,
+      filesPerBucket = 2)
+    TextIndex.buildBlockStats(spark, dir)
+    assert(TextIndex.zonesDisjoint(spark, dir),
+      "a fresh range-clustered build keeps each bucket's zones disjoint")
+    // head, torso and tail terms by document frequency in the corpus
+    val byDf = base.select(explode(array_distinct(split($"text", " ")))
+        .as("w")).groupBy($"w").count()
+      .orderBy($"count".desc, $"w").as[(String, Long)].collect()
+      .map(_._1).toSeq
+    val single = Seq(byDf.take(2), Seq(byDf(20), byDf(45)),
+      byDf.takeRight(2), Seq(byDf.head, byDf.last))
+    val queries = single.zipWithIndex.map { case (ts, i) => (i.toLong, ts) }
+      .toDF("query_id", "terms")
+    def brows(df: DataFrame) =
+      df.select($"query_id", $"doc_id", $"n_terms", $"score")
+        .as[(Long, Long, Long, Double)].collect().toSeq
+    def route = TextIndex.lastServeRoute.get
+    /** Every front-door cell routes as `pruned` says; on the unpruned
+      * route its rows must equal the explicit pruned verb's (on the
+      * pruned route the front door IS that verb). The single query
+      * mixes a head and a tail term; the batch covers all four. */
+    def checkRoutes(pruned: Boolean, when: String): Unit = {
+      val ts = single.last
+      val bm = rows(TextIndex.serve(spark, Seq(dir), ts, 5))
+      assert(route == (if (pruned) "topKPruned" else "topK"), when)
+      if (!pruned)
+        assert(bm == rows(TextIndex.topKPruned(spark, dir, ts, 5)), when)
+      val lm = rows(TextIndex.serve(spark, Seq(dir), ts, 5, "lm"))
+      assert(route == (if (pruned) "lmTopKPruned" else "lmTopK"), when)
+      if (!pruned)
+        assert(lm == rows(TextIndex.lmTopKPruned(spark, dir, ts, 5)), when)
+      val bb = brows(TextIndex.serveBatch(spark, Seq(dir), queries,
+        "query_id", "terms", 5))
+      assert(route == (if (pruned) "topKPrunedBatch" else "topKBatch"), when)
+      if (!pruned)
+        assert(bb == brows(TextIndex.topKPrunedBatch(spark, dir, queries,
+          "query_id", "terms", 5)), s"$when bm25 batch")
+      val lb = brows(TextIndex.serveBatch(spark, Seq(dir), queries,
+        "query_id", "terms", 5, "lm"))
+      assert(route == (if (pruned) "lmTopKPrunedBatch" else "lmTopKBatch"),
+        when)
+      if (!pruned)
+        assert(lb == brows(TextIndex.lmTopKPrunedBatch(spark, dir, queries,
+          "query_id", "terms", 5)), s"$when lm batch")
+    }
+    checkRoutes(pruned = false, "fresh build")
+    // the skip-nothing argument, observed: one file per term means every
+    // relevant file survives the cap/θ rule, for every scorer and band
+    for (ts <- single.take(3)) {
+      rows(TextIndex.topKPruned(spark, dir, ts, 5))
+      val bm = TextIndex.lastPruneStats.get
+      assert(!bm.delegated && bm.relevantFiles > 0 && bm.skipped == 0,
+        s"bm25 $ts: $bm")
+      rows(TextIndex.lmTopKPruned(spark, dir, ts, 5))
+      val lm = TextIndex.lastPruneStats.get
+      assert(!lm.delegated && lm.relevantFiles > 0 && lm.skipped == 0,
+        s"lm $ts: $lm")
+    }
+    TextIndex.append(zipfDocs(400, 460, 6), "doc_id", "text", dir)
+    assert(!TextIndex.zonesDisjoint(spark, dir))
+    checkRoutes(pruned = true, "after an append")
+    TextIndex.compact(spark, dir, filesPerBucket = 2)
+    assert(TextIndex.zonesDisjoint(spark, dir))
+    checkRoutes(pruned = false, "after compact")
+    // no zone sidecar: nothing is proven, the pruned route stays
+    val zm = new org.apache.hadoop.fs.Path(s"$dir/_zonemap_multi")
+    zm.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(zm, true)
+    assert(!TextIndex.zonesDisjoint(spark, dir))
+    assert(rows(TextIndex.serve(spark, Seq(dir), single.head, 5)) ==
+      rows(TextIndex.topK(spark, dir, single.head, 5)))
+    assert(route == "topKPruned")
+  }
 }
