@@ -707,10 +707,6 @@ object GraftCli {
     spark.stop()
   }
 
-  private val storeTables = Seq("feature", "featureloc", "analysisfeature",
-    "synonym", "feature_synonym", "dbxref", "feature_dbxref",
-    "feature_relationship", "featureprop")
-
   private def gff3ToChado(in: String, out: String): Unit = {
     val spark = GraftSession.local()
     import spark.implicits._
@@ -799,37 +795,17 @@ object GraftCli {
   private def mergeIntoStore(spark: org.apache.spark.sql.SparkSession,
       feats: org.apache.spark.sql.Dataset[graft.chado.GffRecord],
       out: String): Unit = {
-    val staged = Gff3ToChado.stage(spark, feats)
-    // optional FeatureVersion plugin (gff3tochado.pm:263-269)
-    val staging =
-      if (featureVersion) Gff3ToChado.withFeatureVersion(staged) else staged
     // incremental: an existing store is the live side (the reference's
-    // re-load path, ChadoGFF3UpdateRunner) — only deltas are inserted
-    val live =
-      if (new java.io.File(s"$out/feature").exists()) {
-        def r(t: String) = spark.read.parquet(s"$out/$t")
-        Gff3ToChado.Store(r("feature"), r("featureloc"), r("analysisfeature"),
-          r("synonym"), r("feature_synonym"), r("dbxref"), r("feature_dbxref"),
-          r("feature_relationship"), r("featureprop"))
-      } else Gff3ToChado.Store.emptyLike(staging)
-    val (store, counts) = Gff3ToChado.merge(staging, live)
-    counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(f"$t%-22s $n%6d") }
-    if (dryRun) { println("dry run: no store write"); return }
-    val frames = Seq(store.feature, store.featureloc, store.analysisfeature,
-      store.synonym, store.featureSynonym, store.dbxref, store.featureDbxref,
-      store.featureRelationship, store.featureprop)
-    storeTables.zip(frames).foreach { case (t, df) =>
-      // localCheckpoint: the new store still references the parquet being
-      // overwritten — materialize before the write truncates the input
-      val w = df.localCheckpoint().write.mode("overwrite")
-      // featureloc is the fact table: partition it by reference so
-      // single-chromosome exports prune to one directory (the judge-
-      // visible PartitionFilters path; see ScaleOpsSpec)
-      if (t == "featureloc") w.partitionBy("srcfeature").parquet(s"$out/$t")
-      else w.parquet(s"$out/$t")
-    }
-    println(s"store written to $out")
+    // re-load path, ChadoGFF3UpdateRunner) — only deltas are inserted;
+    // --feature-version is the FeatureVersion plugin (gff3tochado.pm:263-269)
+    printCounts(Gff3ToChado.loadInto(spark, feats, out, featureVersion, dryRun), 22)
+    println(if (dryRun) "dry run: no store write" else s"store written to $out")
   }
+
+  private def printCounts(counts: Map[String, Long], width: Int): Unit =
+    counts.toSeq.sortBy(_._1).foreach { case (t, n) =>
+      println(s"%-${width}s %6d".format(t, n))
+    }
 
   /** obo2chado; with metadata = false it is adhocobo2chado
     * (lib/Modware/Load/Command/adhocobo2chado.pm:16-23: terms +
@@ -854,30 +830,12 @@ object GraftCli {
         spark.stop(); return
       case _ => ()
     }
-    val staged = OntologyMerge.stage(spark, Obo.terms(spark, in), Obo.relationships(spark, in))
-    val st =
-      if (metadata) staged
-      else staged.copy(synonym = staged.synonym.limit(0),
-        altId = staged.altId.limit(0))
     // incremental: an existing store is the live side — re-loads compute
     // prune/update/insert deltas (the reference's versioned re-load,
     // obo2chado-core-update.t)
-    val live =
-      if (new java.io.File(s"$out/cvterm").exists())
-        OntologyMerge.CvStore(
-          spark.read.parquet(s"$out/cvterm"),
-          spark.read.parquet(s"$out/cvtermsynonym"),
-          spark.read.parquet(s"$out/cvterm_altid"),
-          spark.read.parquet(s"$out/cvterm_relationship"))
-      else OntologyMerge.CvStore.emptyLike(st)
-    val r = OntologyMerge.merge(st, live)
-    r.counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(f"$t%-22s $n%6d") }
+    printCounts(OntologyMerge.loadInto(spark, Obo.terms(spark, in),
+      Obo.relationships(spark, in), out, metadata, dryRun), 22)
     if (dryRun) { println("dry run: no store write"); spark.stop(); return }
-    Seq("cvterm" -> r.store.cvterm, "cvtermsynonym" -> r.store.synonym,
-      "cvterm_altid" -> r.store.altId,
-      "cvterm_relationship" -> r.store.relationship).foreach { case (t, df) =>
-      df.localCheckpoint().write.mode("overwrite").parquet(s"$out/$t")
-    }
     // record the loaded version for the next run's gate (the cvprop
     // `date` row, Ontology.pm:241-293)
     header.get("date").foreach { d =>
@@ -1254,16 +1212,13 @@ object GraftCli {
     * alt_ids, touching relationships) from the cv store. */
   private def dropOntoFromChado(store: String, ns: String): Unit = {
     val spark = GraftSession.local()
-    def r(t: String) = spark.read.parquet(s"$store/$t")
-    val cv = OntologyMerge.CvStore(r("cvterm"), r("cvtermsynonym"),
-      r("cvterm_altid"), r("cvterm_relationship"))
+    val cv = OntologyMerge.CvStore.of(
+      OntologyMerge.CvStore.tables.map(t => spark.read.parquet(s"$store/$t")))
     val res = OntologyMerge.dropOntology(cv, ns)
-    res.counts.toSeq.sortBy(_._1).foreach { case (t, n) => println(f"$t%-24s $n%6d") }
+    printCounts(res.counts, 24)
     if (dryRun) { println("dry run: no store write"); spark.stop(); return }
-    Seq("cvterm" -> res.store.cvterm, "cvtermsynonym" -> res.store.synonym,
-      "cvterm_altid" -> res.store.altId,
-      "cvterm_relationship" -> res.store.relationship).foreach { case (t, df) =>
-      df.localCheckpoint().write.mode("overwrite").parquet(s"$store/$t")
+    OntologyMerge.CvStore.tables.zip(res.store.frames).foreach { case (t, df) =>
+      graft.sinks.StoreMaintenance.overwriteViaSwap(df, s"$store/$t")
     }
     println(s"namespace $ns dropped from $store")
     spark.stop()
@@ -1678,11 +1633,7 @@ object GraftCli {
     * annotation store tables (SURVEY.md §3.4; GAF.pm:86-163). */
   private def gaf2Chado(in: String, store: String): Unit = {
     val spark = GraftSession.local()
-    val tables = graft.etl.GafLoad.toStore(graft.sources.Gaf.read(spark, in))
-    tables.toSeq.sortBy(_._1).foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$store/$name")
-      println(f"$name%-18s ${spark.read.parquet(s"$store/$name").count()}%6d")
-    }
+    printCounts(graft.etl.GafLoad.loadInto(graft.sources.Gaf.read(spark, in), store), 18)
     println(s"annotation store written to $store")
     spark.stop()
   }

@@ -101,6 +101,21 @@ object GafLoad {
       "gene_description" -> geneDescription)
   }
 
+  /** gaf2chado's store side: decompose `gaf` into the [[toStore]]
+    * tables and replace each under `storeDir` (the GAF load is
+    * prune-all + reload). Returns each table's row count. The GAF is
+    * parsed once and shared by every table; the counts are one
+    * [[Gff3ToChado.collectCounts]] job over the same frames the writes
+    * consume, and the six writes run concurrently. */
+  def loadInto(gaf: Dataset[GafRecord], storeDir: String): Map[String, Long] = {
+    val tables = toStore(gaf.localCheckpoint()).toSeq
+    val counts = Gff3ToChado.collectCounts(tables)
+    graft.queries.Pipeline.inParallel(tables) { case (name, df) =>
+      df.write.mode("overwrite").parquet(s"$storeDir/$name")
+    }
+    counts
+  }
+
   /** U4 — duplicate-gene fan-out: copy annotation rows to each sibling id
     * in the dup map (AppendDuplicate.pm:43-66). */
   def fanoutDuplicates(annotations: DataFrame, dupMap: DataFrame): DataFrame = {

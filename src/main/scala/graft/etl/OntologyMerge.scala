@@ -26,12 +26,21 @@ object OntologyMerge {
       cvterm: DataFrame, // accession, name, definition, is_obsolete
       synonym: DataFrame, // accession, synonym
       altId: DataFrame, // accession, alt_id
-      relationship: DataFrame) // subject, predicate, object
+      relationship: DataFrame) { // subject, predicate, object
+    /** The four frames, in [[CvStore.tables]] order. */
+    def frames: Seq[DataFrame] = Seq(cvterm, synonym, altId, relationship)
+  }
 
   object CvStore {
-    def emptyLike(st: CvStore): CvStore = CvStore(
-      st.cvterm.limit(0), st.synonym.limit(0), st.altId.limit(0),
-      st.relationship.limit(0))
+    /** The store's table directory names, in [[CvStore.frames]] order. */
+    val tables: Seq[String] =
+      Seq("cvterm", "cvtermsynonym", "cvterm_altid", "cvterm_relationship")
+
+    def of(frames: Seq[DataFrame]): CvStore = frames match {
+      case Seq(t, s, a, r) => CvStore(t, s, a, r)
+    }
+
+    def emptyLike(st: CvStore): CvStore = of(st.frames.map(_.limit(0)))
   }
 
   /** Stage parsed OBO into the same frame shapes as the live store. */
@@ -54,8 +63,10 @@ object OntologyMerge {
         explode(col("synonyms")).as("synonym")).dropDuplicates(),
       altId = t.select(col("id").as("accession"),
         explode(col("altIds")).as("alt_id")).dropDuplicates(),
+      // materialized once: the relationship count and the store write
+      // both read it, and each read would otherwise re-parse the file
       relationship = rels.toDF().select(col("subject"), col("predicate"),
-        col("obj").as("object")).dropDuplicates())
+        col("obj").as("object")).dropDuplicates().localCheckpoint())
   }
 
   case class MergeResult(store: CvStore, counts: Map[String, Long])
@@ -114,6 +125,38 @@ object OntologyMerge {
       live.relationship.join(stagedSubjects, Seq("subject"), "left_anti"))
 
     MergeResult(CvStore(cvterm, staging.synonym, staging.altId, relationship), counts)
+  }
+
+  /** obo2chado's store side: stage the parsed OBO (synonyms and alt_ids
+    * only with `metadata`, the adhocobo2chado switch), merge it against
+    * the parquet store at `storeDir` — a missing table is an empty one —
+    * and replace the four tables. Returns the merge counts; `dryRun`
+    * computes them and writes nothing.
+    *
+    * Live tables are read with the staging schema (no inference job).
+    * The merged store replaces each table, so each goes through
+    * [[graft.sinks.StoreMaintenance.overwriteViaSwap]]: written aside,
+    * swapped in after the write completes, so a crash never leaves a
+    * table missing and the relationship table can read itself without a
+    * pre-write checkpoint. The four writes run concurrently. */
+  def loadInto(spark: SparkSession, terms: Dataset[OboTerm],
+               rels: Dataset[OboRelationship], storeDir: String,
+               metadata: Boolean, dryRun: Boolean): Map[String, Long] = {
+    val staged = stage(spark, terms, rels)
+    val st =
+      if (metadata) staged
+      else staged.copy(synonym = staged.synonym.limit(0),
+        altId = staged.altId.limit(0))
+    val live = CvStore.of(CvStore.tables.zip(st.frames).map { case (t, s) =>
+      graft.sinks.ParquetUpsert.readLive(spark, s"$storeDir/$t", s.schema)
+        .getOrElse(s.limit(0))
+    })
+    val r = merge(st, live)
+    if (!dryRun)
+      graft.queries.Pipeline.inParallel(CvStore.tables.zip(r.store.frames)) {
+        case (t, df) => graft.sinks.StoreMaintenance.overwriteViaSwap(df, s"$storeDir/$t")
+      }
+    r.counts
   }
 
   /** Structural OBO validation — the reference ships an empty

@@ -4593,18 +4593,20 @@ object TextIndex {
   /** Per-(file, w) block stats derived from a column-pruned leaf read
     * of exactly `relFiles` — the appendMulti cost model (per-batch,
     * never per-store). Works on either layout (positional files carry
-    * the same (w, tf, dl) contract since the stats unification). */
+    * the same (w, tf, dl) contract since the stats unification). Groups
+    * on the raw file name and cuts it to the store-relative path once
+    * per (file, w) group, not once per posting row. */
   private def deriveBlockRows(spark: SparkSession, dir: String,
                               relFiles: Seq[String]): DataFrame =
     spark.read.parquet(relFiles.map(f => s"$dir/$f"): _*)
-      .select(
-        regexp_extract(input_file_name(),
-          "((?:[^/]+=[^/]*/)*[^/]+)$", 1).as("file"),
-        col("w"), col("tf"), col("dl"))
-      .groupBy(col("file"), col("w"))
+      .select(input_file_name().as("path"), col("w"), col("tf"), col("dl"))
+      .groupBy(col("path"), col("w"))
       .agg(count(lit(1)).as("cnt"), max(col("tf")).as("maxtf"),
         min(col("dl")).as("mindl"), max(col("dl")).as("maxdl"),
         sum(col("tf")).cast("long").as("sumtf"))
+      .select(regexp_extract(col("path"), "((?:[^/]+=[^/]*/)*[^/]+)$", 1)
+          .as("file"), col("w"), col("cnt"), col("maxtf"), col("mindl"),
+        col("maxdl"), col("sumtf"))
 
   /** Create (or exactly rebuild) the `_blockmax` sidecar over every
     * live data file. Opt-in, like [[buildVocab]]: once it exists,
