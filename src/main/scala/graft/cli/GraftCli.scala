@@ -871,6 +871,9 @@ object GraftCli {
         col("fmin"), col("fmax"), lit(null).cast("double").as("score"),
         col("strand"), col("phase"), lit(null).cast("string").as("source"),
         col("parent"))
+      // the write, the reference lengths and the printed count all read
+      // this one materialization instead of each re-running the joins
+      .localCheckpoint()
     val refs = frame.filter(col("ftype").isin("chromosome", "contig", "supercontig"))
       .select(col("uniquename"), (col("fmax") - col("fmin")).as("seqlen"))
     Gff3Export.writeDocument(refs, frame, out, singleFile)
@@ -1651,6 +1654,9 @@ object GraftCli {
       assoc = r("feature_cvterm"), terms = r("cvterm_go"), genes = r("gene"),
       evidenceSynonyms = r("evidence_synonym"), geneSynonyms = r("gene_synonym"),
       descriptions = r("gene_description"), skipIds = skip)
+      // written and counted from one materialization: the count would
+      // otherwise re-run the whole export join plan
+      .localCheckpoint()
     graft.export.GafExport.writeDocument(rows, "dictyBase",
       "http://dictybase.org", java.time.LocalDate.now(), out, singleFile)
     println(s"gaf written to $out (${rows.count()} annotation rows)")

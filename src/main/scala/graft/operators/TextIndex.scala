@@ -55,22 +55,6 @@ object TextIndex {
   private def doclenPath(dir: String) = s"$dir/_doclen"
   private def tombPath(dir: String) = s"$dir/_tombstones"
 
-  /** One row per document `(doc_id, toks, dl)` — the pre-explode stage
-    * every ingest derives from. When `obs` is given, the exact corpus
-    * metrics `(n, sdl)` are collected DURING whatever action consumes
-    * this frame (Spark's CollectMetrics node rides the map side of the
-    * first shuffle, which executes exactly once per ingest even though
-    * the range-partitioned write runs a sampling job first — shuffle
-    * map stages are reused, not re-run), so the stats row costs no
-    * second corpus pass. */
-  /** A/B kill-switches for the ingest's optional in-flight observes
-    * (default ON; set the env var or system property to "false").
-    * Both are ANSWER-preserving by construction: the df sketch only
-    * orders plans (a null sketch row degrades fold order, never a
-    * row), and the bitset observe falls back to reading the written
-    * files' `w` column (same bits, one extra column-pruned read).
-    * They exist to price each observe's ingest cost in isolation
-    * (SCALE.md's per-feature attribution) — not a tuning surface. */
   /** Wall-clock per ingest phase, accumulated across calls — the
     * attribution ledger behind SCALE.md's per-feature ingest cost
     * table ([[graft.tools.IngestProfile]] clears, runs, reads). Two
@@ -97,34 +81,26 @@ object TextIndex {
     !sys.env.get(name).orElse(Option(java.lang.System.getProperty(name)))
       .exists(_.equalsIgnoreCase("false"))
 
-  /** [[graft.tools.ServeProfile]]'s A/B attribution hook for the
-    * [[phraseSearchBatch]] covered-slots gate. UNLIKE the ingest
-    * flags this is NOT env-var/sysprop reachable: the row-count arm
-    * can false-match on stores carrying duplicate (doc_id, w) rows,
-    * so a stray environment variable must never be able to change a
-    * production serve's answers — only in-process profiler code
-    * (package-private) can flip it, and only around its own A/B. */
-  @volatile private[graft] var serveRowCountGate: Boolean = false
-  private def dfSketchEnabled: Boolean =
-    ingestFlag("GRAFT_INGEST_DFSKETCH")
-  private def bitsObserveEnabled: Boolean =
-    ingestFlag("GRAFT_INGEST_BITSOBSERVE")
-
+  /** One row per document `(doc_id, toks, dl)` — the pre-explode stage
+    * every ingest derives from. When `obs` is given, the exact corpus
+    * metrics `(n, sdl)` are collected DURING whatever action consumes
+    * this frame (Spark's CollectMetrics node rides the map side of the
+    * first shuffle, which executes exactly once per ingest even though
+    * the range-partitioned write runs a sampling job first — shuffle
+    * map stages are reused, not re-run), so the stats row costs no
+    * second corpus pass. */
   private def tokenized(docs: DataFrame, idCol: String, textCol: String,
                         obs: Option[Observation]): DataFrame = {
     val pre = docs.select(col(idCol).as("doc_id"),
         split(col(textCol), TOK).as("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
     obs.fold(pre)(o =>
-      if (!dfSketchEnabled)
-        pre.observe(o, count(lit(1)).as("n"), sum(col("dl")).as("sdl"))
-      else
-        pre.observe(o, count(lit(1)).as("n"), sum(col("dl")).as("sdl"),
-          // per-term df: each doc bumps the counters of its DISTINCT
-          // terms once — additive count-min, map-side exactly-once
-          graft.functions.Bitset.counter_sum(DfSketchW * DfSketchD)(
-            flatten(transform(array_distinct(col("toks")),
-              w => dfSketchProbes(w)))).as("df_sketch")))
+      pre.observe(o, count(lit(1)).as("n"), sum(col("dl")).as("sdl"),
+        // per-term df: each doc bumps the counters of its DISTINCT
+        // terms once — additive count-min, map-side exactly-once
+        graft.functions.Bitset.counter_sum(DfSketchW * DfSketchD)(
+          flatten(transform(array_distinct(col("toks")),
+            w => dfSketchProbes(w)))).as("df_sketch")))
   }
 
   private def postingsFrom(pre: DataFrame, nBuckets: Int): DataFrame =
@@ -724,10 +700,7 @@ object TextIndex {
     * metrics node (which implies an empty or degenerate write). */
   private def observedBits(obs: Observation,
                            fallback: () => Array[Long]): Array[Long] =
-    // kill-switch OFF means the observation was never attached —
-    // obs.get would block forever, so go straight to the files read
-    if (!bitsObserveEnabled) fallback()
-    else obs.get.get("tf_bits") match {
+    obs.get.get("tf_bits") match {
       case Some(s: Seq[_]) => s.asInstanceOf[Seq[Long]].toArray
       case Some(a: Array[Long]) => a
       case _ => fallback()
@@ -735,8 +708,7 @@ object TextIndex {
 
   private def withBitsObserve(post: DataFrame,
                               obs: Observation): DataFrame =
-    if (!bitsObserveEnabled) post
-    else post.observe(obs, graft.functions.Bitset
+    post.observe(obs, graft.functions.Bitset
       .bitset_or(TermFilterBits / 64)(termProbes).as("tf_bits"))
 
   /** The files the just-finished append landed, as a pruned frame —
@@ -1561,45 +1533,8 @@ object TextIndex {
     * tombstone discipline, same round-to-6/DECIMAL accumulation as
     * [[topK]], so the oracle reproduces scores bit-for-bit. */
   def lmTopK(spark: SparkSession, storeDir: String, terms: Seq[String],
-             k: Int, mu: Double = 2000.0): DataFrame = {
-    require(terms.nonEmpty, "need at least one query term")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    // positional stores carry the same (w, tf, dl) contract since the
-    // stats unification ([[tokenizedPositional]]) — either layout
-    // serves LM ranking; the unused pos column is pruned at the scan
-    import spark.implicits._
-    val (_, sdl, nb) = readStats(spark, storeDir)
-    val live = readTermFilter(spark, storeDir)
-      .fold(terms)(bits => presentTerms(spark, terms, bits))
-    if (live.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
-        .withColumn("n_terms", lit(0L)).withColumn("score", lit(0.0))
-    val buckets = bucketsOf(live, nb)
-    val tf = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
-        .filter(col("tb").isin(buckets: _*))
-        .filter(col("w").isin(live: _*)))
-    // exact collection term frequency from the read postings
-    val ctfT = tf.groupBy(col("w")).agg(sum(col("tf")).as("ctf"))
-    // round each log term to 6 decimals (never the tiny collection
-    // probability itself — a rare term's ctf/|C| would round to zero
-    // and blow the division); the sum of two 6-dec values is exact in
-    // DECIMAL, so the oracle reproduces every score bit-for-bit
-    tf.join(broadcast(ctfT), Seq("w"))
-      .withColumn("tfc", round(
-        log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-          (lit(mu) * col("ctf").cast("double"))), 6)
-        .cast("decimal(28,6)"))
-      .withColumn("bg", round(
-        log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-        .cast("decimal(28,6)"))
-      .withColumn("c", col("tfc") + col("bg"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("c")).cast("double").as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-  }
+             k: Int, mu: Double = 2000.0): DataFrame =
+    rank(spark, storeDir, terms, k, Lm(mu))
 
   /** BATCHED Dirichlet LM ranking — [[lmTopK]] for a whole query
     * FRAME `(idCol, termsCol: array<string>)`, served in ONE job with
@@ -1614,60 +1549,8 @@ object TextIndex {
     * Returns (query_id, doc_id, n_terms, score). */
   def lmTopKBatch(spark: SparkSession, storeDir: String,
                   queries: DataFrame, idCol: String, termsCol: String,
-                  k: Int, mu: Double = 2000.0): DataFrame = {
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    import spark.implicits._
-    val (_, sdl, nb) = readStats(spark, storeDir)
-    val exploded = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        explode(array_distinct(col(termsCol))).as("w"))
-      .filter(col("w").isNotNull)
-    // per-PAIR Bloom drop (not per-query): an absent term contributes
-    // no posting and no score in the single API either — LM sums over
-    // the query terms the doc carries
-    val livePairs = markBloomDead(spark, storeDir, exploded)
-      .filter(!col("_dead")).drop("_dead")
-    val (qt, buckets) = checkpointWithBuckets(
-      livePairs
-      .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int"))
-      .repartition(spark.sessionState.conf.numShufflePartitions))
-    if (buckets.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
-    val wanted = qt.select(col("w")).distinct()
-    val tf = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
-        .filter(col("tb").isin(buckets: _*))
-        .drop("tb")
-        .join(wanted, Seq("w")))
-    // exact collection term frequency from the read postings (a term's
-    // postings live entirely inside its bucket) — shared by every query
-    val ctfT = tf.groupBy(col("w")).agg(sum(col("tf")).as("ctf"))
-    val contrib = tf.join(broadcast(ctfT), Seq("w"))
-      .withColumn("tfc", round(
-        log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-          (lit(mu) * col("ctf").cast("double"))), 6)
-        .cast("decimal(28,6)"))
-      .withColumn("bg", round(
-        log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-        .cast("decimal(28,6)"))
-      .withColumn("c", col("tfc") + col("bg"))
-      .select(col("w"), col("doc_id"), col("c"))
-    val scored = contrib
-      .join(qt.select(col("query_id"), col("w")), Seq("w"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("c")).cast("double").as("score"))
-    scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-        col("score"), col("n_terms")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("hit"))
-      .select(col("query_id"), col("hit._1").as("doc_id"),
-        col("hit._3").as("n_terms"), col("hit._2").as("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
+                  k: Int, mu: Double = 2000.0): DataFrame =
+    rankBatch(spark, storeDir, queries, idCol, termsCol, k, Lm(mu))
 
   /** SPAN-NOT search — occurrences of `a` NOT within `slop` positions
     * of any `b` (the Lucene SpanNot shape, [[nearSearch]]'s exclusion
@@ -2092,17 +1975,10 @@ object TextIndex {
       spark.read.parquet(storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(live: _*)))
-    val dfT = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
-    // [[topK]]'s scoring expressions, verbatim
-    val scores = tf.join(broadcast(dfT), Seq("w"))
-      .withColumn("idf", round(
-        log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)), 6))
-      .withColumn("c", round(
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-        6).cast("decimal(28,6)"))
+    // [[topK]]'s statistic and scoring expressions
+    val sc = Bm25(k1, b)
+    val dfT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
+    val scores = sc.score(broadcast(dfT), n, sdl)(tf)
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).cast("double").as("score"))
     val wr = org.apache.spark.sql.expressions.Window
@@ -2263,15 +2139,6 @@ object TextIndex {
     m.drop("_dead").join(dead, Seq("query_id"), "left_anti")
   }
 
-  /** Tag each slot row with `_dead` = its term is PROVABLY absent from
-    * the store (Bloom semantics over the OR'd term bitset, engine-
-    * evaluated with the writer's own hash expressions; all-false on a
-    * store predating the filter — cannot prove absence). The per-slot
-    * form exists because absence semantics are ROLE-dependent:
-    * conjunctive serves drop the whole query ([[dropBloomDeadQueries]])
-    * while SpanNot's exclusion term drops only its own slot — an
-    * absent `b` makes every `a` occurrence clear, not the query dead
-    * ([[notNearSearchBatch]]). */
   /** Materialize a batched serve's slot frame (localCheckpoint) and
     * return it with its distinct probed buckets — collected DURING
     * the checkpoint's own job via an Observation (`collect_set(tb)`)
@@ -2333,19 +2200,35 @@ object TextIndex {
     (cp, buckets.distinct.sorted)
   }
 
+  /** Whether a row's `w` may be in the store whose OR'd term bitset
+    * rides the row as the `_tfb` literal: every one of the writer's
+    * [[termProbes]] bits is set (Bloom semantics — a false positive
+    * only reads a bucket for nothing, never moves a score). */
+  private def bloomMayContain: org.apache.spark.sql.Column = expr(
+    s"""forall(array(${(0 until TermFilterK)
+      // int literal $i matches termProbes' lit(i) — xxhash64 hashes
+      // depend on the argument TYPE, not just the value
+      .map(i => s"pmod(xxhash64(w, $i), ${TermFilterBits}L)")
+      .mkString(", ")}),
+       |  p -> (element_at(_tfb, cast(p / 64 AS int) + 1)
+       |        & shiftleft(1L, cast(p % 64 AS int))) != 0L)""".stripMargin)
+
+  /** Tag each slot row with `_dead` = its term is PROVABLY absent from
+    * the store (Bloom semantics over the OR'd term bitset, engine-
+    * evaluated with the writer's own hash expressions; all-false on a
+    * store predating the filter — cannot prove absence). The per-slot
+    * form exists because absence semantics are ROLE-dependent:
+    * conjunctive serves drop the whole query ([[dropBloomDeadQueries]])
+    * while SpanNot's exclusion term drops only its own slot — an
+    * absent `b` makes every `a` occurrence clear, not the query dead
+    * ([[notNearSearchBatch]]). */
   private def markBloomDead(spark: SparkSession, storeDir: String,
                             slots: DataFrame): DataFrame =
     readTermFilter(spark, storeDir) match {
       case None => slots.withColumn("_dead", lit(false))
       case Some(bits) =>
         slots.withColumn("_tfb", typedLit(bits.toSeq))
-          .withColumn("_dead", !expr(
-            s"""forall(array(${(0 until TermFilterK)
-              .map(i => s"pmod(xxhash64(w, $i), ${TermFilterBits}L)")
-              .mkString(", ")}),
-               |  p -> (element_at(_tfb, cast(p / 64 AS int) + 1)
-               |        & shiftleft(1L, cast(p % 64 AS int))) != 0L)"""
-              .stripMargin))
+          .withColumn("_dead", !bloomMayContain)
           .drop("_tfb")
     }
 
@@ -2392,15 +2275,8 @@ object TextIndex {
       // and row counting would let a doc covering only a SUBSET of
       // the slots pass the gate (the intersect over the present
       // arrays could then false-match) — the containingAllBatch
-      // set-semantics rule, applied to the slot index. The row-count
-      // arm exists ONLY so ServeProfile can price the distinct gate
-      // (answer-identical on churn-free stores, where no duplicate
-      // (doc_id, w) rows can exist) — reachable ONLY through the
-      // package-private [[serveRowCountGate]] the profiler sets
-      // in-process: an A/B attribution switch, not a tuning surface.
-      .agg(
-        (if (!serveRowCountGate)
-          countDistinct(col("i")) else count(lit(1))).as("nslots"),
+      // set-semantics rule, applied to the slot index
+      .agg(countDistinct(col("i")).as("nslots"),
         collect_list(col("shifted")).as("arrs"))
       .filter(col("nslots") === col("plen"))
       .withColumn("acc", expr(
@@ -2440,32 +2316,22 @@ object TextIndex {
     * out-of-domain queries probes nothing. */
   def topKBatch(spark: SparkSession, storeDir: String, queries: DataFrame,
                 idCol: String, termsCol: String, k: Int,
-                k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // either store layout serves BM25 since the stats unification —
-    // positional postings carry the bag contract's exact (w, tf, dl)
-    // ([[tokenizedPositional]]); the pos column is pruned at the scan
-    import spark.implicits._
+                k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    rankBatch(spark, storeDir, queries, idCol, termsCol, k, Bm25(k1, b))
+
+  /** [[topKBatch]] / [[lmTopKBatch]]: one store, a query frame. */
+  private def rankBatch(spark: SparkSession, storeDir: String,
+                        queries: DataFrame, idCol: String,
+                        termsCol: String, k: Int, sc: Scorer): DataFrame = {
     val (n, sdl, nb) = readStats(spark, storeDir)
     val exploded = queries
       .select(col(idCol).cast("long").as("query_id"),
         explode(array_distinct(col(termsCol))).as("w"))
       .filter(col("w").isNotNull)
-    // drop provably-absent terms engine-side: the store's OR'd bitset
-    // is ONE literal array column, probed with the writer's own hash
-    // expressions — Bloom semantics, a false positive only reads a
-    // bucket for nothing, never moves a score
-    val livePairs = readTermFilter(spark, storeDir).fold(exploded) { bits =>
-      exploded.withColumn("_tfb", typedLit(bits.toSeq))
-        .filter(expr(
-          s"""forall(array(${(0 until TermFilterK)
-            // int literal $i matches termProbes' lit(i) — xxhash64
-            // hashes depend on the argument TYPE, not just the value
-            .map(i => s"pmod(xxhash64(w, $i), ${TermFilterBits}L)")
-            .mkString(", ")}),
-             |  p -> (element_at(_tfb, cast(p / 64 AS int) + 1)
-             |        & shiftleft(1L, cast(p % 64 AS int))) != 0L)""".stripMargin))
-        .drop("_tfb")
-    }
+    // drop provably-absent (query, term) pairs engine-side: an absent
+    // term contributes no posting and no score in the single serve
+    // either
+    val livePairs = dropAbsentTermRows(spark, storeDir, exploded)
     // union of probed buckets: ≤ nBuckets ints, driver-held by design
     // — collected during the checkpoint job itself
     val (qt, buckets) = checkpointWithBuckets(livePairs
@@ -2481,18 +2347,10 @@ object TextIndex {
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(wanted, Seq("w")))
-    // a term's postings live entirely inside its bucket, so df over
-    // the READ postings is the exact corpus df — shared by every query
-    val dfT = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
-    val contrib = tf.join(broadcast(dfT), Seq("w"))
-      .withColumn("idf", round(
-        log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)), 6))
-      .withColumn("c", round(
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-        6).cast("decimal(28,6)"))
+    // the exact corpus statistic from the read postings — shared by
+    // every query carrying the term
+    val statT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
+    val contrib = sc.score(broadcast(statT), n, sdl)(tf)
       .select(col("w"), col("doc_id"), col("c"))
     val scored = contrib
       .join(qt.select(col("query_id"), col("w")), Seq("w"))
@@ -2532,6 +2390,98 @@ object TextIndex {
       spark, storeDir, "tb", maxFilesPerBucket, filesPerBucket,
       extraSortCols = Seq("doc_id"))
 
+  // ------------------------------------------------------------------
+  // ONE RANKING CORE. BM25 and Dirichlet LM share every plan — term
+  // filter, bucket prune, tombstone anti-join, scatter-gather, block-max
+  // caps/floors/θ/survivors — and differ in three things, which a
+  // [[Scorer]] supplies: the per-term global statistic, the per-posting
+  // contribution `c`, and whether the cap algebra is sound for the
+  // parameters. Each cell of single/batch × pruned/unpruned ×
+  // local/sharded is one private `rank*` core taking a Scorer; the
+  // public verbs are one-line calls into them.
+
+  private sealed trait Scorer {
+    /** The per-term global statistic's column: `df` or `ctf`. */
+    def stat: String
+    /** Its aggregate over a term's read postings. */
+    def statAgg: org.apache.spark.sql.Column
+    /** The `_blockmax` column whose sum over a term's files is `stat`. */
+    def sidecarCol: String
+    def sidecarStat(r: BlockRow): Long
+    /** The tombstoned postings' share of `stat`, from
+      * [[tombstoneTermAdjust]]'s (df, ctf) pair. */
+    def tombstoneStat(t: (Long, Long)): Long
+    /** The statistic a single pruned serve scores with, given the
+      * sidecar sum net of tombstones. */
+    def prunedStat(v: Long): Long = v
+    /** Whether caps at (maxtf, mindl) bound every posting of a file;
+      * pruned serves delegate to the unpruned ones when not. */
+    def monotone: Boolean
+    /** The public verb name of a matrix cell (`lastServeRoute`). */
+    def route(cell: String): String
+    /** Adds the DECIMAL(28,6) contribution `c` to postings
+      * `(w, tf, dl, stat)` of a corpus of `n` docs and `sdl` tokens. */
+    def contribution(post: DataFrame, n: Long, sdl: Long): DataFrame
+    /** `post` joined to the per-term statistic frame and scored. */
+    def score(stats: DataFrame, n: Long, sdl: Long)(
+        post: DataFrame): DataFrame =
+      contribution(post.join(stats, Seq("w")), n, sdl)
+  }
+
+  /** Okapi BM25 — [[Curation.bm25TopK]]'s math verbatim. */
+  private final case class Bm25(k1: Double, b: Double) extends Scorer {
+    def stat = "df"
+    def statAgg = count(lit(1))
+    def sidecarCol = "cnt"
+    def sidecarStat(r: BlockRow) = r.cnt
+    def tombstoneStat(t: (Long, Long)) = t._1
+    def monotone = k1 > 0 && b >= 0 && b <= 1
+    def route(cell: String) = cell
+    def contribution(post: DataFrame, n: Long, sdl: Long): DataFrame = {
+      val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
+      post.withColumn("idf", round(
+          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
+          6))
+        .withColumn("c", round(
+          col("idf") * (col("tf") * (k1 + 1)) /
+            (col("tf") + lit(k1) *
+              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
+          6).cast("decimal(28,6)"))
+    }
+  }
+
+  /** Dirichlet query likelihood ([[lmTopK]]). Always monotone: the
+    * contribution rises with tf and falls with dl. */
+  private final case class Lm(mu: Double) extends Scorer {
+    require(mu > 0, "the Dirichlet pseudo-count must be positive")
+    def stat = "ctf"
+    def statAgg = sum(col("tf"))
+    def sidecarCol = "sumtf"
+    def sidecarStat(r: BlockRow) = r.sumtf
+    def tombstoneStat(t: (Long, Long)) = t._2
+    // clamp to 1 for a term whose EVERY posting is tombstoned: no live
+    // row ever scores with it (the anti-join removes them all), but
+    // the cap tree still evaluates at (maxtf, mindl) and ctf = 0 would
+    // divide by zero there — a smaller ctf only RAISES the cap, so the
+    // clamp stays an upper bound for the (empty) live posting set
+    override def prunedStat(v: Long) = math.max(1L, v)
+    def monotone = true
+    def route(cell: String) = "lm" + cell.capitalize
+    // round each log term to 6 decimals (never the tiny collection
+    // probability itself — a rare term's ctf/|C| would round to zero
+    // and blow the division); the sum of two 6-dec values is exact in
+    // DECIMAL, so the oracle reproduces every score bit-for-bit
+    def contribution(post: DataFrame, n: Long, sdl: Long): DataFrame =
+      post.withColumn("tfc", round(
+          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
+            (lit(mu) * col("ctf").cast("double"))), 6)
+          .cast("decimal(28,6)"))
+        .withColumn("bg", round(
+          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
+          .cast("decimal(28,6)"))
+        .withColumn("c", col("tfc") + col("bg"))
+  }
+
   /** Store-served BM25 top-k for a driver-held term set — bit-stable
     * with `Curation.bm25TopK(corpus, …)` over the store's documents.
     * Reads only the query terms' buckets (partition pruning; the
@@ -2544,15 +2494,19 @@ object TextIndex {
     * SAME round/divide expressions the scan path evaluates — constant
     * folding runs the identical Catalyst math once at plan time. */
   def topK(spark: SparkSession, storeDir: String, terms: Seq[String],
-           k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+           k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    rank(spark, storeDir, terms, k, Bm25(k1, b))
+
+  /** [[topK]] / [[lmTopK]]: one store, one driver-held term set. */
+  private def rank(spark: SparkSession, storeDir: String,
+                   terms: Seq[String], k: Int, sc: Scorer): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
-    // either store layout serves BM25 since the stats unification —
+    // either store layout serves ranking since the stats unification —
     // positional postings carry the bag contract's exact (w, tf, dl)
     // ([[tokenizedPositional]]); the pos column is pruned at the scan
-    import spark.implicits._
     val (n, sdl, nb) = readStats(spark, storeDir)
     // the term-presence filter drops provably-absent terms BEFORE any
-    // bucket opens: a df=0 term contributes no posting and no score,
+    // bucket opens: an absent term contributes no posting and no score,
     // so dropping it is free correctness-wise and saves its bucket's
     // whole read. All terms absent → the exact empty answer, zero
     // data files opened.
@@ -2562,24 +2516,16 @@ object TextIndex {
       return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_terms", lit(0L)).withColumn("score", lit(0.0))
     val buckets = bucketsOf(live, nb)
-    // tombstoned docs drop BEFORE df: every BM25 input (df, n, avgdl)
+    // tombstoned docs drop BEFORE the statistic: every scoring input
     // is exactly what a rebuild on the surviving corpus would produce
     val tf = minusTombstones(spark, storeDir,
       spark.read.parquet(storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(live: _*)))
-    // a term's postings live entirely inside its bucket, so df over the
-    // READ postings is the exact corpus df
-    val dfT = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
-    tf.join(broadcast(dfT), Seq("w"))
-      .withColumn("idf", round(
-        log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)), 6))
-      .withColumn("c", round(
-        col("idf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) *
-            (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-        6).cast("decimal(28,6)"))
+    // a term's postings live entirely inside its bucket, so the
+    // statistic over the READ postings is the exact corpus one
+    val statT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
+    sc.score(broadcast(statT), n, sdl)(tf)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_terms"),
         sum(col("c")).cast("double").as("score"))
@@ -2976,20 +2922,12 @@ object TextIndex {
   }
 
   /** Drop rows whose `w` is provably absent from `dir`'s term filter,
-    * ENGINE-side (the [[topKBatch]] bits expression, factored for the
-    * multi-store serves): Bloom semantics — a false positive only
-    * reads a bucket for nothing, never moves a score. */
+    * ENGINE-side ([[bloomMayContain]]). */
   private def dropAbsentTermRows(spark: SparkSession, dir: String,
                                  rows: DataFrame): DataFrame =
     readTermFilter(spark, dir).fold(rows) { bits =>
       rows.withColumn("_tfb", typedLit(bits.toSeq))
-        .filter(expr(
-          s"""forall(array(${(0 until TermFilterK)
-            .map(i => s"pmod(xxhash64(w, $i), ${TermFilterBits}L)")
-            .mkString(", ")}),
-             |  p -> (element_at(_tfb, cast(p / 64 AS int) + 1)
-             |        & shiftleft(1L, cast(p % 64 AS int))) != 0L)""".stripMargin))
-        .drop("_tfb")
+        .filter(bloomMayContain).drop("_tfb")
     }
 
   /** Per-store probed buckets for a multi-store batched serve, in ONE
@@ -3422,10 +3360,15 @@ object TextIndex {
     * in one store. */
   def topKSharded(spark: SparkSession, shardDirs: Seq[String],
                   terms: Seq[String], k: Int, k1: Double = 1.2,
-                  b: Double = 0.75): DataFrame = {
+                  b: Double = 0.75): DataFrame =
+    rankSharded(spark, shardDirs, terms, k, Bm25(k1, b))
+
+  /** [[topKSharded]] / [[lmTopKSharded]]: a shard fleet, one term set. */
+  private def rankSharded(spark: SparkSession, shardDirs: Seq[String],
+                          terms: Seq[String], k: Int,
+                          sc: Scorer): DataFrame = {
     require(shardDirs.nonEmpty, "need at least one shard")
     require(terms.nonEmpty, "need at least one query term")
-    import spark.implicits._
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
@@ -3443,23 +3386,14 @@ object TextIndex {
       }
     }
     if (reads.isEmpty) return emptyTopK(spark, shardDirs.head)
-    // global df: per-shard terms-sized counts, one union, one sum —
-    // the only cross-shard exchange, and it is terms-sized
-    val dfT = reads.map(_.groupBy(col("w")).agg(count(lit(1)).as("df")))
+    // global statistic: per-shard terms-sized partials, one union, one
+    // sum — the only cross-shard exchange, and it is terms-sized
+    val statT = reads.map(_.groupBy(col("w")).agg(sc.statAgg.as(sc.stat)))
       .reduce(_.unionByName(_))
-      .groupBy(col("w")).agg(sum(col("df")).as("df"))
-    val bdf = broadcast(dfT)
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
+      .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))
+    val scoreOf = sc.score(broadcast(statT), n, sdl) _
     val perShard = reads.map { tf =>
-      tf.join(bdf, Seq("w"))
-        .withColumn("idf", round(
-          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
-          6))
-        .withColumn("c", round(
-          col("idf") * (col("tf") * (k1 + 1)) /
-            (col("tf") + lit(k1) *
-              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-          6).cast("decimal(28,6)"))
+      scoreOf(tf)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_terms"),
           sum(col("c")).cast("double").as("score"))
@@ -3493,23 +3427,26 @@ object TextIndex {
     * [[buildBlockStats]] to restore the pruned path. */
   def topKShardedPruned(spark: SparkSession, shardDirs: Seq[String],
                         terms: Seq[String], k: Int, k1: Double = 1.2,
-                        b: Double = 0.75): DataFrame = {
+                        b: Double = 0.75): DataFrame =
+    rankShardedPruned(spark, shardDirs, terms, k, Bm25(k1, b))
+
+  /** [[topKShardedPruned]] / [[lmTopKShardedPruned]]. */
+  private def rankShardedPruned(spark: SparkSession, shardDirs: Seq[String],
+                                terms: Seq[String], k: Int,
+                                sc: Scorer): DataFrame = {
     require(shardDirs.nonEmpty, "need at least one shard")
     require(terms.nonEmpty, "need at least one query term")
     require(k >= 1, "need at least one result slot")
     import spark.implicits._
     lastPruneStats = None
-    // out-of-monotone-range params delegate — see [[topKPruned]]
-    if (!(k1 > 0 && b >= 0 && b <= 1)) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKSharded(spark, shardDirs, terms, k, k1, b)
-    }
-    if (shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
+    // out-of-monotone-range params delegate — see [[rankPruned]]
+    if (!sc.monotone ||
+        shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
         shardDirs.exists(d =>
           !graft.sinks.HadoopSwap.exists(spark, blockmaxPath(d))) ||
         shardDirs.exists(d => !tryEnsureBlockCoverage(spark, d))) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKSharded(spark, shardDirs, terms, k, k1, b)
+      return rankSharded(spark, shardDirs, terms, k, sc)
     }
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
@@ -3524,41 +3461,46 @@ object TextIndex {
     }
     if (shardRows.forall(_._3.isEmpty))
       return emptyTopK(spark, shardDirs.head)
-    // GLOBAL df from the sidecars alone — the scatter's whole df pass
-    // costs zero data files
-    val dfMap: Map[String, Long] = shardRows.flatMap(_._3)
-      .groupBy(_.w).map { case (w, rs) => w -> rs.map(_.cnt).sum }
-    val dfFrame = broadcast(dfMap.toSeq.toDF("w", "df"))
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(dfFrame, Seq("w"))
-        .withColumn("idf", round(
-          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
-          6))
-        .withColumn("c", round(
-          col("idf") * (col("tf") * (k1 + 1)) /
-            (col("tf") + lit(k1) *
-              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-          6).cast("decimal(28,6)"))
+    // GLOBAL statistic from the sidecars alone — the scatter's whole
+    // statistic pass costs zero data files
+    val statMap: Map[String, Long] = shardRows.flatMap(_._3)
+      .groupBy(_.w).map { case (w, rs) => w -> rs.map(sc.sidecarStat).sum }
+    val scoreOf = sc.score(broadcast(statMap.toSeq.toDF("w", sc.stat)),
+      n, sdl) _
+    def micros(d: java.math.BigDecimal): Long =
+      d.movePointRight(6).longValueExact()
+    // GLOBAL floors + every shard's caps in ONE collected frame, tagged
+    // by shard index: floor rows ride with _shard = -1 and a null file
+    // key (scoreOf is per-row arithmetic over the broadcast statistic,
+    // so the union changes no value; S+1 fixed-cost jobs -> 1). A
+    // scorer with negative contributions (the LM length norm) makes
+    // unseen contributions negative, so the shared θ carries
+    // Σ min(0, floor(w)) evaluated at the per-term max maxdl across
+    // EVERY shard's sidecar — more negative than any shard-local floor,
+    // hence safe for each. BM25's contributions are non-negative: its
+    // floors clamp to zero and θ is the bare k-th partial.
+    val capFloorAll =
+      scoreOf((shardRows.zipWithIndex.flatMap { case ((_, _, bs), i) =>
+          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl))
+        } ++ shardRows.flatMap(_._3).groupBy(_.w)
+          .map { case (w, rs) =>
+            (-1, (null: String), w, 1L, rs.map(_.maxdl).max) }.toSeq)
+        .toDF("_shard", "file", "w", "tf", "dl"))
+        .select(col("_shard"), col("file"), col("w"), col("c"))
+        .collect()
+    val negAdjust = capFloorAll.filter(_.getInt(0) == -1)
+      .map(r => math.min(0L, micros(r.getDecimal(3)))).sum
+    val capsByShard: Map[Int, Seq[(String, String, Long)]] =
+      capFloorAll.filter(_.getInt(0) >= 0)
+        .groupBy(_.getInt(0)).map { case (i, rs) =>
+          i -> rs.map(r => (r.getString(1), r.getString(2),
+            micros(r.getDecimal(3)))).toSeq }
     // GLOBAL θ probe: every shard's per-term best-cap file, ONE union
     // read, the k-th partial across ALL shards. Valid for every shard
     // (the k-th of a superset dominates the global s_k's lower bound),
     // and strictly stronger than shard-local probes — a shard holding
     // only low-cap bands prunes against the DENSE shards' θ instead
-    // of its own weak one. BM25 contributions are non-negative, so no
-    // floor adjustment is owed here.
-    // every shard's caps in ONE collected frame, tagged by shard
-    // index — scoreOf is per-row arithmetic over the broadcast df
-    // frame, so the union changes no value; S fixed-cost jobs -> 1
-    val capsByShard: Map[Int, Seq[(String, String, Long)]] =
-      scoreOf(shardRows.zipWithIndex.flatMap { case ((_, _, bs), i) =>
-          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl))
-        }.toDF("_shard", "file", "w", "tf", "dl"))
-        .select(col("_shard"), col("file"), col("w"), col("c"))
-        .collect()
-        .groupBy(_.getInt(0)).map { case (i, rs) =>
-          i -> rs.map(r => (r.getString(1), r.getString(2),
-            r.getDecimal(3).movePointRight(6).longValueExact())).toSeq }
+    // of its own weak one.
     val probeByShard = shardRows.zipWithIndex.collect {
       case ((dir, live, bs), i) if bs.nonEmpty =>
         val caps = capsByShard.getOrElse(i, Seq.empty)
@@ -3577,8 +3519,7 @@ object TextIndex {
       .select(col("s")).collect()
     val thetaGlobal: Option[Long] =
       if (probePartials.length < k) None
-      else Some(probePartials.last.getDecimal(0)
-        .movePointRight(6).longValueExact())
+      else Some(micros(probePartials.last.getDecimal(0)) + negAdjust)
     // per-shard pruned serves under the shared θ; the instrumentation
     // ledger sums the shards' file counts so the caller sees the
     // whole scatter's prune
@@ -3605,51 +3546,8 @@ object TextIndex {
     * exchange is the terms-sized ctf union; gathers are k-bounded. */
   def lmTopKSharded(spark: SparkSession, shardDirs: Seq[String],
                     terms: Seq[String], k: Int,
-                    mu: Double = 2000.0): DataFrame = {
-    require(shardDirs.nonEmpty, "need at least one shard")
-    require(terms.nonEmpty, "need at least one query term")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    import spark.implicits._
-    val stats = shardDirs.map(d => readStats(spark, d))
-    val sdl = stats.map(_._2).sum
-    val reads = shardDirs.zip(stats).flatMap { case (dir, (_, _, nb)) =>
-      val live = readTermFilter(spark, dir)
-        .fold(terms)(bits => presentTerms(spark, terms, bits))
-      if (live.isEmpty) None
-      else {
-        val buckets = bucketsOf(live, nb)
-        Some(minusTombstones(spark, dir,
-          spark.read.parquet(dir)
-            .filter(col("tb").isin(buckets: _*))
-            .filter(col("w").isin(live: _*))
-            .select(col("doc_id"), col("w"), col("tf"), col("dl"))))
-      }
-    }
-    if (reads.isEmpty) return emptyTopK(spark, shardDirs.head)
-    // global ctf: per-shard terms-sized sums, one union, one sum
-    val ctfT = reads.map(_.groupBy(col("w")).agg(sum(col("tf")).as("ctf")))
-      .reduce(_.unionByName(_))
-      .groupBy(col("w")).agg(sum(col("ctf")).as("ctf"))
-    val bctf = broadcast(ctfT)
-    val perShard = reads.map { tf =>
-      tf.join(bctf, Seq("w"))
-        .withColumn("tfc", round(
-          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-            (lit(mu) * col("ctf").cast("double"))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("bg", round(
-          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("c", col("tfc") + col("bg"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_terms"),
-          sum(col("c")).cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(k)
-    }
-    perShard.reduce(_.unionByName(_))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-  }
+                    mu: Double = 2000.0): DataFrame =
+    rankSharded(spark, shardDirs, terms, k, Lm(mu))
 
   /** [[lmTopKSharded]] with per-shard BLOCK-MAX pruning — the
     * [[topKShardedPruned]] composition for the LM ranker: global ctf
@@ -3662,106 +3560,8 @@ object TextIndex {
     * whole scatter to [[lmTopKSharded]] (exact, unpruned). */
   def lmTopKShardedPruned(spark: SparkSession, shardDirs: Seq[String],
                           terms: Seq[String], k: Int,
-                          mu: Double = 2000.0): DataFrame = {
-    require(shardDirs.nonEmpty, "need at least one shard")
-    require(terms.nonEmpty, "need at least one query term")
-    require(k >= 1, "need at least one result slot")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    import spark.implicits._
-    lastPruneStats = None
-    if (shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
-        shardDirs.exists(d =>
-          !graft.sinks.HadoopSwap.exists(spark, blockmaxPath(d))) ||
-        shardDirs.exists(d => !tryEnsureBlockCoverage(spark, d))) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return lmTopKSharded(spark, shardDirs, terms, k, mu)
-    }
-    val stats = shardDirs.map(d => readStats(spark, d))
-    val sdl = stats.map(_._2).sum
-    val shardRows = shardDirs.map { dir =>
-      val live = readTermFilter(spark, dir)
-        .fold(terms)(bits => presentTerms(spark, terms, bits))
-      val bs = if (live.isEmpty) Seq.empty[BlockRow]
-        else readBlockRows(spark, dir, live)
-      (dir, live, bs)
-    }
-    if (shardRows.forall(_._3.isEmpty))
-      return emptyTopK(spark, shardDirs.head)
-    // global ctf from the sidecars alone — zero data files
-    val ctfMap: Map[String, Long] = shardRows.flatMap(_._3)
-      .groupBy(_.w).map { case (w, rs) => w -> rs.map(_.sumtf).sum }
-    val ctfFrame = broadcast(ctfMap.toSeq.toDF("w", "ctf"))
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(ctfFrame, Seq("w"))
-        .withColumn("tfc", round(
-          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-            (lit(mu) * col("ctf").cast("double"))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("bg", round(
-          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("c", col("tfc") + col("bg"))
-    def micros(d: java.math.BigDecimal): Long =
-      d.movePointRight(6).longValueExact()
-    // GLOBAL floors: the LM length norm makes unseen contributions
-    // negative, so the shared θ carries Σ min(0, floor(w)) evaluated
-    // at the per-term max maxdl across EVERY shard's sidecar — more
-    // negative than any shard-local floor, hence safe for each
-    // GLOBAL floors + every shard's caps in ONE collected frame:
-    // floor rows ride with _shard = -1 and a null file key (scoreOf
-    // is per-row arithmetic over the broadcast ctf frame, so the
-    // union changes no value; S+1 fixed-cost jobs -> 1)
-    val capFloorAll =
-      scoreOf((shardRows.zipWithIndex.flatMap { case ((_, _, bs), i) =>
-          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl))
-        } ++ shardRows.flatMap(_._3).groupBy(_.w)
-          .map { case (w, rs) =>
-            (-1, (null: String), w, 1L, rs.map(_.maxdl).max) }.toSeq)
-        .toDF("_shard", "file", "w", "tf", "dl"))
-        .select(col("_shard"), col("file"), col("w"), col("c"))
-        .collect()
-    val negAdjust = capFloorAll.filter(_.getInt(0) == -1)
-      .map(r => math.min(0L, micros(r.getDecimal(3)))).sum
-    val capsByShard: Map[Int, Seq[(String, String, Long)]] =
-      capFloorAll.filter(_.getInt(0) >= 0)
-        .groupBy(_.getInt(0)).map { case (i, rs) =>
-          i -> rs.map(r => (r.getString(1), r.getString(2),
-            micros(r.getDecimal(3)))).toSeq }
-    // cross-shard θ probe: every shard's per-term best-cap file
-    val probeByShard = shardRows.zipWithIndex.collect {
-      case ((dir, live, bs), i) if bs.nonEmpty =>
-        val caps = capsByShard.getOrElse(i, Seq.empty)
-        val files = caps.map(_._2).distinct.map { w =>
-          caps.filter(_._2 == w).maxBy(t => (t._3, t._1))._1
-        }.distinct.toSeq.sorted
-        (dir, live, files)
-    }
-    val probePartials = probeByShard.map { case (dir, live, files) =>
-      scoreOf(spark.read.option("basePath", dir)
-          .parquet(files.map(f => s"$dir/$f"): _*)
-          .filter(col("w").isin(live: _*)))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("s"))
-    }.reduce(_.unionByName(_))
-      .orderBy(col("s").desc, col("doc_id")).limit(k)
-      .select(col("s")).collect()
-    val thetaGlobal: Option[Long] =
-      if (probePartials.length < k) None
-      else Some(probePartials.last.getDecimal(0)
-        .movePointRight(6).longValueExact() + negAdjust)
-    var acc = PruneStats(0, 0, 0, thetaGlobal, delegated = false)
-    val perShard = shardRows.collect { case (dir, live, bs) if bs.nonEmpty =>
-      val served = prunedServe(spark, dir, live, k, bs, scoreOf,
-        sharedTheta = thetaGlobal)
-      lastPruneStats.foreach(s => acc = PruneStats(
-        acc.relevantFiles + s.relevantFiles,
-        acc.survivors + s.survivors,
-        acc.skipped + s.skipped, thetaGlobal, delegated = false))
-      served
-    }
-    lastPruneStats = Some(acc)
-    perShard.reduce(_.unionByName(_))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-  }
+                          mu: Double = 2000.0): DataFrame =
+    rankShardedPruned(spark, shardDirs, terms, k, Lm(mu))
 
   /** BATCHED scatter-gather BM25 — [[topKSharded]] for a whole
     * `(idCol, termsCol: array<string>)` query frame: per-query rows
@@ -3774,14 +3574,20 @@ object TextIndex {
   def topKShardedBatch(spark: SparkSession, shardDirs: Seq[String],
                        queries: DataFrame, idCol: String,
                        termsCol: String, k: Int, k1: Double = 1.2,
-                       b: Double = 0.75): DataFrame = {
+                       b: Double = 0.75): DataFrame =
+    rankShardedBatch(spark, shardDirs, queries, idCol, termsCol, k,
+      Bm25(k1, b))
+
+  /** [[topKShardedBatch]] / [[lmTopKShardedBatch]]. */
+  private def rankShardedBatch(spark: SparkSession, shardDirs: Seq[String],
+                               queries: DataFrame, idCol: String,
+                               termsCol: String, k: Int,
+                               sc: Scorer): DataFrame = {
     require(shardDirs.nonEmpty, "need at least one shard")
     require(k >= 1, "need at least one result slot")
-    import spark.implicits._
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
     val qt = queries
       .select(col(idCol).cast("long").as("query_id"),
         explode(array_distinct(col(termsCol))).as("w"))
@@ -3793,8 +3599,8 @@ object TextIndex {
     val shardBuckets = collectStoreBuckets(spark,
       shardDirs.zip(stats).map { case (dir, (_, _, nb)) => (dir, nb) },
       wanted)
-    val reads = shardDirs.zip(stats).zip(shardBuckets).flatMap {
-      case ((dir, (_, _, nb)), buckets) =>
+    val reads = shardDirs.zip(shardBuckets).flatMap {
+      case (dir, buckets) =>
       val wantedS = dropAbsentTermRows(spark, dir, wanted)
       if (buckets.isEmpty) None
       else Some(minusTombstones(spark, dir,
@@ -3808,20 +3614,12 @@ object TextIndex {
       return spark.range(0).select(col("id").as("query_id"),
         col("id").as("doc_id"), col("id").as("n_terms"),
         col("id").cast("double").as("score"))
-    val dfT = reads.map(_.groupBy(col("w")).agg(count(lit(1)).as("df")))
+    val statT = reads.map(_.groupBy(col("w")).agg(sc.statAgg.as(sc.stat)))
       .reduce(_.unionByName(_))
-      .groupBy(col("w")).agg(sum(col("df")).as("df"))
-    val bdf = broadcast(dfT)
+      .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))
+    val scoreOf = sc.score(broadcast(statT), n, sdl) _
     val perShard = reads.map { tf =>
-      tf.join(bdf, Seq("w"))
-        .withColumn("idf", round(
-          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
-          6))
-        .withColumn("c", round(
-          col("idf") * (col("tf") * (k1 + 1)) /
-            (col("tf") + lit(k1) *
-              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-          6).cast("decimal(28,6)"))
+      scoreOf(tf)
         .select(col("w"), col("doc_id"), col("c"))
         .join(qt, Seq("w"))
         .groupBy(col("query_id"), col("doc_id"))
@@ -3856,29 +3654,33 @@ object TextIndex {
   def topKShardedPrunedBatch(spark: SparkSession, shardDirs: Seq[String],
                              queries: DataFrame, idCol: String,
                              termsCol: String, k: Int, k1: Double = 1.2,
-                             b: Double = 0.75): DataFrame = {
+                             b: Double = 0.75): DataFrame =
+    rankShardedPrunedBatch(spark, shardDirs, queries, idCol, termsCol, k,
+      Bm25(k1, b))
+
+  /** [[topKShardedPrunedBatch]] / [[lmTopKShardedPrunedBatch]]. */
+  private def rankShardedPrunedBatch(spark: SparkSession,
+                                     shardDirs: Seq[String],
+                                     queries: DataFrame, idCol: String,
+                                     termsCol: String, k: Int,
+                                     sc: Scorer): DataFrame = {
     require(shardDirs.nonEmpty, "need at least one shard")
     require(k >= 1, "need at least one result slot")
     import spark.implicits._
     lastPruneStats = None
-    // out-of-monotone-range params delegate — see [[topKPruned]]
-    if (!(k1 > 0 && b >= 0 && b <= 1)) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKShardedBatch(spark, shardDirs, queries, idCol,
-        termsCol, k, k1, b)
-    }
-    if (shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
+    // out-of-monotone-range params delegate — see [[rankPruned]]
+    if (!sc.monotone ||
+        shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
         shardDirs.exists(d =>
           !graft.sinks.HadoopSwap.exists(spark, blockmaxPath(d))) ||
         shardDirs.exists(d => !tryEnsureBlockCoverage(spark, d))) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKShardedBatch(spark, shardDirs, queries, idCol,
-        termsCol, k, k1, b)
+      return rankShardedBatch(spark, shardDirs, queries, idCol, termsCol,
+        k, sc)
     }
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
     val (qt, qtNonEmpty) = checkpointWithNonEmpty(queries
       .select(col(idCol).cast("long").as("query_id"),
         explode(array_distinct(col(termsCol))).as("w"))
@@ -3904,21 +3706,12 @@ object TextIndex {
           .localCheckpoint()
       }
     }
-    // GLOBAL df from the sidecars alone — zero data files
-    val dfFrame = broadcast(
-      bsByShard.map(_._2.groupBy(col("w")).agg(sum(col("cnt")).as("df")))
+    // GLOBAL statistic from the sidecars alone — zero data files
+    val scoreOf = sc.score(broadcast(
+      bsByShard.map(_._2.groupBy(col("w"))
+          .agg(sum(col(sc.sidecarCol)).as(sc.stat)))
         .reduce(_.unionByName(_))
-        .groupBy(col("w")).agg(sum(col("df")).as("df")))
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(dfFrame, Seq("w"))
-        .withColumn("idf", round(
-          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
-          6))
-        .withColumn("c", round(
-          col("idf") * (col("tf") * (k1 + 1)) /
-            (col("tf") + lit(k1) *
-              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-          6).cast("decimal(28,6)"))
+        .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))), n, sdl) _
     val cm = (col("c") * 1000000L).cast("long")
     // per-QUERY global θ: per-shard per-term best-cap probe files,
     // one union read, per-query k-th partial, GLOBAL floors (BM25's
@@ -4001,73 +3794,8 @@ object TextIndex {
   def lmTopKShardedBatch(spark: SparkSession, shardDirs: Seq[String],
                          queries: DataFrame, idCol: String,
                          termsCol: String, k: Int,
-                         mu: Double = 2000.0): DataFrame = {
-    require(shardDirs.nonEmpty, "need at least one shard")
-    require(k >= 1, "need at least one result slot")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    import spark.implicits._
-    val stats = shardDirs.map(d => readStats(spark, d))
-    val sdl = stats.map(_._2).sum
-    val qt = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        explode(array_distinct(col(termsCol))).as("w"))
-      .filter(col("w").isNotNull)
-      .localCheckpoint()
-    val wanted = qt.select(col("w")).distinct().localCheckpoint()
-    // probed buckets for every shard in one collected job
-    val shardBuckets = collectStoreBuckets(spark,
-      shardDirs.zip(stats).map { case (dir, (_, _, nb)) => (dir, nb) },
-      wanted)
-    val reads = shardDirs.zip(stats).zip(shardBuckets).flatMap {
-      case ((dir, (_, _, nb)), buckets) =>
-      val wantedS = dropAbsentTermRows(spark, dir, wanted)
-      if (buckets.isEmpty) None
-      else Some(minusTombstones(spark, dir,
-        spark.read.parquet(dir)
-          .filter(col("tb").isin(buckets: _*))
-          .drop("tb")
-          .join(wantedS, Seq("w"))
-          .select(col("doc_id"), col("w"), col("tf"), col("dl"))))
-    }
-    if (reads.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
-    val ctfT = reads.map(_.groupBy(col("w")).agg(sum(col("tf")).as("ctf")))
-      .reduce(_.unionByName(_))
-      .groupBy(col("w")).agg(sum(col("ctf")).as("ctf"))
-    val bctf = broadcast(ctfT)
-    val perShard = reads.map { tf =>
-      tf.join(bctf, Seq("w"))
-        .withColumn("tfc", round(
-          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-            (lit(mu) * col("ctf").cast("double"))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("bg", round(
-          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("c", col("tfc") + col("bg"))
-        .select(col("w"), col("doc_id"), col("c"))
-        .join(qt, Seq("w"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(count(lit(1)).as("n_terms"),
-          sum(col("c")).cast("double").as("score"))
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-          col("score"), col("n_terms")).as("hits"))
-        .select(col("query_id"), explode(col("hits")).as("hit"))
-        .select(col("query_id"), col("hit._1").as("doc_id"),
-          col("hit._3").as("n_terms"), col("hit._2").as("score"))
-    }
-    perShard.reduce(_.unionByName(_))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-        col("score"), col("n_terms")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("hit"))
-      .select(col("query_id"), col("hit._1").as("doc_id"),
-        col("hit._3").as("n_terms"), col("hit._2").as("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
+                         mu: Double = 2000.0): DataFrame =
+    rankShardedBatch(spark, shardDirs, queries, idCol, termsCol, k, Lm(mu))
 
   /** [[lmTopKShardedBatch]] with per-shard BLOCK-MAX pruning — the
     * LM face of [[topKShardedPrunedBatch]]: global ctf from the
@@ -4081,139 +3809,19 @@ object TextIndex {
                                shardDirs: Seq[String],
                                queries: DataFrame, idCol: String,
                                termsCol: String, k: Int,
-                               mu: Double = 2000.0): DataFrame = {
-    require(shardDirs.nonEmpty, "need at least one shard")
-    require(k >= 1, "need at least one result slot")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    import spark.implicits._
-    lastPruneStats = None
-    if (shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
-        shardDirs.exists(d =>
-          !graft.sinks.HadoopSwap.exists(spark, blockmaxPath(d))) ||
-        shardDirs.exists(d => !tryEnsureBlockCoverage(spark, d))) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return lmTopKShardedBatch(spark, shardDirs, queries, idCol,
-        termsCol, k, mu)
-    }
-    val stats = shardDirs.map(d => readStats(spark, d))
-    val sdl = stats.map(_._2).sum
-    val (qt, qtNonEmpty) = checkpointWithNonEmpty(queries
-      .select(col(idCol).cast("long").as("query_id"),
-        explode(array_distinct(col(termsCol))).as("w"))
-      .filter(col("w").isNotNull)
-      .repartition(spark.sessionState.conf.numShufflePartitions))
-    if (!qtNonEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
-    val termsF = qt.select(col("w")).distinct()
-    val bsByShard = shardDirs.map { dir =>
-      val liveFiles = graft.sinks.SkippingStore
-        .listDataFileRelPaths(spark, dir)
-      graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(dir))
-      dir -> graft.sinks.SidecarFold.withReadRetry() {
-        spark.read.parquet(blockmaxPath(dir))
-          .join(broadcast(termsF), Seq("w"))
-          .join(broadcast(liveFiles.toDF("file")), Seq("file"),
-            "left_semi")
-          .dropDuplicates("file", "w")
-          .localCheckpoint()
-      }
-    }
-    // GLOBAL ctf from the sidecars alone — zero data files
-    val ctfFrame = broadcast(
-      bsByShard.map(_._2.groupBy(col("w")).agg(sum(col("sumtf")).as("ctf")))
-        .reduce(_.unionByName(_))
-        .groupBy(col("w")).agg(sum(col("ctf")).as("ctf")))
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(ctfFrame, Seq("w"))
-        .withColumn("tfc", round(
-          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-            (lit(mu) * col("ctf").cast("double"))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("bg", round(
-          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("c", col("tfc") + col("bg"))
-    val cm = (col("c") * 1000000L).cast("long")
-    val bsUnion = bsByShard.map(_._2).reduce(_.unionByName(_))
-    val floors = scoreOf(bsUnion.groupBy(col("w"))
-        .agg(max(col("maxdl")).as("dl")).withColumn("tf", lit(1L)))
-      .select(col("w"), least(cm, lit(0L)).as("floor"))
-    val negAdj = qt.join(broadcast(floors), Seq("w"))
-      .groupBy(col("query_id")).agg(sum(col("floor")).as("neg_adj"))
-    // per-shard per-term best-cap probe files in ONE collected job
-    // for the whole fleet (the window partitions by (_shard, w), so
-    // each shard's winners are exactly the per-shard job's — only the
-    // job count changes: S fixed-cost collects -> 1)
-    val wprobe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_shard"), col("w"))
-      .orderBy(col("cap").desc, col("file"))
-    val probeFilesByShard: Map[Int, Seq[String]] =
-      bsByShard.zipWithIndex.map { case ((_, bsDF), i) =>
-        scoreOf(bsDF.select(col("file"), col("w"),
-            col("maxtf").as("tf"), col("mindl").as("dl")))
-          .select(lit(i).as("_shard"), col("file"), col("w"),
-            cm.as("cap"))
-      }.reduce(_.unionByName(_))
-        .withColumn("_r", row_number().over(wprobe))
-        .filter(col("_r") === 1)
-        .select(col("_shard"), col("file")).distinct()
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (i, rs) =>
-          i -> rs.map(_.getString(1)).toSeq.sorted }
-    val probeReads = bsByShard.zipWithIndex.flatMap { case ((dir, _), i) =>
-      val files = probeFilesByShard.getOrElse(i, Seq.empty)
-      if (files.isEmpty) None
-      else Some(spark.read.option("basePath", dir)
-        .parquet(files.map(f => s"$dir/$f"): _*)
-        .join(broadcast(termsF), Seq("w")))
-    }
-    if (probeReads.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
-    val wrank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("s").desc, col("doc_id"))
-    val thetaQ = scoreOf(probeReads.reduce(_.unionByName(_)))
-      .join(qt.select(col("query_id"), col("w")), Seq("w"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg((sum(col("c")) * 1000000L).cast("long").as("s"))
-      .withColumn("_r", row_number().over(wrank)).filter(col("_r") === k)
-      .join(negAdj, Seq("query_id"))
-      .select(col("query_id"), (col("s") + col("neg_adj")).as("theta"))
-      .localCheckpoint()
-    var acc = PruneStats(0, 0, 0, None, delegated = false)
-    val perShard = bsByShard.map { case (dir, bsDF) =>
-      val served = prunedServeBatch(spark, dir, qt, k, bsDF, scoreOf,
-        sharedThetaQ = Some(thetaQ))
-      lastPruneStats.foreach(s => acc = PruneStats(
-        acc.relevantFiles + s.relevantFiles,
-        acc.survivors + s.survivors,
-        acc.skipped + s.skipped, None, delegated = false))
-      served
-    }
-    lastPruneStats = Some(acc)
-    perShard.reduce(_.unionByName(_))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-        col("score"), col("n_terms")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("hit"))
-      .select(col("query_id"), col("hit._1").as("doc_id"),
-        col("hit._3").as("n_terms"), col("hit._2").as("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
+                               mu: Double = 2000.0): DataFrame =
+    rankShardedPrunedBatch(spark, shardDirs, queries, idCol, termsCol, k,
+      Lm(mu))
 
   // ------------------------------------------------------------------
   // ONE SERVE FRONT DOOR. The ranked-serve matrix is
   // {plain, pruned} × {single, batched} × {single-store, sharded} ×
-  // {BM25, LM}, and every cell is an explicit verb — correct, but a
-  // caller picking by method name can silently land on a slow path or
-  // an inapplicable one. serve()/serveBatch() inspect the stores and
-  // dispatch to the cheapest EXACT path (both routes of every cell are
-  // bit-identical, so the rule only changes cost):
+  // {BM25, LM}, and every cell is an explicit verb over its `rank*`
+  // core — correct, but a caller picking by method name can silently
+  // land on a slow path or an inapplicable one. serve()/serveBatch()
+  // inspect the stores and call the core of the cheapest EXACT path
+  // (both routes of every cell are bit-identical, so the rule only
+  // changes cost):
   //   - a FLEET prunes when every shard opted into `_blockmax`: a
   //     shared cross-shard θ can prove a whole weak shard sub-θ;
   //   - a SINGLE opted-in store prunes only when two data files of one
@@ -4231,7 +3839,7 @@ object TextIndex {
   //   - a missing zone sidecar, or one not covering every live file,
   //     proves nothing and keeps the pruned route;
   //   - a store without `_blockmax` serves unpruned.
-  // The pruned verbs themselves keep the tombstone / heal-failure /
+  // The pruned cores themselves keep the tombstone / heal-failure /
   // mixed-fleet delegations, so the front door never re-checks those.
   // Every explicit verb stays public: the front door is a default, not
   // a replacement. [[lastServeRoute]] records the route taken (the
@@ -4291,31 +3899,15 @@ object TextIndex {
             k1: Double = 1.2, b: Double = 0.75,
             mu: Double = 2000.0): DataFrame = {
     require(storeDirs.nonEmpty, "need at least one store")
-    val sc = scorer.toLowerCase(java.util.Locale.ROOT)
-    require(sc == "bm25" || sc == "lm",
-      s"unknown scorer '$scorer' — expected bm25 or lm")
-    val route = (storeDirs.size == 1, prunes(spark, storeDirs), sc) match {
-      case (true, true, "bm25") => "topKPruned"
-      case (true, false, "bm25") => "topK"
-      case (true, true, "lm") => "lmTopKPruned"
-      case (true, false, "lm") => "lmTopK"
-      case (false, true, "bm25") => "topKShardedPruned"
-      case (false, false, "bm25") => "topKSharded"
-      case (false, true, "lm") => "lmTopKShardedPruned"
-      case (_, _, _) => "lmTopKSharded"
-    }
-    lastServeRoute = Some(route)
-    route match {
-      case "topKPruned" => topKPruned(spark, storeDirs.head, terms, k, k1, b)
-      case "topK" => topK(spark, storeDirs.head, terms, k, k1, b)
-      case "lmTopKPruned" => lmTopKPruned(spark, storeDirs.head, terms, k, mu)
-      case "lmTopK" => lmTopK(spark, storeDirs.head, terms, k, mu)
-      case "topKShardedPruned" =>
-        topKShardedPruned(spark, storeDirs, terms, k, k1, b)
-      case "topKSharded" => topKSharded(spark, storeDirs, terms, k, k1, b)
-      case "lmTopKShardedPruned" =>
-        lmTopKShardedPruned(spark, storeDirs, terms, k, mu)
-      case _ => lmTopKSharded(spark, storeDirs, terms, k, mu)
+    val sc = scorerOf(scorer, k1, b, mu)
+    val local = storeDirs.size == 1
+    val pruned = prunes(spark, storeDirs)
+    lastServeRoute = Some(sc.route(cell(local, pruned, batch = false)))
+    (local, pruned) match {
+      case (true, true) => rankPruned(spark, storeDirs.head, terms, k, sc)
+      case (true, false) => rank(spark, storeDirs.head, terms, k, sc)
+      case (false, true) => rankShardedPruned(spark, storeDirs, terms, k, sc)
+      case (false, false) => rankSharded(spark, storeDirs, terms, k, sc)
     }
   }
 
@@ -4331,46 +3923,37 @@ object TextIndex {
                  k: Int, scorer: String = "bm25", k1: Double = 1.2,
                  b: Double = 0.75, mu: Double = 2000.0): DataFrame = {
     require(storeDirs.nonEmpty, "need at least one store")
+    val sc = scorerOf(scorer, k1, b, mu)
+    val local = storeDirs.size == 1
+    val pruned = prunes(spark, storeDirs)
+    lastServeRoute = Some(sc.route(cell(local, pruned, batch = true)))
+    (local, pruned) match {
+      case (true, true) =>
+        rankPrunedBatch(spark, storeDirs.head, queries, idCol, termsCol,
+          k, sc)
+      case (true, false) =>
+        rankBatch(spark, storeDirs.head, queries, idCol, termsCol, k, sc)
+      case (false, true) =>
+        rankShardedPrunedBatch(spark, storeDirs, queries, idCol, termsCol,
+          k, sc)
+      case (false, false) =>
+        rankShardedBatch(spark, storeDirs, queries, idCol, termsCol, k, sc)
+    }
+  }
+
+  /** The front door's scorer argument: "bm25" or "lm", any case. */
+  private def scorerOf(scorer: String, k1: Double, b: Double,
+                       mu: Double): Scorer = {
     val sc = scorer.toLowerCase(java.util.Locale.ROOT)
     require(sc == "bm25" || sc == "lm",
       s"unknown scorer '$scorer' — expected bm25 or lm")
-    val route = (storeDirs.size == 1, prunes(spark, storeDirs), sc) match {
-      case (true, true, "bm25") => "topKPrunedBatch"
-      case (true, false, "bm25") => "topKBatch"
-      case (true, true, "lm") => "lmTopKPrunedBatch"
-      case (true, false, "lm") => "lmTopKBatch"
-      case (false, true, "bm25") => "topKShardedPrunedBatch"
-      case (false, false, "bm25") => "topKShardedBatch"
-      case (false, true, "lm") => "lmTopKShardedPrunedBatch"
-      case (_, _, _) => "lmTopKShardedBatch"
-    }
-    lastServeRoute = Some(route)
-    route match {
-      case "topKPrunedBatch" =>
-        topKPrunedBatch(spark, storeDirs.head, queries, idCol, termsCol,
-          k, k1, b)
-      case "topKBatch" =>
-        topKBatch(spark, storeDirs.head, queries, idCol, termsCol, k,
-          k1, b)
-      case "lmTopKPrunedBatch" =>
-        lmTopKPrunedBatch(spark, storeDirs.head, queries, idCol,
-          termsCol, k, mu)
-      case "lmTopKBatch" =>
-        lmTopKBatch(spark, storeDirs.head, queries, idCol, termsCol, k, mu)
-      case "topKShardedPrunedBatch" =>
-        topKShardedPrunedBatch(spark, storeDirs, queries, idCol,
-          termsCol, k, k1, b)
-      case "topKShardedBatch" =>
-        topKShardedBatch(spark, storeDirs, queries, idCol, termsCol, k,
-          k1, b)
-      case "lmTopKShardedPrunedBatch" =>
-        lmTopKShardedPrunedBatch(spark, storeDirs, queries, idCol,
-          termsCol, k, mu)
-      case _ =>
-        lmTopKShardedBatch(spark, storeDirs, queries, idCol, termsCol,
-          k, mu)
-    }
+    if (sc == "bm25") Bm25(k1, b) else Lm(mu)
   }
+
+  /** The BM25 verb name of a matrix cell, e.g. `topKShardedPruned`. */
+  private def cell(local: Boolean, pruned: Boolean, batch: Boolean) =
+    "topK" + (if (local) "" else "Sharded") +
+      (if (pruned) "Pruned" else "") + (if (batch) "Batch" else "")
 
   /** SCATTER-GATHER BM25F — the two serve axes composed: each FIELD
     * is itself document-partitioned into N store shards (shard i
@@ -4980,25 +4563,32 @@ object TextIndex {
     * to [[topK]]. */
   def topKPruned(spark: SparkSession, storeDir: String,
                  terms: Seq[String], k: Int,
-                 k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+                 k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    rankPruned(spark, storeDir, terms, k, Bm25(k1, b))
+
+  /** [[topKPruned]] / [[lmTopKPruned]]. */
+  private def rankPruned(spark: SparkSession, storeDir: String,
+                         terms: Seq[String], k: Int,
+                         sc: Scorer): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     require(k >= 1, "need at least one result slot")
     import spark.implicits._
     lastPruneStats = None
     lastPruneDistributed = false
-    // the cap algebra is sound only on BM25's monotone range (k1 > 0,
-    // 0 ≤ b ≤ 1): caps at (maxtf, mindl) stop upper-bounding outside
-    // it, so out-of-range params — reachable via serve() from the
-    // expansion verbs, which forward caller k1/b — delegate to the
-    // exact unpruned serve instead of silently over-pruning
-    if (!(k1 > 0 && b >= 0 && b <= 1)) {
+    // the cap algebra is sound only where the scorer is monotone
+    // (BM25: k1 > 0, 0 ≤ b ≤ 1): caps at (maxtf, mindl) stop
+    // upper-bounding outside it, so out-of-range params — reachable via
+    // serve() from the expansion verbs, which forward caller k1/b —
+    // delegate to the exact unpruned serve instead of silently
+    // over-pruning
+    if (!sc.monotone) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topK(spark, storeDir, terms, k, k1, b)
+      return rank(spark, storeDir, terms, k, sc)
     }
     val tomb = readTombstones(spark, storeDir)
     if (tombstoneCount(spark, storeDir) > tombstonePruneMaxIds) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topK(spark, storeDir, terms, k, k1, b)
+      return rank(spark, storeDir, terms, k, sc)
     }
     val (n, sdl, nb) = readStats(spark, storeDir)
     val live = readTermFilter(spark, storeDir)
@@ -5013,44 +4603,34 @@ object TextIndex {
     if (graft.sinks.SkippingStore.listDataFileRelPaths(spark, storeDir)
           .size > distributedCapsFileThreshold) {
       lastPruneDistributed = true
-      return topKPrunedBatch(spark, storeDir,
+      return rankPrunedBatch(spark, storeDir,
           Seq((0L, live)).toDF("query_id", "terms"), "query_id",
-          "terms", k, k1, b)
+          "terms", k, sc)
         .select(col("doc_id"), col("n_terms"), col("score"))
     }
     if (!tryEnsureBlockCoverage(spark, storeDir)) {
       // read-only mount / failed heal write: pruning without full
       // file coverage is unsound — serve exactly, unpruned
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topK(spark, storeDir, terms, k, k1, b)
+      return rank(spark, storeDir, terms, k, sc)
     }
     val bs = readBlockRows(spark, storeDir, live)
     if (bs.isEmpty) return emptyTopK(spark, storeDir)
-    // exact corpus df per term: the sidecar's cnt (zero data files),
-    // minus the tombstoned postings when deletes are pending
+    // exact corpus statistic per term: the sidecar sum (zero data
+    // files), minus the tombstoned postings when deletes are pending
     val tadj: Map[String, (Long, Long)] = tomb
       .filter(_ => tombstoneCount(spark, storeDir) > 0L)
       .fold(Map.empty[String, (Long, Long)])(t =>
         tombstoneTermAdjust(spark, storeDir, live, nb, t))
-    val dfFrame = broadcast(bs.groupBy(_.w)
+    val statFrame = broadcast(bs.groupBy(_.w)
       .map { case (w, rs) =>
-        w -> (rs.map(_.cnt).sum - tadj.get(w).fold(0L)(_._1)) }
-      .toSeq.toDF("w", "df"))
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
-    // the scoring expressions, verbatim from [[topK]] — caps evaluate
-    // the SAME tree at (maxtf, mindl), so monotone-rounded bounds and
-    // served contributions can never disagree on rounding
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(dfFrame, Seq("w"))
-        .withColumn("idf", round(
-          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
-          6))
-        .withColumn("c", round(
-          col("idf") * (col("tf") * (k1 + 1)) /
-            (col("tf") + lit(k1) *
-              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-          6).cast("decimal(28,6)"))
-    prunedServe(spark, storeDir, live, k, bs, scoreOf,
+        w -> sc.prunedStat(rs.map(sc.sidecarStat).sum -
+          tadj.get(w).fold(0L)(sc.tombstoneStat)) }
+      .toSeq.toDF("w", sc.stat))
+    // the unpruned serve's scoring expressions — caps evaluate the SAME
+    // tree at (maxtf, mindl), so monotone-rounded bounds and served
+    // contributions can never disagree on rounding
+    prunedServe(spark, storeDir, live, k, bs, sc.score(statFrame, n, sdl),
       filterPost = p => minusTombstones(spark, storeDir, p))
   }
 
@@ -5064,67 +4644,8 @@ object TextIndex {
     * only deepens the floor, which is the safe direction. */
   def lmTopKPruned(spark: SparkSession, storeDir: String,
                    terms: Seq[String], k: Int,
-                   mu: Double = 2000.0): DataFrame = {
-    require(terms.nonEmpty, "need at least one query term")
-    require(k >= 1, "need at least one result slot")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    import spark.implicits._
-    lastPruneStats = None
-    lastPruneDistributed = false
-    val tomb = readTombstones(spark, storeDir)
-    if (tombstoneCount(spark, storeDir) > tombstonePruneMaxIds) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return lmTopK(spark, storeDir, terms, k, mu)
-    }
-    val (_, sdl, nb) = readStats(spark, storeDir)
-    val live = readTermFilter(spark, storeDir)
-      .fold(terms)(bits => presentTerms(spark, terms, bits))
-    if (live.isEmpty) return emptyTopK(spark, storeDir)
-    // the many-file crossover — see [[topKPruned]]
-    if (graft.sinks.SkippingStore.listDataFileRelPaths(spark, storeDir)
-          .size > distributedCapsFileThreshold) {
-      lastPruneDistributed = true
-      return lmTopKPrunedBatch(spark, storeDir,
-          Seq((0L, live)).toDF("query_id", "terms"), "query_id",
-          "terms", k, mu)
-        .select(col("doc_id"), col("n_terms"), col("score"))
-    }
-    if (!tryEnsureBlockCoverage(spark, storeDir)) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return lmTopK(spark, storeDir, terms, k, mu)
-    }
-    val bs = readBlockRows(spark, storeDir, live)
-    if (bs.isEmpty) return emptyTopK(spark, storeDir)
-    // exact collection term frequency: the sidecar's summed tf, minus
-    // the tombstoned postings' tf when deletes are pending
-    val tadj: Map[String, (Long, Long)] = tomb
-      .filter(_ => tombstoneCount(spark, storeDir) > 0L)
-      .fold(Map.empty[String, (Long, Long)])(t =>
-        tombstoneTermAdjust(spark, storeDir, live, nb, t))
-    // clamp to 1 for a term whose EVERY posting is tombstoned: no live
-    // row ever scores with it (the anti-join removes them all), but
-    // the cap tree still evaluates at (maxtf, mindl) and ctf = 0 would
-    // divide by zero there — a smaller ctf only RAISES the cap, so the
-    // clamp stays an upper bound for the (empty) live posting set
-    val ctfFrame = broadcast(bs.groupBy(_.w)
-      .map { case (w, rs) =>
-        w -> math.max(1L,
-          rs.map(_.sumtf).sum - tadj.get(w).fold(0L)(_._2)) }
-      .toSeq.toDF("w", "ctf"))
-    // the scoring expressions, verbatim from [[lmTopK]]
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(ctfFrame, Seq("w"))
-        .withColumn("tfc", round(
-          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-            (lit(mu) * col("ctf").cast("double"))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("bg", round(
-          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("c", col("tfc") + col("bg"))
-    prunedServe(spark, storeDir, live, k, bs, scoreOf,
-      filterPost = p => minusTombstones(spark, storeDir, p))
-  }
+                   mu: Double = 2000.0): DataFrame =
+    rankPruned(spark, storeDir, terms, k, Lm(mu))
 
   /** BATCHED block-max-pruned BM25 — [[topKPruned]] for a whole query
     * FRAME, per-query rows bit-identical to [[topKBatch]] (hence to
@@ -5153,8 +4674,7 @@ object TextIndex {
         explode(array_distinct(col(termsCol))).as("w"))
       .filter(col("w").isNotNull)
     val (qt, nonEmpty) = checkpointWithNonEmpty(
-      markBloomDead(spark, storeDir, exploded)
-        .filter(!col("_dead")).drop("_dead")
+      dropAbsentTermRows(spark, storeDir, exploded)
         .repartition(spark.sessionState.conf.numShufflePartitions))
     if (!nonEmpty)
       return Left(spark.range(0).select(col("id").as("query_id"),
@@ -5182,22 +4702,22 @@ object TextIndex {
   def topKPrunedBatch(spark: SparkSession, storeDir: String,
                       queries: DataFrame, idCol: String, termsCol: String,
                       k: Int, k1: Double = 1.2,
-                      b: Double = 0.75): DataFrame = {
+                      b: Double = 0.75): DataFrame =
+    rankPrunedBatch(spark, storeDir, queries, idCol, termsCol, k,
+      Bm25(k1, b))
+
+  /** [[topKPrunedBatch]] / [[lmTopKPrunedBatch]]. */
+  private def rankPrunedBatch(spark: SparkSession, storeDir: String,
+                              queries: DataFrame, idCol: String,
+                              termsCol: String, k: Int,
+                              sc: Scorer): DataFrame = {
     require(k >= 1, "need at least one result slot")
     lastPruneStats = None
-    // out-of-monotone-range params delegate — see [[topKPruned]]
-    if (!(k1 > 0 && b >= 0 && b <= 1)) {
+    // out-of-monotone-range params delegate — see [[rankPruned]]
+    if (!sc.monotone || tombstoneCount(spark, storeDir) > 0L ||
+        !tryEnsureBlockCoverage(spark, storeDir)) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKBatch(spark, storeDir, queries, idCol, termsCol, k,
-        k1, b)
-    }
-    if (tombstoneCount(spark, storeDir) > 0L) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKBatch(spark, storeDir, queries, idCol, termsCol, k, k1, b)
-    }
-    if (!tryEnsureBlockCoverage(spark, storeDir)) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return topKBatch(spark, storeDir, queries, idCol, termsCol, k, k1, b)
+      return rankBatch(spark, storeDir, queries, idCol, termsCol, k, sc)
     }
     val (n, sdl, _) = readStats(spark, storeDir)
     val (qt, bsDF) =
@@ -5205,20 +4725,10 @@ object TextIndex {
         case Left(empty) => return empty
         case Right(t) => t
       }
-    val dfFrame = broadcast(
-      bsDF.groupBy(col("w")).agg(sum(col("cnt")).as("df")))
-    val avgdl = round(lit(sdl).cast("double") / lit(n), 6)
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(dfFrame, Seq("w"))
-        .withColumn("idf", round(
-          log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)),
-          6))
-        .withColumn("c", round(
-          col("idf") * (col("tf") * (k1 + 1)) /
-            (col("tf") + lit(k1) *
-              (lit(1.0 - b) + lit(b) * col("dl") / avgdl)),
-          6).cast("decimal(28,6)"))
-    prunedServeBatch(spark, storeDir, qt, k, bsDF, scoreOf)
+    val statFrame = broadcast(
+      bsDF.groupBy(col("w")).agg(sum(col(sc.sidecarCol)).as(sc.stat)))
+    prunedServeBatch(spark, storeDir, qt, k, bsDF,
+      sc.score(statFrame, n, sdl))
   }
 
   /** Block-max-pruned BATCHED Dirichlet LM — [[lmTopKBatch]]'s rows
@@ -5229,38 +4739,8 @@ object TextIndex {
   def lmTopKPrunedBatch(spark: SparkSession, storeDir: String,
                         queries: DataFrame, idCol: String,
                         termsCol: String, k: Int,
-                        mu: Double = 2000.0): DataFrame = {
-    require(k >= 1, "need at least one result slot")
-    require(mu > 0, "the Dirichlet pseudo-count must be positive")
-    lastPruneStats = None
-    if (tombstoneCount(spark, storeDir) > 0L) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return lmTopKBatch(spark, storeDir, queries, idCol, termsCol, k, mu)
-    }
-    if (!tryEnsureBlockCoverage(spark, storeDir)) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return lmTopKBatch(spark, storeDir, queries, idCol, termsCol, k, mu)
-    }
-    val (_, sdl, _) = readStats(spark, storeDir)
-    val (qt, bsDF) =
-      prunedBatchFrames(spark, storeDir, queries, idCol, termsCol) match {
-        case Left(empty) => return empty
-        case Right(t) => t
-      }
-    val ctfFrame = broadcast(
-      bsDF.groupBy(col("w")).agg(sum(col("sumtf")).as("ctf")))
-    def scoreOf(post: DataFrame): DataFrame =
-      post.join(ctfFrame, Seq("w"))
-        .withColumn("tfc", round(
-          log(lit(1.0) + col("tf").cast("double") * lit(sdl).cast("double") /
-            (lit(mu) * col("ctf").cast("double"))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("bg", round(
-          log(lit(mu) / (col("dl").cast("double") + lit(mu))), 6)
-          .cast("decimal(28,6)"))
-        .withColumn("c", col("tfc") + col("bg"))
-    prunedServeBatch(spark, storeDir, qt, k, bsDF, scoreOf)
-  }
+                        mu: Double = 2000.0): DataFrame =
+    rankPrunedBatch(spark, storeDir, queries, idCol, termsCol, k, Lm(mu))
 
   /** The distributed batched prune core (see [[topKPrunedBatch]]'s
     * doc for the plan shape and [[prunedServe]]'s for the bound

@@ -10,10 +10,10 @@ import org.apache.spark.sql.functions._
   * unpriced" causes):
   *
   *   - q236_phrase_batch +17%: the distinct-covered-slots correctness
-  *     gate (countDistinct where a row count was). Arms A/B run the
-  *     SAME batched phrase serve with the gate on and off (the
-  *     row-count arm is answer-identical on this churn-free store) —
-  *     the floor delta IS the gate's price.
+  *     gate (countDistinct where a row count was). Its price was
+  *     measured once against a row-count arm (SCALE.md, "Round-14:
+  *     the r13 close-bench residuals, priced");
+  *     the batched phrase serve's floor is printed for the record.
   *   - q237_near_search +15%: hypothesis "the unified layout's
   *     ''-tail postings inflate the '' term's bucket that every span
   *     serve's scan shares". The tool counts the store's actual ''
@@ -65,23 +65,14 @@ object ServeProfile {
     floor("near_search join~merge/3 (q237 shape)")(() =>
       TextIndex.nearSearch(spark, dir, "join", "merge", 3).count())
 
-    // q236's shape: batched exact phrase, gate on vs off
+    // q236's shape: batched exact phrase
     val queries = Seq(
       (0L, Seq("join", "merge")), (1L, Seq("vector", "stream")),
       (2L, Seq("filter", "sort")), (3L, Seq("small", "batch")))
       .toDF("query_id", "phrase")
-    floor("phrase_batch distinct-slot gate ON (q236)")(() =>
+    floor("phrase_batch distinct-slot gate (q236)")(() =>
       TextIndex.phraseSearchBatch(spark, dir, queries,
         "query_id", "phrase").count())
-    // package-private in-process hook — deliberately NOT an env var
-    // (a stray variable must never change production answers on
-    // churned stores; only this profiler flips it, around its own A/B)
-    TextIndex.serveRowCountGate = true
-    try
-      floor("phrase_batch row-count gate OFF (A/B)")(() =>
-        TextIndex.phraseSearchBatch(spark, dir, queries,
-          "query_id", "phrase").count())
-    finally TextIndex.serveRowCountGate = false
 
     // round-15 arm: the BM25F pruned serve's price vs the unpruned
     // one, on the q278 banded fixture (dense rewrite so θ dominates

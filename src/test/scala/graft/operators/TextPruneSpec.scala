@@ -955,4 +955,61 @@ class TextPruneSpec extends SparkSpec {
       rows(TextIndex.topK(spark, dir, single.head, 5)))
     assert(route == "topKPruned")
   }
+
+  test("BM25 params outside the monotone range delegate every pruned " +
+      "cell to its unpruned twin") {
+    // k1 = 0 and b = 1.5 break the caps' upper bound at (maxtf, mindl):
+    // each pruned cell must serve through the exact unpruned one
+    val (a, b, c) = skewDocs()
+    val s0 = tmp("mono")
+    TextIndex.build(a.unionAll(b).unionAll(c), "doc_id", "text", s0,
+      nBuckets = 4, filesPerBucket = 1)
+    TextIndex.buildBlockStats(spark, s0)
+    val (k1, bb) = (0.0, 1.5)
+    val terms = Seq("x", "y")
+    val queries = Seq((0L, Seq("x", "y")), (1L, Seq("x")))
+      .toDF("query_id", "terms")
+    def brows(df: DataFrame) =
+      df.select($"query_id", $"doc_id", $"n_terms", $"score")
+        .as[(Long, Long, Long, Double)].collect().toSeq
+    def delegated(cell: String): Unit =
+      assert(TextIndex.lastPruneStats.exists(_.delegated),
+        s"$cell must delegate: ${TextIndex.lastPruneStats}")
+    assert(rows(TextIndex.topKPruned(spark, s0, terms, 5, k1, bb)) ==
+      rows(TextIndex.topK(spark, s0, terms, 5, k1, bb)))
+    delegated("topKPruned")
+    assert(brows(TextIndex.topKPrunedBatch(spark, s0, queries,
+        "query_id", "terms", 5, k1, bb)) ==
+      brows(TextIndex.topKBatch(spark, s0, queries, "query_id", "terms",
+        5, k1, bb)))
+    delegated("topKPrunedBatch")
+    // an opted-in fleet of one shard: the params alone must delegate
+    val shards = Seq(s0)
+    assert(rows(TextIndex.topKShardedPruned(spark, shards, terms, 5, k1,
+        bb)) == rows(TextIndex.topKSharded(spark, shards, terms, 5, k1, bb)))
+    delegated("topKShardedPruned")
+    assert(brows(TextIndex.topKShardedPrunedBatch(spark, shards, queries,
+        "query_id", "terms", 5, k1, bb)) ==
+      brows(TextIndex.topKShardedBatch(spark, shards, queries,
+        "query_id", "terms", 5, k1, bb)))
+    delegated("topKShardedPrunedBatch")
+  }
+
+  test("LM pruned serve with every posting of a query term tombstoned " +
+      "equals lmTopK (the ctf clamp)") {
+    val dir = tmp("lmclamp")
+    val (a, b, _) = skewDocs()
+    TextIndex.build(a, "doc_id", "text", dir, nBuckets = 4,
+      filesPerBucket = 1)
+    TextIndex.buildBlockStats(spark, dir)
+    TextIndex.append(b.unionAll(Seq((100L, "z x"), (101L, "z z y"))
+      .toDF("doc_id", "text")), "doc_id", "text", dir, filesPerBucket = 1)
+    // z lives only in docs 100 and 101: its sidecar ctf is all tombstoned
+    assert(TextIndex.delete(spark, dir, Seq(100L, 101L).toDF("doc_id"),
+      "doc_id") == 2L)
+    assert(rows(TextIndex.lmTopKPruned(spark, dir, Seq("x", "z"), 5)) ==
+      rows(TextIndex.lmTopK(spark, dir, Seq("x", "z"), 5)))
+    assert(!TextIndex.lastPruneStats.get.delegated,
+      "pending tombstones must still prune")
+  }
 }
