@@ -5,6 +5,7 @@ import graft.GraftSession
 import graft.etl.{Gff3ToChado, OntologyMerge}
 import graft.export.Gff3Export
 import graft.sources.{Fasta, Gff3, Obo}
+import graft.sinks.ParquetUpsert
 
 /** Command-line multiplexer mirroring the reference's `modware-load` /
   * `modware-export` surface (SURVEY.md §0) on the Spark engine:
@@ -855,10 +856,12 @@ object GraftCli {
   private def store2Gff3(storeDir: String, out: String,
       refOnly: Option[String]): Unit = {
     val spark = GraftSession.local()
-    val feature = spark.read.parquet(s"$storeDir/feature")
-    val locAll = spark.read.parquet(s"$storeDir/featureloc").filter(col("rank") === 0)
+    // tables read with their footer schemas: no inference job per table
+    def t(name: String) = ParquetUpsert.readKnown(spark, s"$storeDir/$name")
+    val feature = t("feature")
+    val locAll = t("featureloc").filter(col("rank") === 0)
     val loc = refOnly.fold(locAll)(r => locAll.filter(col("srcfeature") === r))
-    val rel = spark.read.parquet(s"$storeDir/feature_relationship")
+    val rel = t("feature_relationship")
       .filter(col("reltype") === "part_of")
       .select(col("subject"), col("object").as("parent"))
     val frame = feature
@@ -889,7 +892,7 @@ object GraftCli {
   private def dictyGff3(storeDir: String, out: String, variant: String,
       source: Option[String] = None, ref: Option[String] = None): Unit = {
     val spark = GraftSession.local()
-    def t(name: String) = spark.read.parquet(s"$storeDir/$name")
+    def t(name: String) = ParquetUpsert.readKnown(spark, s"$storeDir/$name")
     // reference_id scoping (chado2dictycanonicalgff3.pm reference_id):
     // with the srcfeature-partitioned featureloc layout this filter is a
     // partition-pruned scan, and every downstream join inner-joins loc
@@ -1646,7 +1649,7 @@ object GraftCli {
     * P2+P3+P6+F17+F18+A6+A7 composed in one declarative plan. */
   private def chado2Gaf(store: String, out: String, skipFile: Option[String]): Unit = {
     val spark = GraftSession.local()
-    def r(t: String) = spark.read.parquet(s"$store/$t")
+    def r(t: String) = ParquetUpsert.readKnown(spark, s"$store/$t")
     val skip = skipFile.map { f =>
       spark.read.textFile(f).toDF("accession").filter(col("accession") =!= "")
     }

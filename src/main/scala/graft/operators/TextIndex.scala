@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sinks.ParquetUpsert.{readKnown, readKnownMerged, readKnownUnder}
 
 /** Persisted full-text postings store + store-served Okapi BM25 — the
   * text-retrieval sibling of the IVF postings store
@@ -131,6 +132,13 @@ object TextIndex {
     (r.getLong(0), r.getLong(1))
   }
 
+  /** A/B kill-switch for the driver-side stats-row write (default ON;
+    * GRAFT_STATS_DRIVER_WRITE=false forces the original Spark write).
+    * Answer-preserving: both paths land one identical row; readers
+    * merge schemas. */
+  private def statsDriverWriteEnabled: Boolean =
+    ingestFlag("GRAFT_STATS_DRIVER_WRITE")
+
   /** `_corpus_stats` is APPEND-ONLY: one row
     * `(bid, n, sdl, nbuckets, tf_bits)` per build/append (bid = -1
     * for batch-API writes, the micro-batch id for streaming ingest),
@@ -145,13 +153,6 @@ object TextIndex {
     * `tf_bits` is the batch's term-presence Bloom bitset
     * ([[termFilterBits]]) — per-batch bitsets OR at read, so the
     * union filter stays append-only too. */
-  /** A/B kill-switch for the driver-side stats-row write (default ON;
-    * GRAFT_STATS_DRIVER_WRITE=false forces the original Spark write).
-    * Answer-preserving: both paths land one identical row; readers
-    * merge schemas. */
-  private def statsDriverWriteEnabled: Boolean =
-    ingestFlag("GRAFT_STATS_DRIVER_WRITE")
-
   private def appendStatsRow(spark: SparkSession, dir: String, bid: Long,
                              n: Long, sdl: Long, nBuckets: Int,
                              tfBits: Array[Long],
@@ -395,8 +396,7 @@ object TextIndex {
     val hit = statsSnapshotMemo.get(dir)
     if (hit != null && hit.sig == sig) return hit
     val snap = graft.sinks.SidecarFold.withReadRetry() {
-      val df = spark.read.option("mergeSchema", "true")
-        .parquet(statsPath(dir))
+      val df = readKnownMerged(spark, statsPath(dir))
       val hasBits = df.columns.contains("tf_bits")
       val hasSketch = df.columns.contains("df_sketch")
       val rows = df.collect()
@@ -484,15 +484,6 @@ object TextIndex {
     terms.filter(w => termProbesLocal(w).forall(p =>
       (bits((p / 64).toInt) & (1L << (p % 64).toInt)) != 0L))
 
-  /** Whether batch `bid`'s stats contribution already landed (the
-    * replay-heal guard; bid-row reads prune to one tiny sidecar
-    * column). The check is `any bid >= wanted`, not equality: stream
-    * bids are monotone and batch B+1 only runs after B committed —
-    * and B's stats row lands inside B's own foreachBatch before that
-    * commit — so ANY row at or past `bid` proves `bid`'s contribution
-    * is in the sums. That is also what makes [[maybeFoldStats]] safe:
-    * a fold row carries the max folded bid, which answers for every
-    * bid it swallowed. */
   /** Crash-heal for [[maybeFoldStats]]'s swap window: a fold that died
     * between swapInto's two renames leaves NO live `_corpus_stats` but
     * the complete history under `.old-<stamp>`. Without a restore,
@@ -504,6 +495,15 @@ object TextIndex {
   private def restoreStatsAside(spark: SparkSession, dir: String): Unit =
     graft.sinks.SidecarFold.restoreAside(spark, statsPath(dir))
 
+  /** Whether batch `bid`'s stats contribution already landed (the
+    * replay-heal guard; bid-row reads prune to one tiny sidecar
+    * column). The check is `any bid >= wanted`, not equality: stream
+    * bids are monotone and batch B+1 only runs after B committed —
+    * and B's stats row lands inside B's own foreachBatch before that
+    * commit — so ANY row at or past `bid` proves `bid`'s contribution
+    * is in the sums. That is also what makes [[maybeFoldStats]] safe:
+    * a fold row carries the max folded bid, which answers for every
+    * bid it swallowed. */
   private def statsRowExists(spark: SparkSession, dir: String,
                              bid: Long): Boolean =
     graft.sinks.HadoopSwap.exists(spark, statsPath(dir)) &&
@@ -526,7 +526,7 @@ object TextIndex {
     // must restore, not read as "predates delete support"
     graft.sinks.SidecarFold.restoreAside(spark, doclenPath(dir))
     if (!graft.sinks.HadoopSwap.exists(spark, doclenPath(dir))) None
-    else Some(spark.read.parquet(doclenPath(dir))
+    else Some(readKnown(spark, doclenPath(dir))
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
     }
 
@@ -721,7 +721,7 @@ object TextIndex {
                            before: Set[String]): Option[DataFrame] = {
     val fresh = graft.sinks.SkippingStore.listDataFileRelPaths(spark, dir)
       .filterNot(before).map(rel => s"$dir/$rel")
-    if (fresh.isEmpty) None else Some(spark.read.parquet(fresh: _*))
+    if (fresh.isEmpty) None else Some(readKnown(spark, fresh: _*))
   }
 
   /** Zero-posting docs of the bag-of-terms tokenizer: null text only. */
@@ -758,7 +758,7 @@ object TextIndex {
         // and Σdl of the per-doc max(dl) rows (null dl — null-text
         // docs — contributes nothing to the sum, matching readStats)
         val t = graft.sinks.SidecarFold.withReadRetry() {
-          spark.read.parquet(tombPath(dir))
+          readKnown(spark, tombPath(dir))
             .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
             .agg(count(lit(1)), sum(col("dl"))).head()
         }
@@ -787,7 +787,7 @@ object TextIndex {
     // resurrect every masked doc
     graft.sinks.SidecarFold.restoreAside(spark, tombPath(dir))
     if (!graft.sinks.HadoopSwap.exists(spark, tombPath(dir))) None
-    else Some(spark.read.parquet(tombPath(dir))
+    else Some(readKnown(spark, tombPath(dir))
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
   }
 
@@ -1089,7 +1089,7 @@ object TextIndex {
     // negative n/Σdl, zero term bits) bakes their subtraction into the
     // stats the instant the tombstone rows stop existing — readStats
     // answers identically on both sides of the swap.
-    spark.read.parquet(statsPath(storeDir))
+    readKnown(spark, statsPath(storeDir))
       .coalesce(1).write.mode("overwrite").parquet(statsPath(tmp))
     tomb.foreach { _ =>
       // the deduped set's (count, Σdl) from the listing-validated
@@ -1108,7 +1108,7 @@ object TextIndex {
       .map(dl => tomb.fold(dl)(tb =>
         dl.join(tb.select(col("doc_id")), Seq("doc_id"), "left_anti")))
       .orElse(if (isPositional(spark, storeDir)) None
-        else Some(spark.read.parquet(tmp)
+        else Some(readKnown(spark, tmp)
           .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))))
     dlNext.foreach(_.write.mode("overwrite").parquet(doclenPath(tmp)))
     // a vocab sidecar is REBUILT from the rewritten postings — the
@@ -1150,10 +1150,10 @@ object TextIndex {
       // only `_vocab` keep the direct scan.
       val vocabSrc =
         if (hasBlockmax)
-          spark.read.parquet(blockmaxPath(tmp))
+          readKnown(spark, blockmaxPath(tmp))
             .groupBy(col("w")).agg(sum(col("cnt")).cast("long").as("df"))
         else
-          spark.read.parquet(tmp).select(col("doc_id"), col("w"))
+          readKnown(spark, tmp).select(col("doc_id"), col("w"))
             .groupBy(col("w")).agg(count(lit(1)).as("df"))
       vocabSrc
         .select(lit(hwm).as("bid"), col("w"), col("df"),
@@ -1367,11 +1367,11 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(terms)(bits => presentTerms(spark, terms, bits)).toSet
     if (terms.exists(t => !live(t)))
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_occurrences", lit(0L))
     val buckets = bucketsOf(terms, nb)
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(terms: _*))
         .select(col("doc_id"), col("w"), col("pos")))
@@ -1496,11 +1496,11 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(Seq(a, b))(bits => presentTerms(spark, Seq(a, b), bits)).toSet
     if (!(live(a) && live(b)))
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_pairs", lit(0L))
     val buckets = bucketsOf(Seq(a, b), nb)
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(a, b))
         .select(col("doc_id"), col("w"), col("pos")))
@@ -1571,12 +1571,12 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(Seq(a, b))(bits => presentTerms(spark, Seq(a, b), bits)).toSet
     if (!live(a))
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_clear", lit(0L))
     val terms = Seq(a, b).filter(live)
     val buckets = bucketsOf(terms, nb)
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(terms: _*))
         .select(col("doc_id"), col("w"), col("pos")))
@@ -1634,13 +1634,13 @@ object TextIndex {
       .join(deadQ, Seq("query_id"), "left_anti")
       .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int")))
     if (buckets.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("query_id", lit(0L))
         .withColumn("n_clear", lit(0L))
         .select(col("query_id"), col("doc_id"), col("n_clear"))
     val terms = qslots.select(col("w")).distinct()
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(terms, Seq("w"))
@@ -1701,13 +1701,13 @@ object TextIndex {
       dropBloomDeadQueries(spark, storeDir, slots)
       .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int")))
     if (buckets.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("query_id", lit(0L))
         .withColumn("n_pairs", lit(0L))
         .select(col("query_id"), col("doc_id"), col("n_pairs"))
     val terms = qslots.select(col("w")).distinct()
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(terms, Seq("w"))
@@ -1757,11 +1757,11 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(Seq(term))(bits => presentTerms(spark, Seq(term), bits))
     if (live.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("pos", lit(0L)).withColumn("snippet", lit(""))
     val bucket = pmod(xxhash64(lit(term)), lit(nb)).cast("int")
     val hits = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb") === bucket && col("w") === term)
         .select(col("doc_id"), col("pos")))
     hits
@@ -1807,14 +1807,14 @@ object TextIndex {
       dropBloomDeadQueries(spark, storeDir, q)
       .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int")))
     if (buckets.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("query_id", lit(0L))
         .withColumn("pos", lit(0L)).withColumn("snippet", lit(""))
         .select(col("query_id"), col("doc_id"), col("pos"),
           col("snippet"))
     val terms = qslots.select(col("w")).distinct()
     val hits = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(terms, Seq("w"))
@@ -1874,11 +1874,11 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(distinct)(bits => presentTerms(spark, distinct, bits)).toSet
     if (distinct.exists(t => !live(t)))
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
     val (_, _, nb) = readStats(spark, storeDir)
     val buckets = bucketsOf(distinct, nb)
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(distinct: _*))
         .select(col("doc_id"), col("w")))
@@ -1972,7 +1972,7 @@ object TextIndex {
     val (n, sdl, nb) = readStats(spark, storeDir)
     val buckets = bucketsOf(live, nb)
     val tf = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(live: _*)))
     // [[topK]]'s statistic and scoring expressions
@@ -2040,12 +2040,12 @@ object TextIndex {
       dropBloomDeadQueries(spark, storeDir, slots)
       .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int")))
     if (buckets.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("query_id", lit(0L))
         .select(col("query_id"), col("doc_id"))
     val terms = qslots.select(col("w")).distinct()
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(terms, Seq("w"))
@@ -2103,27 +2103,6 @@ object TextIndex {
     }
   }
 
-  /** BATCHED store-served phrase search — exact adjacency for a whole
-    * query FRAME `(idCol, phraseCol: array<string>)` against the
-    * positional store, [[topKBatch]]'s one-job shape for
-    * [[phraseSearch]]: per query the answer is bit-identical to the
-    * per-phrase loop, but every probed bucket is read ONCE for all the
-    * queries probing it.
-    *
-    * Plan shape: phrases posexplode to (query, slot, term) map-side
-    * and hash to buckets with the writer's frozen expressions; any
-    * query with a provably-absent term (the OR'd store bitset rides
-    * the frame as one literal) drops WHOLE before the bucket union is
-    * collected — zero matches by Bloom semantics, zero buckets opened
-    * for it. The store scan partition-prunes to the union of surviving
-    * buckets; postings join the localCheckpointed slot frame on `w`
-    * with no forced hint (the q218 direction discipline). Adjacency is
-    * the same shifted-position algebra as the single-phrase serve —
-    * slot i's positions shift by -i — evaluated per (query, doc) as a
-    * fold over the collected slot arrays; a doc must cover EVERY slot
-    * (count == phrase length) before the intersect runs, so partial
-    * matches never reach the fold. Returns
-    * (query_id, doc_id, n_occurrences), matching docs only. */
   /** Drop WHOLE queries any of whose slot terms is provably absent,
     * engine-side: the OR'd store bitset rides the slot frame
     * `(query_id, …, w)` as ONE literal array, so a dead query is gone
@@ -2139,20 +2118,6 @@ object TextIndex {
     m.drop("_dead").join(dead, Seq("query_id"), "left_anti")
   }
 
-  /** Materialize a batched serve's slot frame (localCheckpoint) and
-    * return it with its distinct probed buckets — collected DURING
-    * the checkpoint's own job via an Observation (`collect_set(tb)`)
-    * instead of the separate fixed-cost job every batched serve used
-    * to run over the checkpointed rows. The observed aggregate rides
-    * the exact plan the checkpoint executes, so the set cannot differ
-    * from the replaced `distinct().collect()`; when the metrics row
-    * is unavailable (AQE empty-relation propagation can swallow the
-    * CollectMetrics node on an all-dead batch — the [[observed]]
-    * escape hatch — or the listener bus lags past the wait budget)
-    * the helper falls back to that very job: never a different
-    * answer, at worst the old cost. Buckets return SORTED — the old
-    * job's collect order was partition-arbitrary and every caller
-    * only `isin`s them, so order never reaches an answer. */
   /** The observed metrics row of an already-executed action, BOUNDED:
     * the row arrives via the async listener bus (normally well under
     * a second behind the action), so wait two and return empty on a
@@ -2183,6 +2148,20 @@ object TextIndex {
     (cp, n > 0L)
   }
 
+  /** Materialize a batched serve's slot frame (localCheckpoint) and
+    * return it with its distinct probed buckets — collected DURING
+    * the checkpoint's own job via an Observation (`collect_set(tb)`)
+    * instead of the separate fixed-cost job every batched serve used
+    * to run over the checkpointed rows. The observed aggregate rides
+    * the exact plan the checkpoint executes, so the set cannot differ
+    * from the replaced `distinct().collect()`; when the metrics row
+    * is unavailable (AQE empty-relation propagation can swallow the
+    * CollectMetrics node on an all-dead batch — the [[observed]]
+    * escape hatch — or the listener bus lags past the wait budget)
+    * the helper falls back to that very job: never a different
+    * answer, at worst the old cost. Buckets return SORTED — the old
+    * job's collect order was partition-arbitrary and every caller
+    * only `isin`s them, so order never reaches an answer. */
   private[graft] def checkpointWithBuckets(frame: DataFrame)
       : (DataFrame, Seq[Int]) = {
     val obs = Observation()
@@ -2232,6 +2211,27 @@ object TextIndex {
           .drop("_tfb")
     }
 
+  /** BATCHED store-served phrase search — exact adjacency for a whole
+    * query FRAME `(idCol, phraseCol: array<string>)` against the
+    * positional store, [[topKBatch]]'s one-job shape for
+    * [[phraseSearch]]: per query the answer is bit-identical to the
+    * per-phrase loop, but every probed bucket is read ONCE for all the
+    * queries probing it.
+    *
+    * Plan shape: phrases posexplode to (query, slot, term) map-side
+    * and hash to buckets with the writer's frozen expressions; any
+    * query with a provably-absent term (the OR'd store bitset rides
+    * the frame as one literal) drops WHOLE before the bucket union is
+    * collected — zero matches by Bloom semantics, zero buckets opened
+    * for it. The store scan partition-prunes to the union of surviving
+    * buckets; postings join the localCheckpointed slot frame on `w`
+    * with no forced hint (the q218 direction discipline). Adjacency is
+    * the same shifted-position algebra as the single-phrase serve —
+    * slot i's positions shift by -i — evaluated per (query, doc) as a
+    * fold over the collected slot arrays; a doc must cover EVERY slot
+    * (count == phrase length) before the intersect runs, so partial
+    * matches never reach the fold. Returns
+    * (query_id, doc_id, n_occurrences), matching docs only. */
   def phraseSearchBatch(spark: SparkSession, storeDir: String,
                         queries: DataFrame, idCol: String,
                         phraseCol: String): DataFrame = {
@@ -2254,13 +2254,13 @@ object TextIndex {
       .withColumn("tb",
         pmod(xxhash64(col("w")), lit(nb)).cast("int")))
     if (buckets.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("query_id", lit(0L))
         .withColumn("n_occurrences", lit(0L))
         .select(col("query_id"), col("doc_id"), col("n_occurrences"))
     val terms = qslots.select(col("w")).distinct()
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(terms, Seq("w"))
@@ -2338,12 +2338,10 @@ object TextIndex {
       .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int"))
       .repartition(spark.sessionState.conf.numShufflePartitions))
     if (buckets.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
+      return emptyTopKBatch(spark)
     val wanted = qt.select(col("w")).distinct()
     val tf = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(wanted, Seq("w")))
@@ -2513,13 +2511,13 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(terms)(bits => presentTerms(spark, terms, bits))
     if (live.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_terms", lit(0L)).withColumn("score", lit(0.0))
     val buckets = bucketsOf(live, nb)
     // tombstoned docs drop BEFORE the statistic: every scoring input
     // is exactly what a rebuild on the surviving corpus would produce
     val tf = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(live: _*)))
     // a term's postings live entirely inside its bucket, so the
@@ -2611,7 +2609,7 @@ object TextIndex {
     val hit = vocabHwmMemo.get(dir)
     if (hit != null && hit._1 == sig) return hit._2
     val vh = graft.sinks.SidecarFold.withReadRetry() {
-      spark.read.parquet(vocabPath(dir)).agg(max(col("bid"))).head()
+      readKnown(spark, vocabPath(dir)).agg(max(col("bid"))).head()
     }
     val hwm = if (vh.isNullAt(0)) -1L else vh.getLong(0)
     if (vocabHwmMemo.size > 64) vocabHwmMemo.clear()
@@ -2668,7 +2666,7 @@ object TextIndex {
       require(graft.sinks.HadoopSwap.exists(spark, vocabPath(storeDir)),
         s"$storeDir has no _vocab sidecar — buildVocab() creates it " +
           "(appends maintain it from then on)")
-      spark.read.parquet(vocabPath(storeDir))
+      readKnown(spark, vocabPath(storeDir))
         .filter(length(col("w")) > 0)
         .groupBy(col("w")).agg(sum(col("df")).cast("long").as("df"))
     }
@@ -2727,8 +2725,7 @@ object TextIndex {
       graft.sinks.SidecarFold.restoreAside(spark, vocabPath(storeDir))
       require(graft.sinks.HadoopSwap.exists(spark, vocabPath(storeDir)),
         s"$storeDir has no _vocab sidecar — buildVocab() creates it")
-      val raw = spark.read.option("mergeSchema", "true")
-        .parquet(vocabPath(storeDir))
+      val raw = readKnownMerged(spark, vocabPath(storeDir))
       val withRw =
         if (!raw.columns.contains("rw"))
           raw.withColumn("rw", reverse(col("w")))
@@ -2769,8 +2766,13 @@ object TextIndex {
   }
 
   private def emptyTopK(spark: SparkSession, storeDir: String): DataFrame =
-    spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+    readKnown(spark, storeDir).select(col("doc_id")).limit(0)
       .withColumn("n_terms", lit(0L)).withColumn("score", lit(0.0))
+
+  /** The empty batched answer `(query_id, doc_id, n_terms, score)`. */
+  private def emptyTopKBatch(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as("query_id"), col("id").as("doc_id"),
+      col("id").as("n_terms"), col("id").cast("double").as("score"))
 
   /** Prefix-expanded BM25: expand against the vocab sidecar, score
     * the expanded terms through the [[serve]] front door (summed
@@ -2889,7 +2891,7 @@ object TextIndex {
           val buckets = bucketsOf(live, nbF)
           val avgdlF = round(lit(sdlF).cast("double") / lit(n), 6)
           Some(minusTombstones(spark, dir,
-              spark.read.parquet(dir)
+              readKnown(spark, dir)
                 .filter(col("tb").isin(buckets: _*))
                 .filter(col("w").isin(live: _*)))
             .select(col("doc_id"), col("w"),
@@ -2992,7 +2994,7 @@ object TextIndex {
         else {
           val avgdlF = round(lit(sdlF).cast("double") / lit(n), 6)
           Some(minusTombstones(spark, dir,
-              spark.read.parquet(dir)
+              readKnown(spark, dir)
                 .filter(col("tb").isin(buckets: _*))
                 .drop("tb")
                 .join(wantedF, Seq("w")))
@@ -3003,9 +3005,7 @@ object TextIndex {
         }
     }
     if (parts.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
+      return emptyTopKBatch(spark)
     val union = parts.reduce(_.unionByName(_))
     val dfT = union.groupBy(col("w"))
       .agg(countDistinct(col("doc_id")).as("df"))
@@ -3058,13 +3058,13 @@ object TextIndex {
     val live = readTermFilter(spark, storeDir)
       .fold(terms)(bits => presentTerms(spark, terms, bits)).toSet
     if (distinctSlots.exists(_.forall(t => !live(t))))
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_occurrences", lit(0L))
     val liveSlots = distinctSlots.map(_.filter(live))
     val liveTerms = liveSlots.flatten.distinct
     val buckets = bucketsOf(liveTerms, nb)
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .filter(col("w").isin(liveTerms: _*))
         .select(col("doc_id"), col("w"), col("pos")))
@@ -3115,7 +3115,7 @@ object TextIndex {
       else Seq(s)
     }
     if (expanded.exists(_.isEmpty))
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("n_occurrences", lit(0L))
     phraseSearchMulti(spark, storeDir, expanded)
   }
@@ -3145,13 +3145,13 @@ object TextIndex {
       .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int"))
       .repartition(spark.sessionState.conf.numShufflePartitions))
     if (buckets.isEmpty)
-      return spark.read.parquet(storeDir).select(col("doc_id")).limit(0)
+      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
         .withColumn("query_id", lit(0L))
         .withColumn("n_occurrences", lit(0L))
         .select(col("query_id"), col("doc_id"), col("n_occurrences"))
     val terms = qslots.select(col("w")).distinct()
     val post = minusTombstones(spark, storeDir,
-      spark.read.parquet(storeDir)
+      readKnown(spark, storeDir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(terms, Seq("w"))
@@ -3347,17 +3347,16 @@ object TextIndex {
     * The price of the global contract is one terms-sized df exchange
     * — nothing corpus-shaped moves.
     *
-    * Plan shape: per shard, the standard three-layer prune (its OWN
-    * term bits, bucket partitions, w-zones, tombstone mask); the
-    * per-shard df counts union into one terms-sized global df frame
-    * (broadcast); each shard then scores ITS matching docs with the
-    * global constants and keeps only its top-k
-    * (TakeOrderedAndProject — a doc lives in exactly one shard, so
-    * the global top-k is the top-k of the per-shard top-k union; a
-    * k-bounded gather, never a doc-set gather). Shards must partition
-    * the corpus by document: a doc_id present in two shards would
-    * rank as two independent docs, exactly as it would double-count
-    * in one store. */
+    * Plan shape: ONE plan over the union of every shard's read, each
+    * with the standard three-layer prune (its OWN term bits, bucket
+    * partitions, w-zones, tombstone mask) and tagged with its shard;
+    * one terms-sized aggregate over the union gives the global df
+    * (broadcast), and the union's postings score with the global
+    * constants into one top-k (TakeOrderedAndProject — a k-bounded
+    * gather, never a doc-set gather). Shards must partition the
+    * corpus by document: a doc_id present in two shards ranks as two
+    * independent docs (docs group by shard and doc_id), exactly as it
+    * would double-count in one store. */
   def topKSharded(spark: SparkSession, shardDirs: Seq[String],
                   terms: Seq[String], k: Int, k1: Double = 1.2,
                   b: Double = 0.75): DataFrame =
@@ -3372,48 +3371,43 @@ object TextIndex {
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
-    val reads = shardDirs.zip(stats).flatMap { case (dir, (_, _, nb)) =>
-      val live = readTermFilter(spark, dir)
-        .fold(terms)(bits => presentTerms(spark, terms, bits))
-      if (live.isEmpty) None
-      else {
-        val buckets = bucketsOf(live, nb)
-        Some(minusTombstones(spark, dir,
-          spark.read.parquet(dir)
-            .filter(col("tb").isin(buckets: _*))
+    val reads = shardDirs.zip(stats).zipWithIndex.flatMap {
+      case ((dir, (_, _, nb)), i) =>
+        val live = readTermFilter(spark, dir)
+          .fold(terms)(bits => presentTerms(spark, terms, bits))
+        if (live.isEmpty) None
+        else Some(minusTombstones(spark, dir,
+          readKnown(spark, dir)
+            .filter(col("tb").isin(bucketsOf(live, nb): _*))
             .filter(col("w").isin(live: _*))
-            .select(col("doc_id"), col("w"), col("tf"), col("dl"))))
-      }
+            .select(col("doc_id"), col("w"), col("tf"), col("dl")))
+          .withColumn("_shard", lit(i)))
     }
     if (reads.isEmpty) return emptyTopK(spark, shardDirs.head)
-    // global statistic: per-shard terms-sized partials, one union, one
-    // sum — the only cross-shard exchange, and it is terms-sized
-    val statT = reads.map(_.groupBy(col("w")).agg(sc.statAgg.as(sc.stat)))
-      .reduce(_.unionByName(_))
-      .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))
-    val scoreOf = sc.score(broadcast(statT), n, sdl) _
-    val perShard = reads.map { tf =>
-      scoreOf(tf)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_terms"),
-          sum(col("c")).cast("double").as("score"))
-        .orderBy(col("score").desc, col("doc_id"))
-        .limit(k)
-    }
-    perShard.reduce(_.unionByName(_))
+    // ONE plan over the tagged union: the global statistic is one
+    // terms-sized aggregate — the only cross-shard exchange besides the
+    // k-bounded gather — and docs key on (shard, doc_id)
+    val tf = reads.reduce(_.unionByName(_))
+    val statT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
+    sc.score(broadcast(statT), n, sdl)(tf)
+      .groupBy(col("_shard"), col("doc_id"))
+      .agg(count(lit(1)).as("n_terms"),
+        sum(col("c")).cast("double").as("score"))
       .orderBy(col("score").desc, col("doc_id")).limit(k)
+      .select(col("doc_id"), col("n_terms"), col("score"))
   }
 
   /** [[topKSharded]] with per-shard BLOCK-MAX pruning — the two scale
     * mechanisms compose: global statistics come from the shards'
     * `_blockmax` sidecars (df = Σ per-shard sidecar df — ZERO data
     * files for the global df pass, where [[topKSharded]] pays a
-    * per-shard counting read), and each shard then runs the full
-    * pruned serve ([[prunedServe]]: its own θ probe, caps against the
-    * GLOBAL idf, survivor-files-only scan) before the k-bounded
-    * gather. Exactness per shard follows from the single-store
-    * theorem with the global scoring expression; the global top-k is
-    * the top-k of per-shard tops as in the unpruned scatter. A shard
+    * per-shard counting read, and every shard's rows come back in one
+    * read). One θ probe reads every shard's best-cap files; each
+    * shard's survivors follow from its caps against the GLOBAL idf
+    * and that θ ([[pruneFiles]]); one plan scans every shard's
+    * survivors, tagged by shard, into one k-bounded top-k. Exactness
+    * per shard follows from the single-store theorem with the global
+    * scoring expression, as in the unpruned scatter. A shard
     * with pending tombstones would make the GLOBAL df stale-high, so
     * any pending tombstone delegates the whole serve to
     * [[topKSharded]] (exact, unpruned) until compaction purges.
@@ -3451,91 +3445,52 @@ object TextIndex {
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
-    // per-shard live terms + block rows (sidecar-only so far)
-    val shardRows = shardDirs.map { dir =>
-      val live = readTermFilter(spark, dir)
-        .fold(terms)(bits => presentTerms(spark, terms, bits))
-      val bs = if (live.isEmpty) Seq.empty[BlockRow]
-        else readBlockRows(spark, dir, live)
-      (dir, live, bs)
-    }
-    if (shardRows.forall(_._3.isEmpty))
-      return emptyTopK(spark, shardDirs.head)
+    val lives = shardDirs.map(dir => readTermFilter(spark, dir)
+      .fold(terms)(bits => presentTerms(spark, terms, bits)))
+    // every shard's block rows in one read (sidecar-only so far)
+    val bss = readBlockRows(spark, shardDirs.zip(lives))
+    if (bss.forall(_.isEmpty)) return emptyTopK(spark, shardDirs.head)
     // GLOBAL statistic from the sidecars alone — the scatter's whole
     // statistic pass costs zero data files
-    val statMap: Map[String, Long] = shardRows.flatMap(_._3)
+    val statMap: Map[String, Long] = bss.flatten
       .groupBy(_.w).map { case (w, rs) => w -> rs.map(sc.sidecarStat).sum }
     val scoreOf = sc.score(broadcast(statMap.toSeq.toDF("w", sc.stat)),
       n, sdl) _
-    def micros(d: java.math.BigDecimal): Long =
-      d.movePointRight(6).longValueExact()
-    // GLOBAL floors + every shard's caps in ONE collected frame, tagged
-    // by shard index: floor rows ride with _shard = -1 and a null file
-    // key (scoreOf is per-row arithmetic over the broadcast statistic,
-    // so the union changes no value; S+1 fixed-cost jobs -> 1). A
-    // scorer with negative contributions (the LM length norm) makes
-    // unseen contributions negative, so the shared θ carries
-    // Σ min(0, floor(w)) evaluated at the per-term max maxdl across
-    // EVERY shard's sidecar — more negative than any shard-local floor,
-    // hence safe for each. BM25's contributions are non-negative: its
-    // floors clamp to zero and θ is the bare k-th partial.
-    val capFloorAll =
-      scoreOf((shardRows.zipWithIndex.flatMap { case ((_, _, bs), i) =>
-          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl))
-        } ++ shardRows.flatMap(_._3).groupBy(_.w)
-          .map { case (w, rs) =>
-            (-1, (null: String), w, 1L, rs.map(_.maxdl).max) }.toSeq)
-        .toDF("_shard", "file", "w", "tf", "dl"))
-        .select(col("_shard"), col("file"), col("w"), col("c"))
-        .collect()
-    val negAdjust = capFloorAll.filter(_.getInt(0) == -1)
-      .map(r => math.min(0L, micros(r.getDecimal(3)))).sum
-    val capsByShard: Map[Int, Seq[(String, String, Long)]] =
-      capFloorAll.filter(_.getInt(0) >= 0)
-        .groupBy(_.getInt(0)).map { case (i, rs) =>
-          i -> rs.map(r => (r.getString(1), r.getString(2),
-            micros(r.getDecimal(3)))).toSeq }
-    // GLOBAL θ probe: every shard's per-term best-cap file, ONE union
-    // read, the k-th partial across ALL shards. Valid for every shard
-    // (the k-th of a superset dominates the global s_k's lower bound),
-    // and strictly stronger than shard-local probes — a shard holding
-    // only low-cap bands prunes against the DENSE shards' θ instead
-    // of its own weak one.
-    val probeByShard = shardRows.zipWithIndex.collect {
-      case ((dir, live, bs), i) if bs.nonEmpty =>
-        val caps = capsByShard.getOrElse(i, Seq.empty)
-        val files = caps.map(_._2).distinct.map { w =>
-          caps.filter(_._2 == w).maxBy(t => (t._3, t._1))._1
-        }.distinct.toSeq.sorted
-        (dir, live, files)
-    }
-    val probePartials = probeByShard.map { case (dir, live, files) =>
-      scoreOf(spark.read.option("basePath", dir)
-          .parquet(files.map(f => s"$dir/$f"): _*)
-          .filter(col("w").isin(live: _*)))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("s"))
-    }.reduce(_.unionByName(_))
+    // every shard's caps and the GLOBAL floors: a scorer with negative
+    // contributions (the LM length norm) makes unseen contributions
+    // negative, so the shared θ carries Σ min(0, floor(w)) evaluated at
+    // the per-term max maxdl across EVERY shard's sidecar — more
+    // negative than any shard-local floor, hence safe for each
+    val (caps, negAdjust) = capsAndFloor(spark, bss, scoreOf)
+    // `files(i)` of shard i, every shard in ONE tagged union plan
+    def scan(files: Seq[Seq[String]]) = scoreOf(files.zipWithIndex.collect {
+      case (fs, i) if fs.nonEmpty =>
+        readKnownUnder(spark, shardDirs(i), fs)
+          .filter(col("w").isin(lives(i): _*))
+          .select(col("doc_id"), col("w"), col("tf"), col("dl"),
+            lit(i).as("_shard"))
+    }.reduce(_.unionByName(_)))
+    // GLOBAL θ probe: every shard's per-term best-cap file, the k-th
+    // partial across ALL shards. Valid for every shard (the k-th of a
+    // superset dominates the global s_k's lower bound), and strictly
+    // stronger than shard-local probes — a shard holding only low-cap
+    // bands prunes against the DENSE shards' θ instead of its own
+    val probe = scan(caps.map(probeFilesOf))
+      .groupBy(col("_shard"), col("doc_id")).agg(sum(col("c")).as("s"))
       .orderBy(col("s").desc, col("doc_id")).limit(k)
       .select(col("s")).collect()
-    val thetaGlobal: Option[Long] =
-      if (probePartials.length < k) None
-      else Some(micros(probePartials.last.getDecimal(0)) + negAdjust)
-    // per-shard pruned serves under the shared θ; the instrumentation
-    // ledger sums the shards' file counts so the caller sees the
-    // whole scatter's prune
-    var acc = PruneStats(0, 0, 0, thetaGlobal, delegated = false)
-    val perShard = shardRows.collect { case (dir, live, bs) if bs.nonEmpty =>
-      val served = prunedServe(spark, dir, live, k, bs, scoreOf,
-        sharedTheta = thetaGlobal)
-      lastPruneStats.foreach(s => acc = PruneStats(
-        acc.relevantFiles + s.relevantFiles,
-        acc.survivors + s.survivors,
-        acc.skipped + s.skipped, thetaGlobal, delegated = false))
-      served
-    }
-    lastPruneStats = Some(acc)
-    perShard.reduce(_.unionByName(_))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
+    val theta = if (probe.length < k) None
+      else Some(micros(probe.last.getDecimal(0)) + negAdjust)
+    // each shard's survivor rule under the shared θ, on the driver from
+    // the caps above; the ledger sums the shards' file counts
+    val pruned = caps.map(pruneFiles(_, theta))
+    lastPruneStats = Some(PruneStats(pruned.map(_.relevant.size).sum,
+      pruned.map(_.survivors.size).sum, pruned.map(_.skipped).sum, theta,
+      delegated = false))
+    // a shared θ can prove a whole weak shard sub-θ: it reads nothing
+    if (pruned.forall(_.survivors.isEmpty))
+      return emptyTopK(spark, shardDirs.head)
+    completeTopK(scan(pruned.map(_.survivors)), pruned.map(_.outTerms), k)
   }
 
   /** SCATTER-GATHER Dirichlet LM — [[topKSharded]]'s contract for the
@@ -3604,16 +3559,14 @@ object TextIndex {
       val wantedS = dropAbsentTermRows(spark, dir, wanted)
       if (buckets.isEmpty) None
       else Some(minusTombstones(spark, dir,
-        spark.read.parquet(dir)
+        readKnown(spark, dir)
           .filter(col("tb").isin(buckets: _*))
           .drop("tb")
           .join(wantedS, Seq("w"))
           .select(col("doc_id"), col("w"), col("tf"), col("dl"))))
     }
     if (reads.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
+      return emptyTopKBatch(spark)
     val statT = reads.map(_.groupBy(col("w")).agg(sc.statAgg.as(sc.stat)))
       .reduce(_.unionByName(_))
       .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))
@@ -3687,9 +3640,7 @@ object TextIndex {
       .filter(col("w").isNotNull)
       .repartition(spark.sessionState.conf.numShufflePartitions))
     if (!qtNonEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
+      return emptyTopKBatch(spark)
     val termsF = qt.select(col("w")).distinct()
     // per-shard sidecar frames for the union terms (live-file-pruned,
     // raced-heal-deduped — the prunedBatchFrames read, per shard)
@@ -3698,7 +3649,7 @@ object TextIndex {
         .listDataFileRelPaths(spark, dir)
       graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(dir))
       dir -> graft.sinks.SidecarFold.withReadRetry() {
-        spark.read.parquet(blockmaxPath(dir))
+        readKnown(spark, blockmaxPath(dir))
           .join(broadcast(termsF), Seq("w"))
           .join(broadcast(liveFiles.toDF("file")), Seq("file"),
             "left_semi")
@@ -3746,14 +3697,11 @@ object TextIndex {
     val probeReads = bsByShard.zipWithIndex.flatMap { case ((dir, _), i) =>
       val files = probeFilesByShard.getOrElse(i, Seq.empty)
       if (files.isEmpty) None
-      else Some(spark.read.option("basePath", dir)
-        .parquet(files.map(f => s"$dir/$f"): _*)
+      else Some(readKnownUnder(spark, dir, files)
         .join(broadcast(termsF), Seq("w")))
     }
     if (probeReads.isEmpty)
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
+      return emptyTopKBatch(spark)
     val wrank = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("s").desc, col("doc_id"))
@@ -3829,7 +3777,7 @@ object TextIndex {
   //     otherwise pruning provably skips nothing. build and compact
   //     write postings with repartitionByRange(nb × filesPerBucket,
   //     tb, w), so with disjoint zones each query term lives in exactly
-  //     one file; [[prunedServe]]'s survivor rule keeps f iff
+  //     one file; [[pruneFiles]]' survivor rule keeps f iff
   //     max(cap, 0) + restPlus(w) ≥ θ, which with one file per term
   //     reads totalPlus ≥ θ; and θ ≤ the k-th exact score ≤ totalPlus.
   //     Every relevant file survives, so the pruned route would read
@@ -4006,7 +3954,7 @@ object TextIndex {
           val avgdlF = round(
             lit(sdlByField(f)).cast("double") / lit(n), 6)
           Some(minusTombstones(spark, dir,
-              spark.read.parquet(dir)
+              readKnown(spark, dir)
                 .filter(col("tb").isin(buckets: _*))
                 .filter(col("w").isin(live: _*)))
             .select(col("doc_id"), col("w"),
@@ -4181,7 +4129,7 @@ object TextIndex {
     * per (file, w) group, not once per posting row. */
   private def deriveBlockRows(spark: SparkSession, dir: String,
                               relFiles: Seq[String]): DataFrame =
-    spark.read.parquet(relFiles.map(f => s"$dir/$f"): _*)
+    readKnown(spark, relFiles.map(f => s"$dir/$f"): _*)
       .select(input_file_name().as("path"), col("w"), col("tf"), col("dl"))
       .groupBy(col("path"), col("w"))
       .agg(count(lit(1)).as("cnt"), max(col("tf")).as("maxtf"),
@@ -4213,15 +4161,6 @@ object TextIndex {
     memoBlockCovered(spark, storeDir, files.toSet)
   }
 
-  /** File-coverage-keyed extension — a no-op on stores that never
-    * opted in. Only uncovered files are scanned, so the appended cost
-    * stays the batch's; replays re-cover idempotently (rows are
-    * unique per (file, w), and a lost extension is just uncovered
-    * files again). Coverage is sound at FILE granularity because each
-    * extension lands as one atomic parquet job: a crash loses a data
-    * file's rows entirely (uncovered → healed here), never half of
-    * them — partial per-file coverage is physically unreachable. The
-    * fold drops rows of files a selective compaction replaced. */
   /** Covered-file-set memo for the `_blockmax` sidecar, keyed by the
     * sidecar's own listing signature ([[statsSnapshotMemo]]'s idiom):
     * every append re-checked coverage with a fixed-cost distinct+
@@ -4241,6 +4180,15 @@ object TextIndex {
       covered))
   }
 
+  /** File-coverage-keyed extension — a no-op on stores that never
+    * opted in. Only uncovered files are scanned, so the appended cost
+    * stays the batch's; replays re-cover idempotently (rows are
+    * unique per (file, w), and a lost extension is just uncovered
+    * files again). Coverage is sound at FILE granularity because each
+    * extension lands as one atomic parquet job: a crash loses a data
+    * file's rows entirely (uncovered → healed here), never half of
+    * them — partial per-file coverage is physically unreachable. The
+    * fold drops rows of files a selective compaction replaced. */
   private[graft] def maybeExtendBlockStats(spark: SparkSession,
                                            dir: String): Unit = {
     import spark.implicits._
@@ -4252,7 +4200,7 @@ object TextIndex {
       val sideSig = dirListingSig(spark, side)
       val covered = Option(blockCoveredMemo.get(dir)) match {
         case Some((sig, set)) if sig == sideSig => set
-        case _ => spark.read.parquet(side)
+        case _ => readKnown(spark, side)
           .select(col("file")).distinct()
           .collect().map(_.getString(0)).toSet
       }
@@ -4327,15 +4275,6 @@ object TextIndex {
     * Package-private so specs can drive the crossover. */
   @volatile private[graft] var tombstonePruneMaxIds: Long = 100000L
 
-  /** Exact per-term statistics subtraction for a store with PENDING
-    * tombstones — what lets the pruned serves keep pruning through a
-    * delete-to-compaction window instead of falling off a perf cliff:
-    * sidecar df/ctf are stale-high by exactly the tombstoned docs'
-    * postings, and those postings are a PAGE-PRUNED point lookup
-    * (postings sort by (tb, w, doc_id), the ids push down as an In
-    * residual — the parquet analog of Lucene's skip pointers), never
-    * a full bucket read. Returns w -> (tombstoned df, tombstoned ctf)
-    * for the live terms; absent keys mean no tombstoned postings. */
   /** Tombstone-id count up to which the point lookup inlines the ids
     * as an `In` literal (parquet page-level pushdown inside each
     * term's sorted run); past it — but still under the
@@ -4348,13 +4287,22 @@ object TextIndex {
     * adjustment stays bucket-bounded either way. */
   @volatile private[graft] var tombstoneInLiteralMaxIds: Int = 4096
 
+  /** Exact per-term statistics subtraction for a store with PENDING
+    * tombstones — what lets the pruned serves keep pruning through a
+    * delete-to-compaction window instead of falling off a perf cliff:
+    * sidecar df/ctf are stale-high by exactly the tombstoned docs'
+    * postings, and those postings are a PAGE-PRUNED point lookup
+    * (postings sort by (tb, w, doc_id), the ids push down as an In
+    * residual — the parquet analog of Lucene's skip pointers), never
+    * a full bucket read. Returns w -> (tombstoned df, tombstoned ctf)
+    * for the live terms; absent keys mean no tombstoned postings. */
   private def tombstoneTermAdjust(spark: SparkSession, storeDir: String,
                                   live: Seq[String], nb: Int,
                                   tomb: DataFrame)
       : Map[String, (Long, Long)] = {
     import spark.implicits._
     val buckets = bucketsOf(live, nb)
-    val matching = spark.read.parquet(storeDir)
+    val matching = readKnown(spark, storeDir)
       .filter(col("tb").isin(buckets: _*))
       .filter(col("w").isin(live: _*))
     val ids = tomb.select(col("doc_id")).limit(
@@ -4401,33 +4349,123 @@ object TextIndex {
   private[graft] final case class BlockRow(file: String, w: String,
     cnt: Long, maxtf: Long, mindl: Long, maxdl: Long, sumtf: Long)
 
-  /** Read the sidecar's rows for `live` terms, drop rows of files a
-    * selective compaction replaced, and dedupe by (file, w) — racing
-    * serve-time heals can land duplicate coverage rows between folds,
-    * and summing cnt over duplicates would inflate df. Coverage must
-    * already be ensured by the caller ([[tryEnsureBlockCoverage]]). */
-  private def readBlockRows(spark: SparkSession, storeDir: String,
-                            live: Seq[String]): Seq[BlockRow] = {
-    // crash-aside heal stays on the read path (job-free FS rename):
-    // the coverage memo can skip [[maybeExtendBlockStats]], but a
-    // fold that died mid-swap must still never read as missing
-    graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(storeDir))
-    require(graft.sinks.HadoopSwap.exists(spark, blockmaxPath(storeDir)),
-      s"$storeDir has no _blockmax sidecar — buildBlockStats() creates " +
-        "it (appends maintain it from then on); unpruned serves work " +
-        "without one")
-    val liveFiles = graft.sinks.SkippingStore
-      .listDataFileRelPaths(spark, storeDir).toSet
-    graft.sinks.SidecarFold.withReadRetry() {
-      spark.read.parquet(blockmaxPath(storeDir))
-        .filter(col("w").isin(live: _*))
-        .dropDuplicates("file", "w")
-        .select(col("file"), col("w"), col("cnt"), col("maxtf"),
-          col("mindl"), col("maxdl"), col("sumtf"))
+  /** Read each store's sidecar rows for its `live` terms — every
+    * store in ONE collected read — drop rows of files a selective
+    * compaction replaced, and dedupe by (file, w): racing serve-time
+    * heals can land duplicate coverage rows between folds, and summing
+    * cnt over duplicates would inflate df. A store with no live term
+    * reads nothing and gets no rows. Coverage must already be ensured
+    * by the caller ([[tryEnsureBlockCoverage]]). */
+  private def readBlockRows(spark: SparkSession,
+                            stores: Seq[(String, Seq[String])])
+      : Seq[Seq[BlockRow]] = {
+    val asked = stores.zipWithIndex.filter(_._1._2.nonEmpty)
+    if (asked.isEmpty) return stores.map(_ => Seq.empty)
+    val liveFiles = asked.map { case ((storeDir, _), i) =>
+      // crash-aside heal stays on the read path (job-free FS rename):
+      // the coverage memo can skip [[maybeExtendBlockStats]], but a
+      // fold that died mid-swap must still never read as missing
+      graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(storeDir))
+      require(graft.sinks.HadoopSwap.exists(spark, blockmaxPath(storeDir)),
+        s"$storeDir has no _blockmax sidecar — buildBlockStats() creates " +
+          "it (appends maintain it from then on); unpruned serves work " +
+          "without one")
+      i -> graft.sinks.SkippingStore.listDataFileRelPaths(spark, storeDir)
+        .toSet
+    }.toMap
+    val rows = graft.sinks.SidecarFold.withReadRetry() {
+      asked.map { case ((storeDir, live), i) =>
+        readKnown(spark, blockmaxPath(storeDir))
+          .filter(col("w").isin(live: _*))
+          .select(lit(i).as("_shard"), col("file"), col("w"), col("cnt"),
+            col("maxtf"), col("mindl"), col("maxdl"), col("sumtf"))
+      }.reduce(_.unionByName(_)).dropDuplicates("_shard", "file", "w")
         .collect()
-    }.map(r => BlockRow(r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
-      .filter(t => liveFiles(t.file)).toSeq
+    }.map(r => r.getInt(0) -> BlockRow(r.getString(1), r.getString(2),
+        r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
+      .filter { case (i, t) => liveFiles(i)(t.file) }.groupBy(_._1)
+    stores.indices.map(i =>
+      rows.get(i).fold(Seq.empty[BlockRow])(_.map(_._2).toSeq))
+  }
+
+  /** A DECIMAL(28,6) contribution as exact micros. */
+  private def micros(d: java.math.BigDecimal): Long =
+    d.movePointRight(6).longValueExact()
+
+  /** Each store's per-(file, w) caps — `scoreOf` at (maxtf, mindl),
+    * an upper bound for any scorer increasing in tf and decreasing in
+    * dl — and the floor adjustment `Σ_w min(0, floor(w))`, the floor
+    * being `scoreOf` at (1, the max maxdl of w over EVERY store). All
+    * in ONE tiny collected frame: floor rows ride with store -1 and a
+    * null file, and scoreOf is per-row arithmetic over the broadcast
+    * statistic, so the union changes no value. Caps come back as
+    * (file, w, micros) per store. */
+  private def capsAndFloor(spark: SparkSession, bss: Seq[Seq[BlockRow]],
+                           scoreOf: DataFrame => DataFrame)
+      : (Seq[Seq[(String, String, Long)]], Long) = {
+    import spark.implicits._
+    val rows = scoreOf((bss.zipWithIndex.flatMap { case (bs, i) =>
+          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl)) } ++
+        bss.flatten.groupBy(_.w).map { case (w, rs) =>
+          (-1, (null: String), w, 1L, rs.map(_.maxdl).max) })
+        .toDF("_shard", "file", "w", "tf", "dl"))
+      .select(col("_shard"), col("file"), col("w"), col("c")).collect()
+    val negAdjust = rows.filter(_.getInt(0) < 0)
+      .map(r => math.min(0L, micros(r.getDecimal(3)))).sum
+    val caps = rows.filter(_.getInt(0) >= 0).groupBy(_.getInt(0))
+    (bss.indices.map(i => caps.getOrElse(i, Array.empty[Row]).toSeq
+      .map(r => (r.getString(1), r.getString(2), micros(r.getDecimal(3))))),
+      negAdjust)
+  }
+
+  /** The θ probe's files: each term's best-cap file (ties by file name
+    * for determinism). */
+  private def probeFilesOf(caps: Seq[(String, String, Long)]): Seq[String] =
+    caps.groupBy(_._2).values.map(_.maxBy(t => (t._3, t._1))._1)
+      .toSeq.distinct.sorted
+
+  /** One store's survivor rule under θ. `outTerms`: terms with postings
+    * left in a skipped file — a candidate UNSEEN for one of these is
+    * provably sub-θ whether the doc lacks the term or its posting hides
+    * in a skipped file, so it drops without a second look (never a
+    * skipped-file read). */
+  private final case class Pruned(relevant: Seq[String],
+    survivors: Seq[String], skipped: Int, outTerms: Seq[String])
+
+  /** Strict skip: keep f iff ∃w in f: max(cap(w,f),0) + restPlus(w) ≥ θ,
+    * restPlus(w) being the other terms' summed plus-truncated caps. */
+  private def pruneFiles(caps: Seq[(String, String, Long)],
+                         theta: Option[Long]): Pruned = {
+    val capPlus: Map[String, Long] = caps.groupBy(_._2)
+      .map { case (w, rs) => w -> math.max(rs.map(_._3).max, 0L) }
+    val totalPlus = capPlus.values.sum
+    val relevant = caps.map(_._1).distinct
+    val survivors = theta.fold(relevant)(t => relevant.filter(f =>
+      caps.exists(c => c._1 == f &&
+        math.max(c._3, 0L) + totalPlus - capPlus(c._2) >= t))).sorted
+    val skipped = relevant.filterNot(survivors.toSet)
+    Pruned(relevant, survivors, skipped.size,
+      caps.filter(c => skipped.contains(c._1)).map(_._2).distinct)
+  }
+
+  /** The exact top-k of scored survivor postings tagged `_shard`:
+    * candidates group per (store, doc), and a candidate missing one of
+    * its store's `outTerms` drops ([[pruneFiles]]). */
+  private def completeTopK(scored: DataFrame, outTerms: Seq[Seq[String]],
+                           k: Int): DataFrame = {
+    val out = outTerms.zipWithIndex.filter(_._1.nonEmpty)
+    val grouped = scored.groupBy(col("_shard"), col("doc_id"))
+    val complete =
+      if (out.isEmpty) // nothing skipped can hide a posting
+        grouped.agg(count(lit(1)).as("n_terms"), sum(col("c")).as("s"))
+      else grouped.agg(count(lit(1)).as("n_terms"), sum(col("c")).as("s"),
+          collect_set(col("w")).as("ws"))
+        .filter(out.map { case (ts, i) => col("_shard") =!= i ||
+          size(array_except(typedLit(ts), col("ws"))) === 0 }.reduce(_ && _))
+    complete
+      .select(col("doc_id"), col("n_terms"),
+        col("s").cast("double").as("score"))
+      .orderBy(col("score").desc, col("doc_id")).limit(k)
   }
 
   /** The generic block-max pruned serve: given the sidecar rows and
@@ -4436,110 +4474,41 @@ object TextIndex {
     * the unpruned serve scores with), run the cap/θ/survivor algebra
     * and return the exact top-k frame.
     *
-    * Caps evaluate `scoreOf` at (maxtf, mindl) — an upper bound for
-    * any scorer increasing in tf and decreasing in dl. FLOORS
-    * evaluate it at (1, maxdl-of-term) and contribute
-    * `Σ min(0, floor)` to θ: for a scorer with negative contributions
-    * (Dirichlet LM's length norm) a doc's exact score can sit BELOW
-    * its probe partial, so the k-th partial alone would over-prune;
-    * the floor adjustment restores `θ ≤ s_k`. For BM25 (contributions
-    * ≥ 0) the floors clamp to zero and the adjustment vanishes. The
-    * skip rule uses PLUS-truncated caps (`max(cap, 0)`), which keeps
-    * the incomplete-candidate drop safe for negative caps: whether a
-    * candidate's unseen term is absent from the doc or hiding in a
-    * skipped file, its exact score is provably < θ. All comparisons
-    * in micros-scaled integer math. */
-  /** `sharedTheta`: an EXTERNALLY-derived threshold (micros, floors
-    * already applied by the caller) that skips the local probe —
-    * [[topKShardedPruned]] passes the global cross-shard probe's k-th
-    * partial, which dominates any shard-local probe (the k-th of a
-    * superset). The caller owns its validity for the scorer. */
-  /** `filterPost`: applied to every data-file read (probe and
+    * FLOORS ([[capsAndFloor]]) contribute `Σ min(0, floor)` to θ: for
+    * a scorer with negative contributions (Dirichlet LM's length norm)
+    * a doc's exact score can sit BELOW its probe partial, so the k-th
+    * partial alone would over-prune; the floor adjustment restores
+    * `θ ≤ s_k`. For BM25 (contributions ≥ 0) the floors clamp to zero
+    * and the adjustment vanishes. The skip rule uses PLUS-truncated
+    * caps (`max(cap, 0)`), which keeps the incomplete-candidate drop
+    * safe for negative caps: whether a candidate's unseen term is
+    * absent from the doc or hiding in a skipped file, its exact score
+    * is provably < θ. All comparisons in micros-scaled integer math.
+    *
+    * `filterPost`: applied to every data-file read (probe and
     * survivor scans) BEFORE scoring — the tombstone-aware serves pass
     * the anti-join so pending deletes never reach θ or a score. */
   private def prunedServe(spark: SparkSession, storeDir: String,
                           live: Seq[String], k: Int, bs: Seq[BlockRow],
                           scoreOf: DataFrame => DataFrame,
-                          sharedTheta: Option[Long] = None,
                           filterPost: DataFrame => DataFrame = identity)
       : DataFrame = {
-    import spark.implicits._
-    def micros(d: java.math.BigDecimal): Long =
-      d.movePointRight(6).longValueExact()
-    // per-(file, w) caps + per-term floors, computed in-plan over ONE
-    // tiny collected frame (files×terms + terms rows; floor rows ride
-    // with a null file key — scoreOf is per-row arithmetic over the
-    // broadcast df frame, so unioning the inputs changes no value)
-    // and pulled back as exact micros longs
-    val capFloorRows = scoreOf(
-        (bs.map(r => (r.file, r.w, r.maxtf, r.mindl)) ++
-          bs.groupBy(_.w).map { case (w, rs) =>
-            (null: String, w, 1L, rs.map(_.maxdl).max) }.toSeq)
-        .toDF("file", "w", "tf", "dl"))
-      .select(col("file"), col("w"), col("c")).collect()
-    val caps = capFloorRows.filter(!_.isNullAt(0))
-      .map(r => (r.getString(0), r.getString(1), micros(r.getDecimal(2))))
-    val negAdjust = capFloorRows.filter(_.isNullAt(0))
-      .map(r => math.min(0L, micros(r.getDecimal(2)))).sum
-    val capPlus: Map[String, Long] = caps.groupBy(_._2)
-      .map { case (w, rs) => w -> math.max(rs.map(_._3).max, 0L) }
-    val totalPlus = capPlus.values.sum
-    val restPlus: Map[String, Long] =
-      capPlus.map { case (w, c) => w -> (totalPlus - c) }
-    val relevantFiles = caps.map(_._1).distinct.toSeq
-    // θ probe: each term's best-cap file (ties by file name for
-    // determinism); probe partials plus the floor adjustment lower-
-    // bound the k-th exact score — fewer than k docs means no pruning
-    val theta: Option[Long] = sharedTheta.orElse {
-      val probeFiles = capPlus.keys.map { w =>
-        caps.filter(_._2 == w).maxBy(t => (t._3, t._1))._1
-      }.toSeq.distinct.sorted
-      val thetaRows = scoreOf(filterPost(
-          spark.read.option("basePath", storeDir)
-            .parquet(probeFiles.map(f => s"$storeDir/$f"): _*)
-            .filter(col("w").isin(live: _*))))
-        .groupBy(col("doc_id")).agg(sum(col("c")).as("s"))
-        .orderBy(col("s").desc, col("doc_id")).limit(k)
-        .select(col("s")).collect()
-      if (thetaRows.length < k) None
+    val (Seq(caps), negAdjust) = capsAndFloor(spark, Seq(bs), scoreOf)
+    def scan(files: Seq[String]) = scoreOf(filterPost(
+      readKnownUnder(spark, storeDir, files).filter(col("w").isin(live: _*))))
+    // θ probe: probe partials plus the floor adjustment lower-bound
+    // the k-th exact score — fewer than k docs means no pruning
+    val thetaRows = scan(probeFilesOf(caps))
+      .groupBy(col("doc_id")).agg(sum(col("c")).as("s"))
+      .orderBy(col("s").desc, col("doc_id")).limit(k)
+      .select(col("s")).collect()
+    val theta = if (thetaRows.length < k) None
       else Some(micros(thetaRows.last.getDecimal(0)) + negAdjust)
-    }
-    // survivor rule (strict skip): keep f iff ∃w in f:
-    // max(cap(w,f),0) + restPlus(w) ≥ θ
-    val survivors = theta.fold(relevantFiles)(t =>
-      relevantFiles.filter(f => caps.exists(c =>
-        c._1 == f && math.max(c._3, 0L) + restPlus(c._2) >= t))).sorted
-    val skipped = relevantFiles.filterNot(survivors.toSet).sorted
-    // terms with postings left in a skipped file: a candidate UNSEEN
-    // for one of these is provably sub-θ whether the doc lacks the
-    // term or its posting hides in a skipped file — drop it without
-    // a second look (never a skipped-file read)
-    val outTerms = caps.filter(c => skipped.contains(c._1))
-      .map(_._2).distinct.toSeq
-    lastPruneStats = Some(PruneStats(relevantFiles.size,
-      survivors.size, skipped.size, theta, delegated = false))
-    // a LOCAL θ always keeps each term's best file, but a SHARED
-    // cross-shard θ can prove a whole weak shard sub-θ: the exact
-    // answer for this store is then empty
-    if (survivors.isEmpty) return emptyTopK(spark, storeDir)
-    val scored = scoreOf(filterPost(
-      spark.read.option("basePath", storeDir)
-        .parquet(survivors.map(f => s"$storeDir/$f"): _*)
-        .filter(col("w").isin(live: _*))))
-    val complete =
-      if (outTerms.isEmpty)
-        // nothing skipped can hide a posting: every candidate complete
-        scored.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_terms"), sum(col("c")).as("s"))
-      else
-        scored.groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_terms"), sum(col("c")).as("s"),
-            collect_set(col("w")).as("ws"))
-          .filter(size(array_except(typedLit(outTerms), col("ws"))) === 0)
-    complete
-      .select(col("doc_id"), col("n_terms"),
-        col("s").cast("double").as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
+    val p = pruneFiles(caps, theta)
+    lastPruneStats = Some(PruneStats(p.relevant.size, p.survivors.size,
+      p.skipped, theta, delegated = false))
+    completeTopK(scan(p.survivors).withColumn("_shard", lit(0)),
+      Seq(p.outTerms), k)
   }
 
   /** Block-max-pruned store-served BM25 — row-for-row identical to
@@ -4614,7 +4583,7 @@ object TextIndex {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
       return rank(spark, storeDir, terms, k, sc)
     }
-    val bs = readBlockRows(spark, storeDir, live)
+    val Seq(bs) = readBlockRows(spark, Seq(storeDir -> live))
     if (bs.isEmpty) return emptyTopK(spark, storeDir)
     // exact corpus statistic per term: the sidecar sum (zero data
     // files), minus the tombstoned postings when deletes are pending
@@ -4647,19 +4616,6 @@ object TextIndex {
                    mu: Double = 2000.0): DataFrame =
     rankPruned(spark, storeDir, terms, k, Lm(mu))
 
-  /** BATCHED block-max-pruned BM25 — [[topKPruned]] for a whole query
-    * FRAME, per-query rows bit-identical to [[topKBatch]] (hence to
-    * [[topK]]). The prune algebra runs DISTRIBUTED over the sidecar
-    * frame (per-query θ via a window rank over the shared probe read,
-    * per-(query, term) rest-mass via a query-partitioned window, the
-    * survivor union via one caps×queries join), so the only
-    * driver-held sets remain file lists and bucket ids — never
-    * queries or postings. Every file the UNION of queries needs is
-    * read once; a file skipped by EVERY query is never opened, and a
-    * candidate unseen for a term whose postings hide outside the
-    * union is provably sub-θ for its query (the single-serve theorem,
-    * applied per query against the union's complement). Pending
-    * tombstones delegate to [[topKBatch]]. */
   /** The batched prune prologue shared by the ranked batch serves:
     * explode + Bloom-drop the query frame, heal sidecar coverage,
     * and read the union terms' block rows. Left(empty frame) when no
@@ -4677,9 +4633,7 @@ object TextIndex {
       dropAbsentTermRows(spark, storeDir, exploded)
         .repartition(spark.sessionState.conf.numShufflePartitions))
     if (!nonEmpty)
-      return Left(spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score")))
+      return Left(emptyTopKBatch(spark))
     require(graft.sinks.HadoopSwap.exists(spark, blockmaxPath(storeDir)),
       s"$storeDir has no _blockmax sidecar — buildBlockStats() creates " +
         "it; the unpruned batch serves work without one")
@@ -4690,7 +4644,7 @@ object TextIndex {
     // dedupe by (file, w): racing serve-time heals can land duplicate
     // coverage rows between folds, and Σcnt over them would inflate df
     val bsDF = graft.sinks.SidecarFold.withReadRetry() {
-      spark.read.parquet(blockmaxPath(storeDir))
+      readKnown(spark, blockmaxPath(storeDir))
         .join(broadcast(termsF), Seq("w"))
         .join(broadcast(liveFiles.toDF("file")), Seq("file"), "left_semi")
         .dropDuplicates("file", "w")
@@ -4699,6 +4653,19 @@ object TextIndex {
     Right((qt, bsDF))
   }
 
+  /** BATCHED block-max-pruned BM25 — [[topKPruned]] for a whole query
+    * FRAME, per-query rows bit-identical to [[topKBatch]] (hence to
+    * [[topK]]). The prune algebra runs DISTRIBUTED over the sidecar
+    * frame (per-query θ via a window rank over the shared probe read,
+    * per-(query, term) rest-mass via a query-partitioned window, the
+    * survivor union via one caps×queries join), so the only
+    * driver-held sets remain file lists and bucket ids — never
+    * queries or postings. Every file the UNION of queries needs is
+    * read once; a file skipped by EVERY query is never opened, and a
+    * candidate unseen for a term whose postings hide outside the
+    * union is provably sub-θ for its query (the single-serve theorem,
+    * applied per query against the union's complement). Pending
+    * tombstones delegate to [[topKBatch]]. */
   def topKPrunedBatch(spark: SparkSession, storeDir: String,
                       queries: DataFrame, idCol: String, termsCol: String,
                       k: Int, k1: Double = 1.2,
@@ -4788,8 +4755,7 @@ object TextIndex {
         .partitionBy(col("query_id"))
         .orderBy(col("s").desc, col("doc_id"))
       scoreOf(
-          spark.read.option("basePath", storeDir)
-            .parquet(probeFiles.map(f => s"$storeDir/$f"): _*)
+          readKnownUnder(spark, storeDir, probeFiles)
             .join(broadcast(termsF), Seq("w")))
         .join(qt.select(col("query_id"), col("w")), Seq("w"))
         .groupBy(col("query_id"), col("doc_id"))
@@ -4815,9 +4781,7 @@ object TextIndex {
     lastPruneStats = Some(PruneStats(relevant.size, survivors.size,
       skipped.size, None, delegated = false))
     if (survivors.isEmpty) // every query provably sub-θ everywhere
-      return spark.range(0).select(col("id").as("query_id"),
-        col("id").as("doc_id"), col("id").as("n_terms"),
-        col("id").cast("double").as("score"))
+      return emptyTopKBatch(spark)
     // per-query unseen-mass terms: postings left OUTSIDE the union
     val outArr =
       if (skipped.isEmpty) null
@@ -4826,8 +4790,7 @@ object TextIndex {
         .join(qt.select(col("query_id"), col("w")), Seq("w"))
         .groupBy(col("query_id")).agg(collect_set(col("w")).as("outs"))
     val contrib = scoreOf(
-        spark.read.option("basePath", storeDir)
-          .parquet(survivors.map(f => s"$storeDir/$f"): _*)
+        readKnownUnder(spark, storeDir, survivors)
           .join(broadcast(termsF), Seq("w")))
       .select(col("w"), col("doc_id"), col("c"))
     val scored0 = contrib
@@ -4941,20 +4904,18 @@ object TextIndex {
       s"field stores must hold the same corpus (n per field: " +
         s"${stats.map { case (f, (nf, _, _)) => s"$f=$nf" }.mkString(", ")})")
     val n = ns.head
-    // per-field live terms + sidecar rows (zero data files so far)
-    val fr = fields.zip(stats).map {
-      case ((f, dir, boost, bf), (_, (_, sdlF, nbF))) =>
-        val live = readTermFilter(spark, dir)
-          .fold(distinct)(bits => presentTerms(spark, distinct, bits))
-        val bs = if (live.isEmpty) Seq.empty[BlockRow]
-          else readBlockRows(spark, dir, live)
+    // per-field live terms + sidecar rows in one read (zero data files
+    // so far)
+    val lives = fields.map { case (_, dir, _, _) => readTermFilter(spark, dir)
+      .fold(distinct)(bits => presentTerms(spark, distinct, bits)) }
+    val bss = readBlockRows(spark, fields.map(_._2).zip(lives))
+    val fr = fields.zip(stats).zip(lives.zip(bss)).map {
+      case (((f, dir, boost, bf), (_, (_, sdlF, nbF))), (live, bs)) =>
         (f, dir, boost, bf, sdlF, nbF, live, bs)
     }
     if (fr.forall(_._8.isEmpty))
       return spark.range(0).select(col("id").as("doc_id"),
         col("id").as("n_terms"), col("id").cast("double").as("score"))
-    def micros(d: java.math.BigDecimal): Long =
-      d.movePointRight(6).longValueExact()
     // the field's own wtfp expression — caps evaluate the SAME tree at
     // (maxtf, mindl), so bounds and served parts can never disagree on
     // rounding
@@ -4995,7 +4956,7 @@ object TextIndex {
     val dfParts = fr.collect {
       case (_, dir, _, _, _, nbF, live, _) if live.nonEmpty =>
         val buckets = bucketsOf(live, nbF)
-        spark.read.parquet(dir)
+        readKnown(spark, dir)
           .filter(col("tb").isin(buckets: _*))
           .filter(col("w").isin(live: _*))
           .select(col("doc_id"), col("w"))
@@ -5051,8 +5012,7 @@ object TextIndex {
     val probeParts = fr.collect {
       case (f, dir, boost, bf, sdlF, _, live, bs)
           if bs.nonEmpty && probeByField.contains(f) =>
-        spark.read.option("basePath", dir)
-          .parquet(probeByField(f).map(p => s"$dir/$p"): _*)
+        readKnownUnder(spark, dir, probeByField(f))
           .filter(col("w").isin(live: _*))
           .select(col("doc_id"), col("w"),
             wtfp(boost, bf, sdlF).as("wtfp"))
@@ -5094,8 +5054,7 @@ object TextIndex {
     val parts = fr.collect {
       case (f, dir, boost, bf, sdlF, _, live, bs)
           if bs.nonEmpty && survByField.contains(f) =>
-        spark.read.option("basePath", dir)
-          .parquet(survByField(f).map(p => s"$dir/$p"): _*)
+        readKnownUnder(spark, dir, survByField(f))
           .filter(col("w").isin(live: _*))
           .select(col("doc_id"), col("w"),
             wtfp(boost, bf, sdlF).as("wtfp"))
@@ -5168,10 +5127,7 @@ object TextIndex {
       .filter(col("w").isNotNull)
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .localCheckpoint()
-    def emptyBatch = spark.range(0).select(col("id").as("query_id"),
-      col("id").as("doc_id"), col("id").as("n_terms"),
-      col("id").cast("double").as("score"))
-    if (qt.limit(1).count() == 0L) return emptyBatch
+    if (qt.limit(1).count() == 0L) return emptyTopKBatch(spark)
     val termsF = qt.select(col("w")).distinct().localCheckpoint()
     def wtfp(boost: Double, bf: Double, sdlF: Long) =
       round(lit(boost) * col("tf") /
@@ -5185,7 +5141,7 @@ object TextIndex {
           .listDataFileRelPaths(spark, dir)
         graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(dir))
         val bsDF = graft.sinks.SidecarFold.withReadRetry() {
-          spark.read.parquet(blockmaxPath(dir))
+          readKnown(spark, blockmaxPath(dir))
             .join(broadcast(termsF), Seq("w"))
             .join(broadcast(liveFiles.toDF("file")), Seq("file"),
               "left_semi")
@@ -5194,7 +5150,7 @@ object TextIndex {
         }
         (f, dir, boost, bf, sdlF, nbF, bsDF)
     }
-    if (fr.forall(_._7.isEmpty)) return emptyBatch
+    if (fr.forall(_._7.isEmpty)) return emptyTopKBatch(spark)
     // exact ANY-FIELD df for the union terms — one shared cheap
     // (doc_id, w) pass, materialized so the final plan reuses it
     val frBuckets = collectStoreBuckets(spark,
@@ -5203,13 +5159,13 @@ object TextIndex {
       case ((_, dir, _, _, _, nbF, _), buckets) =>
       val wantedF = dropAbsentTermRows(spark, dir, termsF)
       if (buckets.isEmpty) None
-      else Some(spark.read.parquet(dir)
+      else Some(readKnown(spark, dir)
         .filter(col("tb").isin(buckets: _*))
         .drop("tb")
         .join(wantedF, Seq("w"))
         .select(col("doc_id"), col("w")))
     }
-    if (dfParts.isEmpty) return emptyBatch
+    if (dfParts.isEmpty) return emptyTopKBatch(spark)
     val dfT = broadcast(dfParts.reduce(_.unionByName(_))
       .groupBy(col("w")).agg(countDistinct(col("doc_id")).as("df"))
       .localCheckpoint())
@@ -5266,8 +5222,7 @@ object TextIndex {
         f -> rs.map(_._2).distinct.sorted.toSeq }
     val probeParts = fr.collect {
       case (f, dir, boost, bf, sdlF, _, _) if probeByField.contains(f) =>
-        spark.read.option("basePath", dir)
-          .parquet(probeByField(f).map(p => s"$dir/$p"): _*)
+        readKnownUnder(spark, dir, probeByField(f))
           .join(broadcast(termsF), Seq("w"))
           .select(col("doc_id"), col("w"),
             wtfp(boost, bf, sdlF).as("wtfp"))
@@ -5300,7 +5255,7 @@ object TextIndex {
     val skipped = relevant.toSet -- survivorsF.toSet
     lastPruneStats = Some(PruneStats(relevant.length, survivorsF.length,
       skipped.size, None, delegated = false))
-    if (survivorsF.isEmpty) return emptyBatch
+    if (survivorsF.isEmpty) return emptyTopKBatch(spark)
     val survByField = survivorsF.groupBy(_._1)
       .map { case (f, fs) => f -> fs.map(_._2).sorted.toSeq }
     // survivor-only scoring with the shared exact df — the unpruned
@@ -5308,8 +5263,7 @@ object TextIndex {
     // ORDER per query (computed under-counts stay sub-θ)
     val parts = fr.collect {
       case (f, dir, boost, bf, sdlF, _, _) if survByField.contains(f) =>
-        spark.read.option("basePath", dir)
-          .parquet(survByField(f).map(p => s"$dir/$p"): _*)
+        readKnownUnder(spark, dir, survByField(f))
           .join(broadcast(termsF), Seq("w"))
           .select(col("doc_id"), col("w"),
             wtfp(boost, bf, sdlF).as("wtfp"))

@@ -204,7 +204,7 @@ object SkippingStore {
     SidecarFold.restoreAside(spark, s"$dir/_zonemap_multi")
     require(pathExists(spark, s"$dir/_zonemap_multi"),
       s"$dir has no _zonemap_multi — build it with writeMulti first")
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     val statsCols = zm.select(col("col")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     val known = zm.select(col("file")).distinct()
@@ -251,7 +251,7 @@ object SkippingStore {
     SidecarFold.restoreAside(spark, s"$dir/_zonemap_multi")
     require(pathExists(spark, s"$dir/_zonemap_multi"),
       s"$dir has no _zonemap_multi — compact unindexed stores with StoreMaintenance.compact")
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     val statsCols = zm.select(col("col")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     val bloomGeom: Option[(String, Int, Int)] = {
@@ -302,7 +302,7 @@ object SkippingStore {
     * sidecar doesn't map throws rather than under-counting. */
   def metadataCount(spark: SparkSession, dir: String): Option[Long] = {
     if (!pathExists(spark, s"$dir/_zonemap_multi")) return None
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     if (!zm.columns.contains("nrows")) return None
     val perFile = zm.select(col("file"), col("nrows")).distinct()
       .collect()
@@ -321,7 +321,7 @@ object SkippingStore {
   def metadataNonNullCount(spark: SparkSession, dir: String,
                            statsCol: String): Option[Long] = {
     if (!pathExists(spark, s"$dir/_zonemap_multi")) return None
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     if (!zm.columns.contains("nnulls") || !zm.columns.contains("nrows"))
       return None
     val rows = zm.filter(col("col") === statsCol)
@@ -347,7 +347,7 @@ object SkippingStore {
   def nullFileNames(spark: SparkSession, dir: String, statsCol: String,
                     wantNull: Boolean): Option[Seq[String]] = {
     if (!pathExists(spark, s"$dir/_zonemap_multi")) return None
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     if (!zm.columns.contains("nnulls") || !zm.columns.contains("nrows"))
       return None
     val rows = zm.filter(col("col") === statsCol)
@@ -639,7 +639,7 @@ object SkippingStore {
         // file set — the sidecar is (files × cols)-sized by
         // construction, and two separate distinct+collect jobs were
         // pure fixed cost on every append
-        val fc = spark.read.parquet(side)
+        val fc = ParquetUpsert.readKnown(spark, side)
           .select(col("col"), col("file")).collect()
         val existing = fc.map(_.getString(0)).distinct.toSeq.sorted
         require(existing == statsCols.sorted,
@@ -910,7 +910,7 @@ object SkippingStore {
   private def loadMultiSidecarRows(spark: SparkSession, dir: String)
       : Option[(MultiSidecar, Set[String])] = {
     if (!pathExists(spark, s"$dir/_zonemap_multi")) return None
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     val cols = zm.columns.toSet
     def optD(r: org.apache.spark.sql.Row, c: String): Option[Double] =
       if (!cols(c) || r.isNullAt(r.fieldIndex(c))) None
@@ -1026,7 +1026,7 @@ object SkippingStore {
     val key = (dir, "meta", fp)
     val hit = sidecarCache.get(key)
     if (hit != null) return Some(hit.asInstanceOf[SidecarMeta])
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     val hasNull = zm.columns.contains("nrows") && zm.columns.contains("nnulls")
     val nullMissing =
       if (hasNull)
@@ -1194,7 +1194,7 @@ object SkippingStore {
     require(pathExists(spark, s"$dir/_zorder_meta"),
       s"$dir has no _zorder_meta — build it with writeZOrder first")
     val m = spark.read.parquet(s"$dir/_zorder_meta").collect().head
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     val statsCols = zm.select(col("col")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
     val known = zm.select(col("file")).distinct()
@@ -1227,7 +1227,7 @@ object SkippingStore {
                               statsCol: String, zonePred: Column,
                               residual: DataFrame => DataFrame)
       : (Long, Long, DataFrame) = {
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi").cache()
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi").cache()
     try {
       val mapped = zm.select(col("file")).distinct()
         .collect().map(_.getString(0)).toSet
@@ -1256,7 +1256,7 @@ object SkippingStore {
   def pruneFileNames(spark: SparkSession, dir: String, statsCol: String,
                      lo: Option[Any], hi: Option[Any]): Option[Seq[String]] = {
     if (!pathExists(spark, s"$dir/_zonemap_multi")) return None
-    val zm = spark.read.parquet(s"$dir/_zonemap_multi")
+    val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
     val mapped = zm.select(col("file")).distinct()
       .collect().map(_.getString(0)).toSet
     checkCoverage(listDataFileNames(spark, dir).toSet, mapped, dir)
