@@ -164,6 +164,7 @@ object TextIndex {
     // prefixed-then-renamed so readers never see a torn file — the
     // same crash discipline as Spark's committer. Any failure falls
     // back to the original Spark write.
+    val before = graft.sinks.SidecarFold.listing(spark, statsPath(dir))
     val direct = statsDriverWriteEnabled &&
       (try { writeStatsRowDirect(spark, dir, bid, n, sdl, nBuckets,
           tfBits, dfSketch); true }
@@ -176,9 +177,17 @@ object TextIndex {
           lit(null).cast("array<bigint>"))(a => typedLit(a.toSeq)))
         .coalesce(1).write.mode("append").parquet(statsPath(dir))
     }
-    // the listing signature invalidates the snapshot memo anyway; the
-    // explicit drop just spares the next reader the stale-hit compare
-    statsSnapshotMemo.remove(dir)
+    // write-through: when the sidecar grew by exactly the file the
+    // driver just wrote, the memo of the pre-write state absorbs the
+    // row and the next serve collects nothing; any other listing (a
+    // foreign writer, a fold, the Spark-write fallback) invalidates
+    val hit = statsSnapshotMemo.get(dir)
+    val after = graft.sinks.SidecarFold.listing(spark, statsPath(dir))
+    if (direct && hit != null && hit.sig == sigOf(before) &&
+        after.exists(graft.sinks.SidecarFold.grewBy(before.getOrElse(Nil), _, 1)))
+      statsSnapshotMemo.put(dir,
+        hit.plus(sigOf(after), bid, n, sdl, nBuckets, tfBits, dfSketch))
+    else statsSnapshotMemo.remove(dir)
     ()
   }
 
@@ -358,7 +367,22 @@ object TextIndex {
     * ~144 KiB per store, not rows × arrays. */
   private final case class StatsSnapshot(sig: String, nbs: Seq[Int],
     n: Long, sdl: Long, maxBid: Long, bits: Option[Array[Long]],
-    sketch: Option[Array[Long]])
+    sketch: Option[Array[Long]]) {
+    /** This snapshot with one more row, under listing signature `sig2`
+      * — what [[statsSnapshot]] reduces the grown sidecar to: sums add,
+      * bids max, bitsets OR (a foreign-geometry row voids them) and
+      * sketches of the frozen geometry add. */
+    def plus(sig2: String, bid: Long, n1: Long, sdl1: Long, nb: Int,
+             tfBits: Array[Long], dfSketch: Option[Array[Long]])
+        : StatsSnapshot =
+      StatsSnapshot(sig2, (nbs :+ nb).distinct, n + n1, sdl + sdl1,
+        math.max(maxBid, bid),
+        bits.filter(_.length == tfBits.length)
+          .map(a => Array.tabulate(a.length)(j => a(j) | tfBits(j))),
+        dfSketch.filter(_.length == DfSketchW * DfSketchD).fold(sketch)(d =>
+          Some(sketch.fold(d.clone)(a =>
+            Array.tabulate(a.length)(j => a(j) + d(j))))))
+  }
 
   /** Snapshot memo keyed by store dir, VALIDATED per call against the
     * sidecar's live file listing (name, length, mtime — any append,
@@ -373,16 +397,15 @@ object TextIndex {
     new java.util.concurrent.ConcurrentHashMap[String, StatsSnapshot]()
 
   /** A directory's state signature: its file listing with lengths and
-    * mtimes. A filesystem metadata call — never a Spark job. Any
-    * append, fold, swap, or external writer changes it. */
-  private def dirListingSig(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) "absent"
-    else fs.listStatus(p).map(s =>
-        s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-  }
+    * mtimes ([[graft.sinks.SidecarFold.listing]]). A filesystem
+    * metadata call — never a Spark job. Any append, fold, swap, or
+    * external writer changes it. */
+  private def dirListingSig(spark: SparkSession, path: String): String =
+    sigOf(graft.sinks.SidecarFold.listing(spark, path))
+
+  private def sigOf(l: Option[Seq[graft.sinks.SidecarFold.Entry]]): String =
+    l.fold("absent")(_.map { case (name, len, mtime) =>
+      s"$name:$len:$mtime" }.sorted.mkString("|"))
 
   private def statsSidecarSig(spark: SparkSession, dir: String): String =
     dirListingSig(spark, statsPath(dir))
@@ -730,40 +753,78 @@ object TextIndex {
     docs.filter(col(textCol).isNull)
       .select(col(idCol).as("doc_id"), lit(null).cast("long").as("dl"))
 
-  /** Collapsed `_tombstones` aggregates — the deduped set's size and
-    * Σdl, memoized per sidecar STATE ([[statsSnapshotMemo]]'s
-    * listing-validated idiom): [[readStats]] ran a count+sum Spark job
-    * over the tombstones on EVERY call on a tombstoned store, and each
-    * pruned serve ran its own `count()` just to decide delegation —
-    * pure repetition between deletes. (0, 0) when the store has none
-    * (no job — existence is a filesystem call). Any delete, fold, or
-    * compaction changes the listing and forces a re-read; never a
-    * cached answer. */
-  private[graft] final case class TombSnapshot(sig: String, n: Long, sdl: Long)
+  /** Collapsed `_tombstones` content — the deduped set's size and
+    * Σdl and, when there are at most [[tombstoneInLiteralMaxIds]] of
+    * them, the deduped doc ids themselves (nulls dropped: an equi-join
+    * never matches a null id), memoized per sidecar STATE
+    * ([[statsSnapshotMemo]]'s listing-validated idiom). With the ids
+    * held on the driver, masking a read is a literal filter
+    * ([[maskTombstones]]) and neither the serves nor [[delete]] /
+    * [[append]]'s checks read the sidecar at all; past the bound `ids`
+    * is None and they anti-join the sidecar frame. (0, 0) when the
+    * store has none (no job — existence is a filesystem call). Any
+    * delete, fold, or compaction changes the listing and forces a
+    * re-read, unless [[delete]] wrote the change through. */
+  private[graft] final case class TombSnapshot(sig: String, n: Long,
+                                               sdl: Long,
+                                               ids: Option[Seq[Any]]) {
+    /** This snapshot plus deduped rows `(doc_id, dl)` of docs it does
+      * not hold, under listing signature `sig2`. */
+    def plus(sig2: String, rows: Seq[Row]): TombSnapshot = {
+      val n2 = n + rows.size
+      TombSnapshot(sig2, n2, sdl + rows.flatMap(dlOf).sum,
+        ids.filter(_ => n2 <= tombstoneInLiteralMaxIds)
+          .map(_ ++ rows.map(_.get(0)).filter(_ != null)))
+    }
+  }
   private val tombSnapshotMemo =
     new java.util.concurrent.ConcurrentHashMap[String, TombSnapshot]()
+
+  private def dlOf(r: Row): Option[Long] =
+    Option(r.get(1)).map(_.asInstanceOf[Number].longValue)
+
+  /** The snapshot of raw tombstone rows `(doc_id, dl)` through the
+    * read-side dedup: one doc per id with its max dl (a null dl — a
+    * null-text doc — contributes nothing to Σdl). */
+  private def tombSnapshotOf(sig: String, rows: Seq[Row]): TombSnapshot = {
+    val docs = rows.groupMapReduce(_.get(0))(dlOf)((a, b) =>
+      (a ++ b).maxOption)
+    TombSnapshot(sig, docs.size, docs.values.flatten.sum,
+      Option.when(docs.size <= tombstoneInLiteralMaxIds)(
+        docs.keys.filter(_ != null).toSeq))
+  }
+
+  /** Every row of `df` in ONE job when no partition holds more than
+    * `cap` rows (driver memory stays partitions × cap rows); None
+    * otherwise, and the caller takes its frame path. */
+  private def collectBounded(df: DataFrame, cap: Int): Option[Seq[Row]] = {
+    val parts = df.rdd.mapPartitions(it => Iterator(it.take(cap + 1).toArray))
+      .collect()
+    Option.when(parts.forall(_.length <= cap))(parts.toSeq.flatten)
+  }
 
   private[graft] def tombSnapshot(spark: SparkSession,
                            dir: String): TombSnapshot = {
     // fold-crash heal first, like every tombstone reader
     graft.sinks.SidecarFold.restoreAside(spark, tombPath(dir))
-    val sig = dirListingSig(spark, tombPath(dir))
+    val listing = graft.sinks.SidecarFold.listing(spark, tombPath(dir))
+    val sig = sigOf(listing)
     val hit = tombSnapshotMemo.get(dir)
     if (hit != null && hit.sig == sig) return hit
     val snap =
-      if (!graft.sinks.HadoopSwap.exists(spark, tombPath(dir)))
-        TombSnapshot(sig, 0L, 0L)
-      else {
-        // the same dedup-then-aggregate the per-call job ran: count
-        // and Σdl of the per-doc max(dl) rows (null dl — null-text
-        // docs — contributes nothing to the sum, matching readStats)
-        val t = graft.sinks.SidecarFold.withReadRetry() {
-          readKnown(spark, tombPath(dir))
-            .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
-            .agg(count(lit(1)), sum(col("dl"))).head()
-        }
-        TombSnapshot(sig, t.getLong(0),
-          if (t.isNullAt(1)) 0L else t.getLong(1))
+      if (listing.isEmpty) TombSnapshot(sig, 0L, 0L, Some(Nil))
+      else graft.sinks.SidecarFold.withReadRetry() {
+        val tomb = readKnown(spark, tombPath(dir))
+        collectBounded(tomb.select(col("doc_id"), col("dl")),
+            tombstoneInLiteralMaxIds)
+          .map(tombSnapshotOf(sig, _))
+          .getOrElse {
+            // a set past the literal bound: its aggregates only
+            val t = tomb.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
+              .agg(count(lit(1)), sum(col("dl"))).head()
+            TombSnapshot(sig, t.getLong(0),
+              if (t.isNullAt(1)) 0L else t.getLong(1), None)
+          }
       }
     if (tombSnapshotMemo.size > 64) tombSnapshotMemo.clear()
     tombSnapshotMemo.put(dir, snap)
@@ -791,13 +852,29 @@ object TextIndex {
       .groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
   }
 
-  /** Anti-join `post` against the store's tombstones (no-op when none
-    * exist). The tombstone side is deleted-docs-sized — AQE broadcasts
-    * it in the dimension direction; the postings side streams. */
+  /** `post` minus the store's tombstoned docs (no-op when none exist). */
   private def minusTombstones(spark: SparkSession, dir: String,
                               post: DataFrame): DataFrame =
-    readTombstones(spark, dir).fold(post)(tb =>
-      post.join(tb.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    maskTombstones(spark, dir, tombSnapshot(spark, dir), post)
+
+  /** `post` minus the docs of snapshot `ts`: with the ids on the driver
+    * a null-safe NOT IN filter, which keeps exactly the rows a
+    * `left_anti` join on doc_id keeps (a null doc_id matches no
+    * tombstone) and reads no sidecar; past the literal bound the
+    * anti-join against the sidecar — deleted-docs-sized, so AQE
+    * broadcasts it and the postings side streams. */
+  private def maskTombstones(spark: SparkSession, dir: String,
+                             ts: TombSnapshot,
+                             post: DataFrame): DataFrame =
+    ts.ids match {
+      case _ if ts.n == 0L => post
+      case Some(ids) =>
+        if (ids.isEmpty) post
+        else post.filter(col("doc_id").isNull || !col("doc_id").isin(ids: _*))
+      case None =>
+        readTombstones(spark, dir).fold(post)(tb =>
+          post.join(tb.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+    }
 
   /** The store's `(n, sdl, nbuckets)` — total docs, total tokens
     * (summed over every applied batch's row, MINUS the tombstoned
@@ -849,24 +926,37 @@ object TextIndex {
     require(graft.sinks.HadoopSwap.exists(spark, doclenPath(storeDir)),
       s"$storeDir predates delete support (no _doclen sidecar) — " +
         "compact() materializes it for bag-of-terms stores")
+    import graft.sinks.SidecarFold
     val want = ids.select(col(idCol).as("doc_id")).distinct()
     val dl = readDoclen(spark, storeDir).get
-    val doomed0 = dl.join(want, Seq("doc_id"), "left_semi")
-    val doomed = readTombstones(spark, storeDir)
-      .fold(doomed0)(tb =>
-        doomed0.join(tb.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-      .persist()
+    val ts = tombSnapshot(spark, storeDir)
+    val doomed = maskTombstones(spark, storeDir, ts,
+      dl.join(want, Seq("doc_id"), "left_semi")).persist()
     try {
-      val nDel = doomed.count()
+      // the doomed rows themselves, collected where the count ran; a
+      // delete too big to hold counts instead
+      val rows = collectBounded(doomed, tombstoneInLiteralMaxIds)
+      val nDel = rows.fold(doomed.count())(_.size.toLong)
       if (nDel > 0L) {
-        doomed.coalesce(1).write.mode("append").parquet(tombPath(storeDir))
+        val side = tombPath(storeDir)
+        val before = SidecarFold.listing(spark, side)
+        doomed.coalesce(1).write.mode("append").parquet(side)
         // fold-on-threshold: serves anti-join this sidecar on every
         // query — thousands of one-file deletes must not become a
         // thousand-file listing+merge. The fold rewrites through the
         // read-side dedup (same rows, same answers).
-        graft.sinks.SidecarFold.foldIfDecayed(spark, tombPath(storeDir),
-          SidecarFoldThreshold)(
+        SidecarFold.foldIfDecayed(spark, side, SidecarFoldThreshold)(
           _.groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
+        // write-through: the rows are new ids by construction (masked by
+        // `ts`), so when the sidecar grew by exactly this call's file the
+        // snapshot absorbs them and the next serve reads nothing
+        val after = SidecarFold.listing(spark, side)
+        (rows, after) match {
+          case (Some(rs), Some(a)) if ts.sig == sigOf(before) &&
+              SidecarFold.grewBy(before.getOrElse(Nil), a, 1) =>
+            tombSnapshotMemo.put(storeDir, ts.plus(sigOf(after), rs))
+          case _ => tombSnapshotMemo.remove(storeDir)
+        }
       }
       nDel
     } finally doomed.unpersist()
@@ -969,21 +1059,28 @@ object TextIndex {
   }
 
   /** A batch that re-uses a TOMBSTONED id would be silently shadowed
-    * by the pending tombstone (the serve-side anti-join masks the
-    * doc_id, old postings and new alike) — fail loud instead. The
-    * check is batch × tombstone-set, broadcast-sized, and skipped
-    * entirely on stores with no tombstones. Resurrection path:
-    * [[compact]] (purges the tombstones) then append. */
+    * by the pending tombstone (the serve-side mask hides the doc_id,
+    * old postings and new alike) — fail loud instead. The check is the
+    * batch's ids against the snapshot's (a literal filter; a driver-held
+    * batch runs no job), against the sidecar past the literal bound,
+    * and skipped entirely on stores with no tombstones. Resurrection
+    * path: [[compact]] (purges the tombstones) then append. */
   private def requireNoTombstoneClash(newDocs: DataFrame, idCol: String,
-                                      storeDir: String): Unit =
-    readTombstones(newDocs.sparkSession, storeDir).foreach { tb =>
-      val clash = newDocs.select(col(idCol).as("doc_id"))
-        .join(tb.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .limit(1).count()
-      require(clash == 0L,
+                                      storeDir: String): Unit = {
+    val spark = newDocs.sparkSession
+    val ts = tombSnapshot(spark, storeDir)
+    if (ts.n > 0L) {
+      val batch = newDocs.select(col(idCol).as("doc_id"))
+      val clash = ts.ids match {
+        case Some(ids) => batch.filter(col("doc_id").isin(ids: _*))
+        case None => readTombstones(spark, storeDir).fold(batch.limit(0))(tb =>
+          batch.join(tb.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+      }
+      require(clash.isEmpty,
         s"$storeDir: batch re-appends tombstoned doc ids — a pending " +
           "tombstone would mask the new rows; compact() first")
     }
+  }
 
   /** Streaming replay-heal ([[graft.streaming.StreamingMerge]]): batch
     * `batchId`'s DATA is in the store (the `_applied_batch` gate said
@@ -1058,7 +1155,15 @@ object TextIndex {
     * w ranges — append files span each batch's whole term range, so
     * their zones are wide and the zone rule can't skip them; after
     * compaction single-term serves are back to ~1/filesPerBucket of
-    * their bucket. Returns (filesBefore, filesAfter). */
+    * their bucket. Returns (filesBefore, filesAfter).
+    *
+    * The purge and the stats subtraction come from ONE tombstone
+    * snapshot taken at entry: its ids mask the rewrite and `_doclen`,
+    * and its (count, Σdl) is the adjustment row. Past
+    * [[tombstoneInLiteralMaxIds]] the mask anti-joins the sidecar as
+    * it stands when the rewrite runs, so compaction is single-writer
+    * like every store maintenance op: no [[delete]] may run on the
+    * store until it returns. */
   def compact(spark: SparkSession, storeDir: String,
               filesPerBucket: Int = 1): (Int, Int) = {
     require(filesPerBucket >= 1, "need at least one file per bucket")
@@ -1069,15 +1174,14 @@ object TextIndex {
     val aside = storeDir + "_compact_old"
     HadoopSwap.deleteRecursive(spark, tmp)
     HadoopSwap.deleteRecursive(spark, aside)
-    // mergeSchema: batch-API files carry no _applied_batch column while
-    // streaming-ingested files do — the rewrite must preserve every
-    // marker (null for batch rows) or compaction would reset the gate.
-    // Tombstoned docs are PURGED here (left_anti against the deduped
-    // tombstone set): compaction is the delete lifecycle's physical
-    // arm, and the swap below makes purge + tombstone-clear atomic.
-    val tomb = readTombstones(spark, storeDir)
-    minusTombstones(spark, storeDir,
-        spark.read.option("mergeSchema", "true").parquet(storeDir))
+    // merged schema: batch-API files carry no _applied_batch column
+    // while streaming-ingested files do — the rewrite must preserve
+    // every marker (null for batch rows) or compaction would reset the
+    // gate. Tombstoned docs are PURGED here: compaction is the delete
+    // lifecycle's physical arm, and the swap below makes purge +
+    // tombstone-clear atomic.
+    val ts = tombSnapshot(spark, storeDir)
+    maskTombstones(spark, storeDir, ts, readKnownMerged(spark, storeDir))
       .repartitionByRange(nb * filesPerBucket, col("tb"), col("w"))
       .sortWithinPartitions(col("tb"), col("w"), col("doc_id"))
       .write.partitionBy("tb").mode("overwrite").parquet(tmp)
@@ -1091,22 +1195,16 @@ object TextIndex {
     // answers identically on both sides of the swap.
     readKnown(spark, statsPath(storeDir))
       .coalesce(1).write.mode("overwrite").parquet(statsPath(tmp))
-    tomb.foreach { _ =>
-      // the deduped set's (count, Σdl) from the listing-validated
-      // snapshot — the same aggregate the per-call job ran
-      val ts = tombSnapshot(spark, storeDir)
-      if (ts.n > 0L)
-        appendStatsRow(spark, tmp, -1L, -ts.n, -ts.sdl, nb,
-          new Array[Long](TermFilterBits / 64))
-    }
+    if (ts.n > 0L)
+      appendStatsRow(spark, tmp, -1L, -ts.n, -ts.sdl, nb,
+        new Array[Long](TermFilterBits / 64))
     // `_doclen` carries over MINUS the purged docs (so a later delete
     // still prices removals exactly); a bag-of-terms store that
     // predates the sidecar materializes it here from the rewritten
     // postings — every doc has at least one posting row under the
     // unfiltered tokenizer, so the rebuild covers the corpus.
     val dlNext = readDoclen(spark, storeDir)
-      .map(dl => tomb.fold(dl)(tb =>
-        dl.join(tb.select(col("doc_id")), Seq("doc_id"), "left_anti")))
+      .map(maskTombstones(spark, storeDir, ts, _))
       .orElse(if (isPositional(spark, storeDir)) None
         else Some(readKnown(spark, tmp)
           .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))))
@@ -2574,8 +2672,7 @@ object TextIndex {
     * [[appendPositional]] extends it from the batch alone. */
   def buildVocab(spark: SparkSession, storeDir: String): Unit = {
     val v = minusTombstones(spark, storeDir,
-        spark.read.option("mergeSchema", "true").parquet(storeDir)
-          .select(col("doc_id"), col("w")))
+        readKnownMerged(spark, storeDir).select(col("doc_id"), col("w")))
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
       .select(lit(statsBidHwm(spark, storeDir)).as("bid"),
         col("w"), col("df"), reverse(col("w")).as("rw"))
@@ -3461,7 +3558,7 @@ object TextIndex {
     // negative, so the shared θ carries Σ min(0, floor(w)) evaluated at
     // the per-term max maxdl across EVERY shard's sidecar — more
     // negative than any shard-local floor, hence safe for each
-    val (caps, negAdjust) = capsAndFloor(spark, bss, scoreOf)
+    val (caps, negAdjust) = capsAndFloor(spark, bss, sc, statMap, n, sdl)
     // `files(i)` of shard i, every shard in ONE tagged union plan
     def scan(files: Seq[Seq[String]]) = scoreOf(files.zipWithIndex.collect {
       case (fs, i) if fs.nonEmpty =>
@@ -4298,21 +4395,18 @@ object TextIndex {
     * for the live terms; absent keys mean no tombstoned postings. */
   private def tombstoneTermAdjust(spark: SparkSession, storeDir: String,
                                   live: Seq[String], nb: Int,
-                                  tomb: DataFrame)
+                                  ts: TombSnapshot)
       : Map[String, (Long, Long)] = {
-    import spark.implicits._
     val buckets = bucketsOf(live, nb)
     val matching = readKnown(spark, storeDir)
       .filter(col("tb").isin(buckets: _*))
       .filter(col("w").isin(live: _*))
-    val ids = tomb.select(col("doc_id")).limit(
-        tombstoneInLiteralMaxIds + 1).collect().map(_.get(0)).toSeq
-    val doomedPosts =
-      if (ids.size <= tombstoneInLiteralMaxIds)
-        matching.filter(col("doc_id").isin(ids: _*))
-      else
-        matching.join(broadcast(tomb.select(col("doc_id"))),
-          Seq("doc_id"), "left_semi")
+    val doomedPosts = ts.ids match {
+      case Some(ids) => matching.filter(col("doc_id").isin(ids: _*))
+      case None => readTombstones(spark, storeDir).fold(matching.limit(0))(
+        tb => matching.join(broadcast(tb.select(col("doc_id"))),
+          Seq("doc_id"), "left_semi"))
+    }
     doomedPosts
       .groupBy(col("w"))
       .agg(count(lit(1)).as("tdf"), sum(col("tf")).cast("long").as("tctf"))
@@ -4351,9 +4445,9 @@ object TextIndex {
 
   /** Read each store's sidecar rows for its `live` terms — every
     * store in ONE collected read — drop rows of files a selective
-    * compaction replaced, and dedupe by (file, w): racing serve-time
-    * heals can land duplicate coverage rows between folds, and summing
-    * cnt over duplicates would inflate df. A store with no live term
+    * compaction replaced, and dedupe by (file, w) on the driver: racing
+    * serve-time heals can land duplicate coverage rows between folds,
+    * and summing cnt over duplicates would inflate df. A store with no live term
     * reads nothing and gets no rows. Coverage must already be ensured
     * by the caller ([[tryEnsureBlockCoverage]]). */
   private def readBlockRows(spark: SparkSession,
@@ -4379,11 +4473,11 @@ object TextIndex {
           .filter(col("w").isin(live: _*))
           .select(lit(i).as("_shard"), col("file"), col("w"), col("cnt"),
             col("maxtf"), col("mindl"), col("maxdl"), col("sumtf"))
-      }.reduce(_.unionByName(_)).dropDuplicates("_shard", "file", "w")
-        .collect()
+      }.reduce(_.unionByName(_)).collect()
     }.map(r => r.getInt(0) -> BlockRow(r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
-      .filter { case (i, t) => liveFiles(i)(t.file) }.groupBy(_._1)
+      .filter { case (i, t) => liveFiles(i)(t.file) }
+      .distinctBy { case (i, t) => (i, t.file, t.w) }.groupBy(_._1)
     stores.indices.map(i =>
       rows.get(i).fold(Seq.empty[BlockRow])(_.map(_._2).toSeq))
   }
@@ -4392,23 +4486,26 @@ object TextIndex {
   private def micros(d: java.math.BigDecimal): Long =
     d.movePointRight(6).longValueExact()
 
-  /** Each store's per-(file, w) caps — `scoreOf` at (maxtf, mindl),
-    * an upper bound for any scorer increasing in tf and decreasing in
-    * dl — and the floor adjustment `Σ_w min(0, floor(w))`, the floor
-    * being `scoreOf` at (1, the max maxdl of w over EVERY store). All
-    * in ONE tiny collected frame: floor rows ride with store -1 and a
-    * null file, and scoreOf is per-row arithmetic over the broadcast
-    * statistic, so the union changes no value. Caps come back as
-    * (file, w, micros) per store. */
+  /** Each store's per-(file, w) caps — the contribution at (maxtf,
+    * mindl), an upper bound for any scorer increasing in tf and
+    * decreasing in dl — and the floor adjustment `Σ_w min(0, floor(w))`,
+    * the floor being the contribution at (1, the max maxdl of w over
+    * EVERY store). All in ONE tiny frame: floor rows ride with store -1
+    * and a null file, and each row carries its term's statistic `stat`,
+    * so [[Scorer.contribution]] — the tree the serve scores postings
+    * with — is per-row arithmetic over driver-held values, which
+    * Catalyst folds into a local relation: no job runs. Caps come back
+    * as (file, w, micros) per store. */
   private def capsAndFloor(spark: SparkSession, bss: Seq[Seq[BlockRow]],
-                           scoreOf: DataFrame => DataFrame)
+                           sc: Scorer, stat: Map[String, Long], n: Long,
+                           sdl: Long)
       : (Seq[Seq[(String, String, Long)]], Long) = {
     import spark.implicits._
-    val rows = scoreOf((bss.zipWithIndex.flatMap { case (bs, i) =>
-          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl)) } ++
+    val rows = sc.contribution((bss.zipWithIndex.flatMap { case (bs, i) =>
+          bs.map(r => (i, r.file, r.w, r.maxtf, r.mindl, stat(r.w))) } ++
         bss.flatten.groupBy(_.w).map { case (w, rs) =>
-          (-1, (null: String), w, 1L, rs.map(_.maxdl).max) })
-        .toDF("_shard", "file", "w", "tf", "dl"))
+          (-1, (null: String), w, 1L, rs.map(_.maxdl).max, stat(w)) })
+        .toDF("_shard", "file", "w", "tf", "dl", sc.stat), n, sdl)
       .select(col("_shard"), col("file"), col("w"), col("c")).collect()
     val negAdjust = rows.filter(_.getInt(0) < 0)
       .map(r => math.min(0L, micros(r.getDecimal(3)))).sum
@@ -4490,10 +4587,16 @@ object TextIndex {
     * the anti-join so pending deletes never reach θ or a score. */
   private def prunedServe(spark: SparkSession, storeDir: String,
                           live: Seq[String], k: Int, bs: Seq[BlockRow],
-                          scoreOf: DataFrame => DataFrame,
+                          sc: Scorer, stat: Map[String, Long], n: Long,
+                          sdl: Long,
                           filterPost: DataFrame => DataFrame = identity)
       : DataFrame = {
-    val (Seq(caps), negAdjust) = capsAndFloor(spark, Seq(bs), scoreOf)
+    import spark.implicits._
+    val (Seq(caps), negAdjust) = capsAndFloor(spark, Seq(bs), sc, stat, n, sdl)
+    // the unpruned serve's scoring expressions — caps evaluate the SAME
+    // tree at (maxtf, mindl), so monotone-rounded bounds and served
+    // contributions can never disagree on rounding
+    val scoreOf = sc.score(broadcast(stat.toSeq.toDF("w", sc.stat)), n, sdl) _
     def scan(files: Seq[String]) = scoreOf(filterPost(
       readKnownUnder(spark, storeDir, files).filter(col("w").isin(live: _*))))
     // θ probe: probe partials plus the floor adjustment lower-bound
@@ -4554,8 +4657,8 @@ object TextIndex {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
       return rank(spark, storeDir, terms, k, sc)
     }
-    val tomb = readTombstones(spark, storeDir)
-    if (tombstoneCount(spark, storeDir) > tombstonePruneMaxIds) {
+    val ts = tombSnapshot(spark, storeDir)
+    if (ts.n > tombstonePruneMaxIds) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
       return rank(spark, storeDir, terms, k, sc)
     }
@@ -4587,20 +4690,14 @@ object TextIndex {
     if (bs.isEmpty) return emptyTopK(spark, storeDir)
     // exact corpus statistic per term: the sidecar sum (zero data
     // files), minus the tombstoned postings when deletes are pending
-    val tadj: Map[String, (Long, Long)] = tomb
-      .filter(_ => tombstoneCount(spark, storeDir) > 0L)
-      .fold(Map.empty[String, (Long, Long)])(t =>
-        tombstoneTermAdjust(spark, storeDir, live, nb, t))
-    val statFrame = broadcast(bs.groupBy(_.w)
-      .map { case (w, rs) =>
-        w -> sc.prunedStat(rs.map(sc.sidecarStat).sum -
-          tadj.get(w).fold(0L)(sc.tombstoneStat)) }
-      .toSeq.toDF("w", sc.stat))
-    // the unpruned serve's scoring expressions — caps evaluate the SAME
-    // tree at (maxtf, mindl), so monotone-rounded bounds and served
-    // contributions can never disagree on rounding
-    prunedServe(spark, storeDir, live, k, bs, sc.score(statFrame, n, sdl),
-      filterPost = p => minusTombstones(spark, storeDir, p))
+    val tadj: Map[String, (Long, Long)] =
+      if (ts.n > 0L) tombstoneTermAdjust(spark, storeDir, live, nb, ts)
+      else Map.empty
+    val stat = bs.groupBy(_.w).map { case (w, rs) =>
+      w -> sc.prunedStat(rs.map(sc.sidecarStat).sum -
+        tadj.get(w).fold(0L)(sc.tombstoneStat)) }
+    prunedServe(spark, storeDir, live, k, bs, sc, stat, n, sdl,
+      filterPost = p => maskTombstones(spark, storeDir, ts, p))
   }
 
   /** Block-max-pruned Dirichlet LM ranking — row-for-row identical to

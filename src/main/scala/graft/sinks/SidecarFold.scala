@@ -112,6 +112,36 @@ object SidecarFold {
           "to proceed against a store whose only sidecar copy is an aside")
   }
 
+  /** One directory entry: name, length in bytes, modification time. */
+  type Entry = (String, Long, Long)
+
+  /** `dir`'s entries, or None when it does not exist — a filesystem
+    * metadata call, never a Spark job. Any append, fold, swap or
+    * foreign writer changes it, which is what makes it a sidecar's
+    * state key. */
+  def listing(spark: SparkSession, dir: String): Option[Seq[Entry]] = {
+    val fs = HadoopSwap.fs(spark, dir)
+    val p = new Path(dir)
+    if (!fs.exists(p)) None
+    else Some(fs.listStatus(p).toSeq.map(s =>
+      (s.getPath.getName, s.getLen, s.getModificationTime)))
+  }
+
+  /** The write-through guard: whether `after` is `before` plus exactly
+    * `wrote` new data files, every data entry of `before` unchanged.
+    * Only then may a writer hand the rows it just wrote to a memo of
+    * the pre-write state instead of letting the next reader re-read the
+    * whole sidecar. A foreign writer's file shows as one entry too many
+    * and a fold or swap as changed or missing entries; the caller then
+    * invalidates. Bookkeeping entries (`_SUCCESS`, dot-prefixed
+    * checksums and in-progress files) hold no rows and are ignored. */
+  def grewBy(before: Seq[Entry], after: Seq[Entry], wrote: Int): Boolean = {
+    def data(l: Seq[Entry]) =
+      l.filterNot(e => e._1.startsWith("_") || e._1.startsWith(".")).toSet
+    val (b, a) = (data(before), data(after))
+    b.subsetOf(a) && (a -- b).size == wrote
+  }
+
   /** Fold `side` when it holds more than `threshold` parquet files:
     * `rewrite` (the sidecar's own read-side dedup/aggregate — folding
     * through it is a no-op to every reader by construction) lands in
@@ -141,8 +171,10 @@ object SidecarFold {
       targetFileBytes - 1) / targetFileBytes).toInt
     val stamp = java.lang.System.nanoTime()
     val tmp = side + ".fold-" + stamp
-    rewrite(spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(side))
+    // the footer-derived schema when the files agree: no inference job
+    rewrite(ParquetUpsert.knownSchema(spark, Seq(side), merge = mergeSchema)
+        .fold(spark.read.option("mergeSchema", mergeSchema.toString))(
+          spark.read.schema).parquet(side))
       .coalesce(target).write.mode("overwrite").parquet(tmp)
     HadoopSwap.swapInto(spark, tmp, side, side + ".old-" + stamp)
     true

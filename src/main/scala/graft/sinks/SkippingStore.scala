@@ -632,28 +632,28 @@ object SkippingStore {
     // fold-crash heal: a zonemap parked under a fold aside would read
     // as "unindexed store" and trigger a needless full rebuild
     SidecarFold.restoreAside(spark, side)
-    val (known, cols) =
-      if (!pathExists(spark, side)) (Set.empty[String], statsCols.sorted)
-      else {
-        // ONE collect for both the indexed column set and the mapped
-        // file set — the sidecar is (files × cols)-sized by
-        // construction, and two separate distinct+collect jobs were
-        // pure fixed cost on every append
-        val fc = ParquetUpsert.readKnown(spark, side)
-          .select(col("col"), col("file")).collect()
-        val existing = fc.map(_.getString(0)).distinct.toSeq.sorted
+    // cache entries are keyed the way the zone-prune rule reads them
+    val qdir = Constraints.qualified(spark, dir)
+    val before = SidecarFold.listing(spark, side)
+    // the indexed column set and the mapped file set from the
+    // cross-query cache: a sidecar state this process has already seen
+    // (its own last extension included) costs no job, and a miss is the
+    // one sidecar-sized collect that also warms the cache for serves
+    val prior = before.flatMap(l => zoneRowsCached(spark, qdir, fingerprintOf(l)))
+    val (known, cols) = prior.fold((Set.empty[String], statsCols.sorted)) {
+      case (sc, mapped) =>
+        val existing = sc.byCol.keys.toSeq.sorted
         require(existing == statsCols.sorted,
           s"$side already indexes ${existing.mkString(",")} — " +
             "extend with the same column set or rebuild")
-        (fc.map(_.getString(1)).toSet, existing)
-      }
+        (mapped, existing)
+    }
     val newFiles = listDataFileRelPaths(spark, dir).filterNot(known)
     if (newFiles.isEmpty) return
-    footerZoneRows(spark, dir, newFiles, cols) match {
-      case Some(rows) =>
-        rows.coalesce(1)
-          .write.mode(if (known.isEmpty) "overwrite" else "append")
-          .parquet(side)
+    val mode = if (known.isEmpty) "overwrite" else "append"
+    val footerRows = footerZoneRows(spark, dir, newFiles, cols)
+    footerRows match {
+      case Some(rows) => rows.coalesce(1).write.mode(mode).parquet(side)
       case None =>
         // leaf-file read: data columns only, which is exactly what
         // rider stats need; the trailing-segments regexp recovers the
@@ -662,15 +662,33 @@ object SkippingStore {
         multiZoneRows(data, cols,
             regexp_extract(input_file_name(),
               "((?:[^/]+=[^/]*/)*[^/]+)$", 1))
-          .coalesce(1)
-          .write.mode(if (known.isEmpty) "overwrite" else "append")
-          .parquet(side)
+          .coalesce(1).write.mode(mode).parquet(side)
     }
     // one appended zonemap file per ingest — fold on the same
     // threshold as the tombstone/doclen sidecars so a long-appended
     // store's EVERY zone-pruned serve keeps a bounded sidecar read
     // (rows are unique per (file, col); the fold just re-packs files)
     SidecarFold.foldIfDecayed(spark, side, 64)(identity)
+    // write-through: the footer rows are driver-held (a local relation,
+    // so collecting them runs no job); when the sidecar grew by exactly
+    // this call's file and reads back with their columns, the cache
+    // holds the post-write state and the next serve reads nothing
+    for {
+      rows <- footerRows
+      after <- SidecarFold.listing(spark, side)
+      if SidecarFold.grewBy(before.getOrElse(Nil), after, 1) &&
+        ParquetUpsert.knownSchema(spark, Seq(side))
+          .exists(_.fieldNames.toSet == rows.columns.toSet)
+    } {
+      val (sc, mapped) = multiSidecarOf(rows.collect().toSeq, rows.columns.toSet)
+      val merged = prior.fold((sc, mapped)) { case (old, oldMapped) =>
+        (MultiSidecar(
+          (old.byCol.keySet ++ sc.byCol.keySet).map(c => c ->
+            (old.byCol.getOrElse(c, Nil) ++ sc.byCol.getOrElse(c, Nil))).toMap,
+          old.tzs ++ sc.tzs, sc.hasNullStats), oldMapped ++ mapped)
+      }
+      sidecarCache.put((qdir, "zone", fingerprintOf(after)), merged)
+    }
     ()
   }
 
@@ -911,7 +929,15 @@ object SkippingStore {
       : Option[(MultiSidecar, Set[String])] = {
     if (!pathExists(spark, s"$dir/_zonemap_multi")) return None
     val zm = ParquetUpsert.readKnown(spark, s"$dir/_zonemap_multi")
-    val cols = zm.columns.toSet
+    Some(multiSidecarOf(zm.collect().toSeq, // files × columns — sidecar-sized
+      zm.columns.toSet))
+  }
+
+  /** Sidecar rows with columns `cols` as the driver-side sidecar and
+    * its mapped file set. */
+  private def multiSidecarOf(rows: Seq[org.apache.spark.sql.Row],
+                             cols: Set[String])
+      : (MultiSidecar, Set[String]) = {
     def optD(r: org.apache.spark.sql.Row, c: String): Option[Double] =
       if (!cols(c) || r.isNullAt(r.fieldIndex(c))) None
       else Some(r.getDouble(r.fieldIndex(c)))
@@ -921,19 +947,18 @@ object SkippingStore {
     def optL(r: org.apache.spark.sql.Row, c: String): Option[Long] =
       if (!cols(c) || r.isNullAt(r.fieldIndex(c))) None
       else Some(r.getLong(r.fieldIndex(c)))
-    val rows = zm.collect() // files × columns — sidecar-sized
     def fileOf(r: org.apache.spark.sql.Row) = r.getString(r.fieldIndex("file"))
     val byCol = rows.groupBy(r => r.getString(r.fieldIndex("col"))).map {
       case (c, rs) =>
         c -> rs.map(r => ZoneStat(fileOf(r),
           optD(r, "zmin"), optD(r, "zmax"),
           optS(r, "zmin_str"), optS(r, "zmax_str"),
-          optL(r, "nrows"), optL(r, "nnulls"))).toSeq
+          optL(r, "nrows"), optL(r, "nnulls")))
     }
-    Some((MultiSidecar(byCol,
+    (MultiSidecar(byCol,
         rows.flatMap(r => optS(r, "tz")).toSet,
         cols("nrows") && cols("nnulls")),
-      rows.map(fileOf).toSet))
+      rows.map(fileOf).toSet)
   }
 
   /** The store's current data-file keys in the layout the sidecars
@@ -968,16 +993,26 @@ object SkippingStore {
   /** Order-independent fingerprint of a sidecar directory's file
     * statuses; None when the sidecar doesn't exist. */
   private def sidecarFingerprint(spark: SparkSession,
-                                 side: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(side)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    var acc = 0L
-    fs.listStatus(p).foreach { st =>
-      acc ^= scala.util.hashing.MurmurHash3.stringHash(st.getPath.getName)
-        .toLong * 1000003L + st.getLen * 31L + st.getModificationTime
+                                 side: String): Option[Long] =
+    SidecarFold.listing(spark, side).map(fingerprintOf)
+
+  private def fingerprintOf(l: Seq[SidecarFold.Entry]): Long =
+    l.foldLeft(0L) { case (acc, (name, len, mtime)) =>
+      acc ^ (scala.util.hashing.MurmurHash3.stringHash(name).toLong *
+        1000003L + len * 31L + mtime)
     }
-    Some(acc)
+
+  /** `dir`'s zone rows under sidecar fingerprint `fp`, read and cached
+    * on a miss; None when the sidecar is gone. */
+  private def zoneRowsCached(spark: SparkSession, dir: String, fp: Long)
+      : Option[(MultiSidecar, Set[String])] = {
+    val key = (dir, "zone", fp)
+    Option(sidecarCache.get(key))
+      .map(_.asInstanceOf[(MultiSidecar, Set[String])])
+      .orElse(loadMultiSidecarRows(spark, dir).map { loaded =>
+        sidecarCache.put(key, loaded)
+        loaded
+      })
   }
 
   /** [[loadMultiSidecar]] through the cross-query cache: the
@@ -992,15 +1027,7 @@ object SkippingStore {
       : Option[MultiSidecar] = {
     val fp = sidecarFingerprint(spark, s"$dir/_zonemap_multi")
       .getOrElse(return None)
-    val key = (dir, "zone", fp)
-    val hit = sidecarCache.get(key)
-    val (sc, mapped) =
-      if (hit != null) hit.asInstanceOf[(MultiSidecar, Set[String])]
-      else {
-        val loaded = loadMultiSidecarRows(spark, dir).getOrElse(return None)
-        sidecarCache.put(key, loaded)
-        loaded
-      }
+    val (sc, mapped) = zoneRowsCached(spark, dir, fp).getOrElse(return None)
     checkCoverage(actual.toSet, mapped, dir)
     Some(sc)
   }
