@@ -138,12 +138,13 @@ object Bench {
         s"/root/repo/bench_out_c$cpus.json"))
     java.nio.file.Files.write(outFile,
       full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // legacy fixed path kept for existing tooling (bench_diff et al.);
-    // same content, last-run-wins — the per-run file above is the one
-    // the driver should read
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/bench_out.json"),
-      full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    // legacy fixed-name copy beside the default per-run file, kept for
+    // existing tooling (bench_diff et al.); a run that names its own
+    // output file writes only that one, so it never overwrites the
+    // legacy copy another run left
+    if (!sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
+      java.nio.file.Files.write(outFile.resolveSibling("bench_out.json"),
+        full.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // stdout carries ONLY the short summary: the driver tail-captures
     // the LAST 2000 chars of stdout (BENCH_r01-r03: the full per-query
     // map truncated mid-line and failed the driver's parse), so the

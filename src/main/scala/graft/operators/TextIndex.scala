@@ -20,7 +20,7 @@ import graft.sinks.ParquetUpsert.{readKnown, readKnownMerged, readKnownUnder}
   * plus the term-presence bitset and df sketch, folded to one row
   * past a file threshold) and the `_doclen` sidecar both DERIVE from
   * that same write — observed in-flight metrics and a column-pruned
-  * read of the written files ([[deriveSidecars]]) — so the ingest
+  * read of the written files ([[sidecarStage]]) — so the ingest
   * never re-reads the corpus. A [[topK]] serve then
   * composes THREE prunes before any posting is scored: partition
   * pruning opens only the query terms' buckets, the transparent zone
@@ -59,8 +59,11 @@ object TextIndex {
   /** Wall-clock per ingest phase, accumulated across calls — the
     * attribution ledger behind SCALE.md's per-feature ingest cost
     * table ([[graft.tools.IngestProfile]] clears, runs, reads). Two
-    * nanoTime calls per phase; always on. The [[ObserveMiss]] key is
-    * the one count in it: fallback hits, not seconds. */
+    * nanoTime calls per phase; always on. The sidecar branches of
+    * [[sidecarStage]] and [[compact]] run concurrently, so their phases
+    * overlap and the summed seconds can exceed the call's wall time.
+    * The [[ObserveMiss]] key is the one count in it: fallback hits,
+    * not seconds. */
   private[graft] val phaseSeconds =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
   private def addPhase(key: String, v: Double): Unit =
@@ -77,10 +80,6 @@ object TextIndex {
     * a batched serve's observed metrics row was not there in time and
     * the serve re-ran the explicit fallback job. */
   private[graft] val ObserveMiss = "observe_miss"
-
-  private def ingestFlag(name: String): Boolean =
-    !sys.env.get(name).orElse(Option(java.lang.System.getProperty(name)))
-      .exists(_.equalsIgnoreCase("false"))
 
   /** One row per document `(doc_id, toks, dl)` — the pre-explode stage
     * every ingest derives from. When `obs` is given, the exact corpus
@@ -132,12 +131,10 @@ object TextIndex {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** A/B kill-switch for the driver-side stats-row write (default ON;
-    * GRAFT_STATS_DRIVER_WRITE=false forces the original Spark write).
-    * Answer-preserving: both paths land one identical row; readers
-    * merge schemas. */
-  private def statsDriverWriteEnabled: Boolean =
-    ingestFlag("GRAFT_STATS_DRIVER_WRITE")
+  /** Whether the stats row is written by the driver (default) or by a
+    * Spark job — a test hook: specs switch it off to prove both writers
+    * land one identical row (readers merge schemas). */
+  @volatile private[graft] var statsDriverWrite: Boolean = true
 
   /** `_corpus_stats` is APPEND-ONLY: one row
     * `(bid, n, sdl, nbuckets, tf_bits)` per build/append (bid = -1
@@ -165,7 +162,7 @@ object TextIndex {
     // same crash discipline as Spark's committer. Any failure falls
     // back to the original Spark write.
     val before = graft.sinks.SidecarFold.listing(spark, statsPath(dir))
-    val direct = statsDriverWriteEnabled &&
+    val direct = statsDriverWrite &&
       (try { writeStatsRowDirect(spark, dir, bid, n, sdl, nBuckets,
           tfBits, dfSketch); true }
         catch { case scala.util.control.NonFatal(_) => false })
@@ -585,37 +582,82 @@ object TextIndex {
       case _ => None
     }
 
-  /** SINGLE-PASS sidecar derivation — the ingest's corpus pass is the
-    * postings write itself; everything else derives from what that
-    * pass already produced:
+  /** The sidecar stage of every ingest ([[ingest]]) — the corpus pass
+    * is the postings write itself, and every sidecar derives from what
+    * that pass produced:
     *
-    *  - `(n, sdl)` were observed DURING the write ([[tokenized]]), so
-    *    the stats row re-reads nothing.
-    *  - `_doclen` comes from a column-pruned `(doc_id, dl)` read of
-    *    only the files the ingest just WROTE (postings carry `dl` on
-    *    every row, deduped per doc) — never from re-tokenizing the
-    *    source, and on appends never from re-reading old files.
-    *  - the term-presence bitset reads the same written files pruned
-    *    to `w` (dictionary-encoded; positions/tf stay on disk).
+    *  - `(n, sdl)`, the term bits and the df sketch were observed
+    *    DURING the write ([[tokenized]]), so the stats row re-reads
+    *    nothing;
+    *  - `_doclen`, `_blockmax` and `_vocab` read only the files the
+    *    ingest just WROTE (`written`), never the source docs and, on
+    *    appends, never an old file ([[deriveDoclen]],
+    *    [[maybeExtendBlockStats]], [[maybeExtendVocab]]).
     *
-    * Docs that produced ZERO postings rows are invisible in the
-    * written files — in BOTH store kinds that is exactly the
-    * null-text docs (`split(NULL) = NULL` explodes to nothing; empty
-    * text still yields the one `""` token, and the positional layout
-    * carries `""` postings too since the stats unification). The
-    * doclen write's own observed count exposes them: only when it
-    * disagrees with the corpus count does the `residual` pass run (a
-    * null-check scan with no tokenize — parquet answers `IS NULL`
-    * from row-group null counts, so a null-free corpus reads
-    * ~nothing). Exactness assumes the store
-    * key contract (unique doc_id per corpus), which every serve and
-    * the tombstone lifecycle already require. */
-  private def deriveSidecars(spark: SparkSession, dir: String,
-                             written: Option[DataFrame], bid: Long,
-                             n: Long, sdl: Long, nBuckets: Int,
-                             bits: Array[Long],
-                             dfSketch: Option[Array[Long]],
-                             residual: () => DataFrame): Unit = {
+    * The zone index, `_doclen`, `_blockmax` and `_vocab` are independent
+    * of each other, so they run as concurrent branches
+    * ([[graft.queries.Pipeline.inParallel]]); the `_corpus_stats` row
+    * and the folds land LAST, after the data files and `_doclen`. A
+    * crash or a failing branch before that leaves a servable store
+    * whose stats lag the batch — never a stats row describing rows that
+    * do not exist — and [[healBatch]] replays the lost work: zone and
+    * block-max by file coverage, `_doclen` with the stats row (duplicate
+    * rows are invisible under the read dedup), the vocab under its own
+    * bid guard. A failing branch cancels its siblings' running jobs and
+    * fails the ingest. */
+  private def sidecarStage(spark: SparkSession, dir: String,
+                           written: Option[DataFrame], bid: Long,
+                           n: Long, sdl: Long, nBuckets: Int,
+                           bits: Array[Long],
+                           dfSketch: Option[Array[Long]],
+                           residual: () => DataFrame): Unit = {
+    inBranches(spark)(
+      () => timed("zone_index") {
+        graft.sinks.SkippingStore.indexPartitioned(spark, dir, Seq("w"))
+      },
+      () => deriveDoclen(spark, dir, written, n, residual),
+      () => maybeExtendBlockStats(spark, dir),
+      () => written.foreach(w => maybeExtendVocab(spark, dir, bid, w)))
+    timed("stats_row") {
+      appendStatsRow(spark, dir, bid, n, sdl, nBuckets, bits, dfSketch)
+    }
+    timed("sidecar_folds") {
+      maybeFoldStats(spark, dir)
+      maybeFoldDoclen(spark, dir)
+    }
+  }
+
+  /** Runs `branches` concurrently ([[graft.queries.Pipeline.inParallel]])
+    * under one job tag: when a branch fails, the jobs its siblings still
+    * have running are cancelled before the failure propagates, so no
+    * branch keeps writing after the caller has seen the error. */
+  private def inBranches(spark: SparkSession)(branches: (() => Unit)*): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-branches-${java.util.UUID.randomUUID}"
+    sc.addJobTag(tag)
+    try graft.queries.Pipeline.inParallel(branches)(_())
+    catch { case e: Throwable => sc.cancelJobsWithTag(tag); throw e }
+    finally sc.removeJobTag(tag)
+    ()
+  }
+
+  /** `_doclen` rows for the docs behind `written`: a column-pruned
+    * `(doc_id, dl)` read of those files (postings carry `dl` on every
+    * row, deduped per doc). Docs that produced ZERO postings rows are
+    * invisible in the written files — in BOTH store kinds that is
+    * exactly the null-text docs (`split(NULL) = NULL` explodes to
+    * nothing; empty text still yields the one `""` token, and the
+    * positional layout carries `""` postings too since the stats
+    * unification). The write's own observed count exposes them: only
+    * when it disagrees with the corpus count `n` does the `residual`
+    * pass run (a null-check scan with no tokenize — parquet answers
+    * `IS NULL` from row-group null counts, so a null-free corpus reads
+    * ~nothing). Exactness assumes the store key contract (unique doc_id
+    * per corpus), which every serve and the tombstone lifecycle already
+    * require. */
+  private def deriveDoclen(spark: SparkSession, dir: String,
+                           written: Option[DataFrame], n: Long,
+                           residual: () => DataFrame): Unit = {
     val nSeen = written.fold(0L) { w =>
       val dlObs = Observation()
       timed("doclen_write") {
@@ -634,13 +676,6 @@ object TextIndex {
       timed("doclen_residual") {
         residual().write.mode("append").parquet(doclenPath(dir))
       }
-    timed("stats_row") {
-      appendStatsRow(spark, dir, bid, n, sdl, nBuckets, bits, dfSketch)
-    }
-    timed("sidecar_folds") {
-      maybeFoldStats(spark, dir)
-      maybeFoldDoclen(spark, dir)
-    }
   }
 
   /** `_corpus_stats` stays append-only between folds, but an
@@ -927,39 +962,42 @@ object TextIndex {
       s"$storeDir predates delete support (no _doclen sidecar) — " +
         "compact() materializes it for bag-of-terms stores")
     import graft.sinks.SidecarFold
-    val want = ids.select(col(idCol).as("doc_id")).distinct()
+    // no dedup of the ids: a left-semi join keeps each doclen row once
+    // however often its id repeats on the right
+    val want = ids.select(col(idCol).as("doc_id"))
     val dl = readDoclen(spark, storeDir).get
     val ts = tombSnapshot(spark, storeDir)
     val doomed = maskTombstones(spark, storeDir, ts,
-      dl.join(want, Seq("doc_id"), "left_semi")).persist()
-    try {
-      // the doomed rows themselves, collected where the count ran; a
-      // delete too big to hold counts instead
-      val rows = collectBounded(doomed, tombstoneInLiteralMaxIds)
-      val nDel = rows.fold(doomed.count())(_.size.toLong)
-      if (nDel > 0L) {
-        val side = tombPath(storeDir)
-        val before = SidecarFold.listing(spark, side)
-        doomed.coalesce(1).write.mode("append").parquet(side)
-        // fold-on-threshold: serves anti-join this sidecar on every
-        // query — thousands of one-file deletes must not become a
-        // thousand-file listing+merge. The fold rewrites through the
-        // read-side dedup (same rows, same answers).
-        SidecarFold.foldIfDecayed(spark, side, SidecarFoldThreshold)(
-          _.groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
-        // write-through: the rows are new ids by construction (masked by
-        // `ts`), so when the sidecar grew by exactly this call's file the
-        // snapshot absorbs them and the next serve reads nothing
-        val after = SidecarFold.listing(spark, side)
-        (rows, after) match {
-          case (Some(rs), Some(a)) if ts.sig == sigOf(before) &&
-              SidecarFold.grewBy(before.getOrElse(Nil), a, 1) =>
-            tombSnapshotMemo.put(storeDir, ts.plus(sigOf(after), rs))
-          case _ => tombSnapshotMemo.remove(storeDir)
-        }
-      }
-      nDel
-    } finally doomed.unpersist()
+      dl.join(want, Seq("doc_id"), "left_semi"))
+    // the doomed rows on the driver in the one job that finds them, and
+    // the tombstone file written from those rows; a delete too big to
+    // hold writes the frame and counts it in the same job instead
+    val rows = collectBounded(doomed, tombstoneInLiteralMaxIds)
+    if (rows.exists(_.isEmpty)) return 0L
+    val side = tombPath(storeDir)
+    val before = SidecarFold.listing(spark, side)
+    val counted = Observation()
+    rows.fold(doomed.observe(counted, count(lit(1)).as("n")))(rs =>
+        spark.createDataFrame(java.util.Arrays.asList(rs: _*), doomed.schema))
+      .coalesce(1).write.mode("append").parquet(side)
+    val nDel = rows.fold(counted.get("n").asInstanceOf[Long])(_.size.toLong)
+    // fold-on-threshold: serves anti-join this sidecar on every query —
+    // thousands of one-file deletes must not become a thousand-file
+    // listing+merge. The fold rewrites through the read-side dedup
+    // (same rows, same answers).
+    SidecarFold.foldIfDecayed(spark, side, SidecarFoldThreshold)(
+      _.groupBy(col("doc_id")).agg(max(col("dl")).as("dl")))
+    // write-through: the rows are new ids by construction (masked by
+    // `ts`), so when the sidecar grew by exactly this call's file the
+    // snapshot absorbs them and the next serve reads nothing
+    val after = SidecarFold.listing(spark, side)
+    (rows, after) match {
+      case (Some(rs), Some(a)) if ts.sig == sigOf(before) &&
+          SidecarFold.grewBy(before.getOrElse(Nil), a, 1) =>
+        tombSnapshotMemo.put(storeDir, ts.plus(sigOf(after), rs))
+      case _ => tombSnapshotMemo.remove(storeDir)
+    }
+    nDel
   }
 
   /** Build the postings store: ONE tokenize pass (the postings write,
@@ -967,7 +1005,7 @@ object TextIndex {
     * into ~`nBuckets × filesPerBucket` files so each bucket's files
     * cover narrow term ranges (file-level w-zones stay selective),
     * w-zone sidecar, `_doclen` and the corpus-stats row derived from
-    * the WRITTEN files ([[deriveSidecars]]) — at 100 TB the
+    * the WRITTEN files ([[sidecarStage]]) — at 100 TB the
     * difference between a 1-pass and a 3-pass ingest. */
   def build(docs: DataFrame, idCol: String, textCol: String,
             storeDir: String, nBuckets: Int,
@@ -975,31 +1013,8 @@ object TextIndex {
             marker: Option[Long] = None): Unit = {
     require(nBuckets >= 1 && filesPerBucket >= 1,
       "need at least one bucket and one file per bucket")
-    val spark = docs.sparkSession
-    val obs = Observation()
-    val obsBits = Observation()
-    val post = withBitsObserve(
-      postingsFrom(tokenized(docs, idCol, textCol, Some(obs)), nBuckets),
-      obsBits)
-    timed("postings_write") {
-      marker.fold(post)(b => post.withColumn("_applied_batch", lit(b)))
-        .repartitionByRange(nBuckets * filesPerBucket, col("tb"), col("w"))
-        .sortWithinPartitions(col("tb"), col("w"), col("doc_id"))
-        .write.partitionBy("tb").mode("overwrite").parquet(storeDir)
-    }
-    timed("zone_index") {
-      graft.sinks.SkippingStore.indexPartitioned(spark, storeDir, Seq("w"))
-    }
-    val (n, sdl) = observed(obs, () => docStats(docs, idCol, textCol))
-    val written = timed("list_written") {
-      newlyWritten(spark, storeDir, Set.empty)
-    }
-    deriveSidecars(spark, storeDir, written, marker.getOrElse(-1L),
-      n, sdl, nBuckets,
-      observedBits(obsBits, () => written
-        .fold(new Array[Long](TermFilterBits / 64))(termFilterBits)),
-      observedCounters(obs),
-      () => nullTextDocs(docs, idCol, textCol))
+    ingest(docs, idCol, textCol, storeDir, Some(nBuckets), filesPerBucket,
+      marker, positional = false)
   }
 
   /** Append a document batch: tokenize ONLY the batch, land postings
@@ -1013,49 +1028,62 @@ object TextIndex {
              storeDir: String, filesPerBucket: Int = 1,
              marker: Option[Long] = None): Unit = {
     require(filesPerBucket >= 1, "need at least one file per bucket")
-    val spark = newDocs.sparkSession
-    require(!isPositional(spark, storeDir),
+    require(!isPositional(newDocs.sparkSession, storeDir),
       s"$storeDir is a positional store — append with appendPositional")
-    timed("tombstone_clash_check") {
-      requireNoTombstoneClash(newDocs, idCol, storeDir)
+    ingest(newDocs, idCol, textCol, storeDir, None, filesPerBucket, marker,
+      positional = false)
+  }
+
+  /** The one ingest behind [[build]], [[buildPositional]], [[append]]
+    * and [[appendPositional]], parameterized by the tokenizer
+    * (`positional`) and by whether it builds (`nBuckets` given: the
+    * store is overwritten with that frozen bucket count) or appends
+    * (the store's own bucket count; the batch must not re-use a
+    * tombstoned id). ONE tokenize pass — the postings write, with the
+    * corpus metrics, the term bits and the df sketch observed in
+    * flight — then the [[sidecarStage]] over exactly the files that
+    * write landed. An append of nothing returns before any sidecar is
+    * touched. */
+  private def ingest(docs: DataFrame, idCol: String, textCol: String,
+                     storeDir: String, nBuckets: Option[Int],
+                     filesPerBucket: Int, marker: Option[Long],
+                     positional: Boolean): Unit = {
+    val spark = docs.sparkSession
+    val fresh = nBuckets.isDefined
+    if (!fresh) timed("tombstone_clash_check") {
+      requireNoTombstoneClash(docs, idCol, storeDir)
     }
-    val (_, _, nb) = readStats(spark, storeDir)
+    val nb = nBuckets.getOrElse(readStats(spark, storeDir)._3)
     val obs = Observation()
     val obsBits = Observation()
     val post = withBitsObserve(
-      postingsFrom(tokenized(newDocs, idCol, textCol, Some(obs)), nb),
+      if (positional) positionalFrom(
+        tokenizedPositional(docs, idCol, textCol, Some(obs)), nb)
+      else postingsFrom(tokenized(docs, idCol, textCol, Some(obs)), nb),
       obsBits)
-    val before = timed("list_written") {
-      graft.sinks.SkippingStore
-        .listDataFileRelPaths(spark, storeDir).toSet
+    val before = if (fresh) Set.empty[String] else timed("list_written") {
+      graft.sinks.SkippingStore.listDataFileRelPaths(spark, storeDir).toSet
     }
     timed("postings_write") {
       marker.fold(post)(b => post.withColumn("_applied_batch", lit(b)))
         .repartitionByRange(nb * filesPerBucket, col("tb"), col("w"))
         .sortWithinPartitions(col("tb"), col("w"), col("doc_id"))
-        .write.partitionBy("tb").mode("append").parquet(storeDir)
+        .write.partitionBy("tb").mode(if (fresh) "overwrite" else "append")
+        .parquet(storeDir)
     }
-    timed("zone_index") {
-      graft.sinks.SkippingStore.indexPartitioned(spark, storeDir, Seq("w"))
-    }
-    val (n1, sdl1) = observed(obs,
-      () => docStats(newDocs, idCol, textCol))
+    if (fresh && positional) writeMarker(spark, storeDir)
+    val (n, sdl) = observed(obs, () => docStats(docs, idCol, textCol))
     // an empty batch landed no postings file: every sidecar stays as is
-    if (n1 == 0L) return
-    // doclen + stats + bitset from the BATCH's write only — the
-    // appended cost stays the batch's, never the store's
+    if (!fresh && n == 0L) return
+    // every sidecar from the write's own files — the appended cost
+    // stays the batch's, never the store's
     val written = timed("list_written") {
       newlyWritten(spark, storeDir, before)
     }
-    deriveSidecars(spark, storeDir, written,
-      marker.getOrElse(-1L), n1, sdl1, nb,
-      observedBits(obsBits, () => written
+    sidecarStage(spark, storeDir, written, marker.getOrElse(-1L), n, sdl,
+      nb, observedBits(obsBits, () => written
         .fold(new Array[Long](TermFilterBits / 64))(termFilterBits)),
-      observedCounters(obs),
-      () => nullTextDocs(newDocs, idCol, textCol))
-    maybeExtendVocab(newDocs, idCol, textCol, storeDir,
-      marker.getOrElse(-1L))
-    maybeExtendBlockStats(spark, storeDir)
+      observedCounters(obs), () => nullTextDocs(docs, idCol, textCol))
   }
 
   /** A batch that re-uses a TOMBSTONED id would be silently shadowed
@@ -1138,7 +1166,8 @@ object TextIndex {
     graft.sinks.SidecarFold.restoreAside(spark, vocabPath(storeDir))
     if (graft.sinks.HadoopSwap.exists(spark, vocabPath(storeDir)) &&
         !vocabRowExists(spark, storeDir, batchId))
-      maybeExtendVocab(batch, idCol, textCol, storeDir, batchId)
+      maybeExtendVocab(spark, storeDir, batchId,
+        postings(batch, idCol, textCol, 1))
     // block stats are file-coverage-keyed: the heal is just "cover
     // any file the lost extension left unmapped"
     maybeExtendBlockStats(spark, storeDir)
@@ -1185,30 +1214,17 @@ object TextIndex {
       .repartitionByRange(nb * filesPerBucket, col("tb"), col("w"))
       .sortWithinPartitions(col("tb"), col("w"), col("doc_id"))
       .write.partitionBy("tb").mode("overwrite").parquet(tmp)
-    SkippingStore.indexPartitioned(spark, tmp, Seq("w"))
-    // stats rows carry VERBATIM (bids included): totals are unchanged
-    // by construction, and a streaming replay arriving right after the
-    // swap still finds its bid row — the heal guard survives. When
-    // tombstones are being purged, ONE adjustment row (bid = -1,
-    // negative n/Σdl, zero term bits) bakes their subtraction into the
-    // stats the instant the tombstone rows stop existing — readStats
-    // answers identically on both sides of the swap.
-    readKnown(spark, statsPath(storeDir))
-      .coalesce(1).write.mode("overwrite").parquet(statsPath(tmp))
-    if (ts.n > 0L)
-      appendStatsRow(spark, tmp, -1L, -ts.n, -ts.sdl, nb,
-        new Array[Long](TermFilterBits / 64))
     // `_doclen` carries over MINUS the purged docs (so a later delete
     // still prices removals exactly); a bag-of-terms store that
     // predates the sidecar materializes it here from the rewritten
     // postings — every doc has at least one posting row under the
     // unfiltered tokenizer, so the rebuild covers the corpus.
+    val positional = isPositional(spark, storeDir)
     val dlNext = readDoclen(spark, storeDir)
       .map(maskTombstones(spark, storeDir, ts, _))
-      .orElse(if (isPositional(spark, storeDir)) None
+      .orElse(if (positional) None
         else Some(readKnown(spark, tmp)
           .groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))))
-    dlNext.foreach(_.write.mode("overwrite").parquet(doclenPath(tmp)))
     // a vocab sidecar is REBUILT from the rewritten postings — the
     // compaction purges tombstones, so this is the moment a stale-high
     // df snaps back to exact; bid carries the applied-batch high-water
@@ -1219,49 +1235,71 @@ object TextIndex {
     // crash window healBatch covers — stamping only the vocab's max
     // would let that batch pass !vocabRowExists on redelivery and
     // re-extend df the rebuild already counted.
-    // a block-max sidecar is REBUILT from the rewritten files INTO the
-    // scaffold (rel file keys are path-prefix-independent, so rows
-    // derived under tmp stay valid after the rename) — pre-swap, so a
-    // crash can never leave a compacted store whose caps describe
-    // files that no longer exist. Rebuilt BEFORE the vocab so the
-    // vocab rebuild can derive from its rows (below) instead of a
-    // second O(store) pass.
     graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(storeDir))
-    val hasBlockmax =
-      graft.sinks.HadoopSwap.exists(spark, blockmaxPath(storeDir))
-    if (hasBlockmax)
-      deriveBlockRows(spark, tmp,
-          graft.sinks.SkippingStore.listDataFileRelPaths(spark, tmp))
-        .coalesce(1).write.mode("overwrite").parquet(blockmaxPath(tmp))
     graft.sinks.SidecarFold.restoreAside(spark, vocabPath(storeDir))
-    if (graft.sinks.HadoopSwap.exists(spark, vocabPath(storeDir))) {
-      val hwm = math.max(vocabBidHwm(spark, storeDir),
-        statsBidHwm(spark, storeDir))
-      // the rebuild's source: when a `_blockmax` sidecar was ALSO
-      // rebuilt over the same rewritten files (above), per-term df is
-      // already in its rows (Σ cnt over a file partition of the
-      // postings — files never share a (doc_id, w) row, so the sum is
-      // the exact per-term row count this scan would produce). The
-      // vocab then derives from the sidecar-SIZED frame instead of a
-      // second O(store) pass over the rewritten postings — compaction
-      // reads the store once, not once per sidecar. Stores carrying
-      // only `_vocab` keep the direct scan.
-      val vocabSrc =
+    val hasBlockmax = HadoopSwap.exists(spark, blockmaxPath(storeDir))
+    val vocabHwm = Option.when(HadoopSwap.exists(spark, vocabPath(storeDir)))(
+      math.max(vocabBidHwm(spark, storeDir), statsBidHwm(spark, storeDir)))
+    val files = SkippingStore.listDataFileRelPaths(spark, tmp)
+    // the zone index, the stats carry, the doclen carry and the
+    // block-max-then-vocab rebuild each write their own sidecar under
+    // the scaffold from the rewritten files or the live sidecars, so
+    // they run as concurrent branches; nothing is visible until the
+    // swap below
+    inBranches(spark)(
+      () => SkippingStore.indexPartitioned(spark, tmp, Seq("w")),
+      // stats rows carry VERBATIM (bids included): totals are unchanged
+      // by construction, and a streaming replay arriving right after
+      // the swap still finds its bid row — the heal guard survives.
+      // When tombstones are being purged, ONE adjustment row (bid = -1,
+      // negative n/Σdl, zero term bits) bakes their subtraction into
+      // the stats the instant the tombstone rows stop existing —
+      // readStats answers identically on both sides of the swap.
+      () => {
+        readKnown(spark, statsPath(storeDir))
+          .coalesce(1).write.mode("overwrite").parquet(statsPath(tmp))
+        if (ts.n > 0L)
+          appendStatsRow(spark, tmp, -1L, -ts.n, -ts.sdl, nb,
+            new Array[Long](TermFilterBits / 64))
+      },
+      () => dlNext.foreach(_.write.mode("overwrite").parquet(doclenPath(tmp))),
+      // a block-max sidecar is REBUILT from the rewritten files INTO the
+      // scaffold (rel file keys are path-prefix-independent, so rows
+      // derived under tmp stay valid after the rename) — pre-swap, so a
+      // crash can never leave a compacted store whose caps describe
+      // files that no longer exist. Rebuilt BEFORE the vocab so the
+      // vocab can derive from its rows: per-term df is Σ cnt over a
+      // file partition of the postings (files never share a (doc_id, w)
+      // row), so compaction reads the store once, not once per sidecar.
+      // Stores carrying only `_vocab` keep the direct scan.
+      () => {
         if (hasBlockmax)
-          readKnown(spark, blockmaxPath(tmp))
-            .groupBy(col("w")).agg(sum(col("cnt")).cast("long").as("df"))
-        else
-          readKnown(spark, tmp).select(col("doc_id"), col("w"))
-            .groupBy(col("w")).agg(count(lit(1)).as("df"))
-      vocabSrc
-        .select(lit(hwm).as("bid"), col("w"), col("df"),
-          reverse(col("w")).as("rw"))
-        .coalesce(1).sortWithinPartitions(col("rw"))
-        .write.mode("overwrite").parquet(vocabPath(tmp))
-    }
+          deriveBlockRows(spark, tmp, files)
+            .coalesce(1).write.mode("overwrite").parquet(blockmaxPath(tmp))
+        vocabHwm.foreach { hwm =>
+          val vocabSrc =
+            if (hasBlockmax)
+              readKnown(spark, blockmaxPath(tmp))
+                .groupBy(col("w")).agg(sum(col("cnt")).cast("long").as("df"))
+            else
+              readKnown(spark, tmp).select(col("doc_id"), col("w"))
+                .groupBy(col("w")).agg(count(lit(1)).as("df"))
+          vocabSrc
+            .select(lit(hwm).as("bid"), col("w"), col("df"),
+              reverse(col("w")).as("rw"))
+            .coalesce(1).sortWithinPartitions(col("rw"))
+            .write.mode("overwrite").parquet(vocabPath(tmp))
+          memoVocabHwm(spark, storeDir, vocabPath(tmp), hwm)
+        }
+      })
+    // the rebuilt block-max sidecar covers exactly the rewritten files:
+    // memoed under its scaffold listing, the next append's coverage
+    // check reads nothing
+    if (hasBlockmax)
+      memoBlockCovered(spark, storeDir, blockmaxPath(tmp), files.toSet)
     // the positional marker is part of the layout — carry it or the
     // compacted store would silently refuse phrase serves
-    if (isPositional(spark, storeDir)) writeMarker(spark, tmp)
+    if (positional) writeMarker(spark, tmp)
     HadoopSwap.swapInto(spark, tmp, storeDir, aside)
     (before, SkippingStore.listDataFileRelPaths(spark, storeDir).size)
   }
@@ -1360,33 +1398,8 @@ object TextIndex {
                       marker: Option[Long] = None): Unit = {
     require(nBuckets >= 1 && filesPerBucket >= 1,
       "need at least one bucket and one file per bucket")
-    val spark = docs.sparkSession
-    val obs = Observation()
-    val obsBits = Observation()
-    val post = withBitsObserve(
-      positionalFrom(
-        tokenizedPositional(docs, idCol, textCol, Some(obs)), nBuckets),
-      obsBits)
-    timed("postings_write") {
-      marker.fold(post)(b => post.withColumn("_applied_batch", lit(b)))
-        .repartitionByRange(nBuckets * filesPerBucket, col("tb"), col("w"))
-        .sortWithinPartitions(col("tb"), col("w"), col("doc_id"))
-        .write.partitionBy("tb").mode("overwrite").parquet(storeDir)
-    }
-    writeMarker(spark, storeDir)
-    timed("zone_index") {
-      graft.sinks.SkippingStore.indexPartitioned(spark, storeDir, Seq("w"))
-    }
-    val (n, sdl) = observed(obs, () => docStats(docs, idCol, textCol))
-    val written = timed("list_written") {
-      newlyWritten(spark, storeDir, Set.empty)
-    }
-    deriveSidecars(spark, storeDir, written, marker.getOrElse(-1L),
-      n, sdl, nBuckets,
-      observedBits(obsBits, () => written
-        .fold(new Array[Long](TermFilterBits / 64))(termFilterBits)),
-      observedCounters(obs),
-      () => nullTextDocs(docs, idCol, textCol))
+    ingest(docs, idCol, textCol, storeDir, Some(nBuckets), filesPerBucket,
+      marker, positional = true)
   }
 
   /** Append a batch to a positional store — batch-only tokenize,
@@ -1396,50 +1409,10 @@ object TextIndex {
                        storeDir: String, filesPerBucket: Int = 1,
                        marker: Option[Long] = None): Unit = {
     require(filesPerBucket >= 1, "need at least one file per bucket")
-    val spark = newDocs.sparkSession
-    require(isPositional(spark, storeDir),
+    require(isPositional(newDocs.sparkSession, storeDir),
       s"$storeDir is a bag-of-terms store — append with TextIndex.append")
-    timed("tombstone_clash_check") {
-      requireNoTombstoneClash(newDocs, idCol, storeDir)
-    }
-    val (_, _, nb) = readStats(spark, storeDir)
-    val obs = Observation()
-    val obsBits = Observation()
-    val before = timed("list_written") {
-      graft.sinks.SkippingStore
-        .listDataFileRelPaths(spark, storeDir).toSet
-    }
-    val post = withBitsObserve(
-      positionalFrom(
-        tokenizedPositional(newDocs, idCol, textCol, Some(obs)), nb),
-      obsBits)
-    timed("postings_write") {
-      marker.fold(post)(b => post.withColumn("_applied_batch", lit(b)))
-        .repartitionByRange(nb * filesPerBucket, col("tb"), col("w"))
-        .sortWithinPartitions(col("tb"), col("w"), col("doc_id"))
-        .write.partitionBy("tb").mode("append").parquet(storeDir)
-    }
-    timed("zone_index") {
-      graft.sinks.SkippingStore.indexPartitioned(spark, storeDir, Seq("w"))
-    }
-    val (n1, sdl1) = observed(obs,
-      () => docStats(newDocs, idCol, textCol))
-    // an empty batch landed no postings file: every sidecar stays as is
-    if (n1 == 0L) return
-    val written = timed("list_written") {
-      newlyWritten(spark, storeDir, before)
-    }
-    deriveSidecars(spark, storeDir, written,
-      marker.getOrElse(-1L), n1, sdl1, nb,
-      observedBits(obsBits, () => written
-        .fold(new Array[Long](TermFilterBits / 64))(termFilterBits)),
-      observedCounters(obs),
-      () => nullTextDocs(newDocs, idCol, textCol))
-    // the vocab extension derives from the batch alone, either layout
-    // (bag and positional postings agree on per-(doc, w) df)
-    maybeExtendVocab(newDocs, idCol, textCol, storeDir,
-      marker.getOrElse(-1L))
-    maybeExtendBlockStats(spark, storeDir)
+    ingest(newDocs, idCol, textCol, storeDir, None, filesPerBucket, marker,
+      positional = true)
   }
 
   /** Store-served EXACT phrase search — bit-stable with
@@ -2671,10 +2644,11 @@ object TextIndex {
     * is never visible). From then on every [[append]] /
     * [[appendPositional]] extends it from the batch alone. */
   def buildVocab(spark: SparkSession, storeDir: String): Unit = {
+    val hwm = statsBidHwm(spark, storeDir)
     val v = minusTombstones(spark, storeDir,
         readKnownMerged(spark, storeDir).select(col("doc_id"), col("w")))
       .groupBy(col("w")).agg(count(lit(1)).as("df"))
-      .select(lit(statsBidHwm(spark, storeDir)).as("bid"),
+      .select(lit(hwm).as("bid"),
         col("w"), col("df"), reverse(col("w")).as("rw"))
     val stamp = System.nanoTime()
     val side = vocabPath(storeDir)
@@ -2687,6 +2661,7 @@ object TextIndex {
       // index
       v.coalesce(1).sortWithinPartitions(col("rw"))
         .write.mode("overwrite").parquet(s"$side.fold-$stamp")
+      memoVocabHwm(spark, storeDir, s"$side.fold-$stamp", hwm)
       graft.sinks.HadoopSwap.swapInto(spark, s"$side.fold-$stamp", side,
         s"$side.old-$stamp")
     }
@@ -2714,37 +2689,58 @@ object TextIndex {
     hwm
   }
 
+  /** Memo `hwm` for store `dir` under the listing of `written`, the
+    * scaffold about to be renamed into place as its `_vocab`: a rename
+    * keeps each file's name, length and mtime, so the first read after
+    * the swap hits, and a swap that never happens leaves a memo no
+    * listing matches. */
+  private def memoVocabHwm(spark: SparkSession, dir: String,
+                           written: String, hwm: Long): Unit = {
+    if (vocabHwmMemo.size > 64) vocabHwmMemo.clear()
+    vocabHwmMemo.put(dir, (dirListingSig(spark, written), hwm))
+  }
+
   private def vocabRowExists(spark: SparkSession, dir: String,
                              bid: Long): Boolean =
     vocabBidHwm(spark, dir) >= bid
 
   /** Batch-only vocab extension — a no-op on stores that never opted
-    * in ([[buildVocab]] creates the sidecar). One aggregate over the
-    * batch's postings, one appended file, fold on the shared
-    * threshold: the appended cost stays the batch's, never the
-    * store's. */
-  private def maybeExtendVocab(newDocs: DataFrame, idCol: String,
-                               textCol: String, dir: String,
-                               bid: Long): Unit = {
-    val spark = newDocs.sparkSession
-    graft.sinks.SidecarFold.restoreAside(spark, vocabPath(dir))
-    if (!graft.sinks.HadoopSwap.exists(spark, vocabPath(dir))) return
+    * in ([[buildVocab]] creates the sidecar). `post` holds the batch's
+    * postings — the files its ingest just wrote, or [[healBatch]]'s
+    * re-derived frame — and a (doc_id, w) row lives in exactly one of
+    * them, in either layout, so a per-term row count is the batch's
+    * exact df with no re-tokenize. One aggregate, one appended file,
+    * fold on the shared threshold: the appended cost stays the batch's,
+    * never the store's.
+    * When the sidecar grew by exactly that file and [[vocabHwmMemo]]
+    * held its pre-write state, the memo absorbs `bid` and the next
+    * high-water-mark read runs no job. */
+  private def maybeExtendVocab(spark: SparkSession, dir: String, bid: Long,
+                               post: DataFrame): Unit = {
+    import graft.sinks.SidecarFold
+    val side = vocabPath(dir)
+    SidecarFold.restoreAside(spark, side)
+    if (!graft.sinks.HadoopSwap.exists(spark, side)) return
+    val before = SidecarFold.listing(spark, side)
     timed("vocab_extend") {
-      postings(newDocs, idCol, textCol, 1)
-        .groupBy(col("w")).agg(count(lit(1)).as("df"))
+      post.groupBy(col("w")).agg(count(lit(1)).as("df"))
         .select(lit(bid).as("bid"), col("w"), col("df"),
           reverse(col("w")).as("rw"))
         .coalesce(1).sortWithinPartitions(col("rw"))
-        .write.mode("append").parquet(vocabPath(dir))
+        .write.mode("append").parquet(side)
     }
-    graft.sinks.SidecarFold.foldIfDecayed(spark, vocabPath(dir),
-      SidecarFoldThreshold, mergeSchema = true)(
+    SidecarFold.foldIfDecayed(spark, side, SidecarFoldThreshold,
+      mergeSchema = true)(
       _.groupBy(col("w")).agg(max(col("bid")).as("bid"),
           sum(col("df")).as("df"))
         .select(col("bid"), col("w"), col("df"),
           reverse(col("w")).as("rw"))
         .sortWithinPartitions(col("rw")))
-    ()
+    val hit = vocabHwmMemo.get(dir)
+    val after = SidecarFold.listing(spark, side)
+    if (hit != null && hit._1 == sigOf(before) &&
+        after.exists(SidecarFold.grewBy(before.getOrElse(Nil), _, 1)))
+      vocabHwmMemo.put(dir, (sigOf(after), math.max(hit._2, bid)))
   }
 
   /** The store's term dictionary `(w, df)` — vocab-sized, never
@@ -4255,7 +4251,7 @@ object TextIndex {
       graft.sinks.HadoopSwap.swapInto(spark, s"$side.fold-$stamp", side,
         s"$side.old-$stamp")
     }
-    memoBlockCovered(spark, storeDir, files.toSet)
+    memoBlockCovered(spark, storeDir, side, files.toSet)
   }
 
   /** Covered-file-set memo for the `_blockmax` sidecar, keyed by the
@@ -4269,12 +4265,13 @@ object TextIndex {
   private val blockCoveredMemo = new java.util.concurrent
     .ConcurrentHashMap[String, (String, Set[String])]()
 
-  /** Memo `covered` under the sidecar's current listing signature. */
+  /** Memo `covered` for store `dir` under the current listing of
+    * `side` — its `_blockmax`, or a scaffold about to be renamed into
+    * place (a rename keeps the listing). */
   private def memoBlockCovered(spark: SparkSession, dir: String,
-                               covered: Set[String]): Unit = {
+                               side: String, covered: Set[String]): Unit = {
     if (blockCoveredMemo.size > 64) blockCoveredMemo.clear()
-    blockCoveredMemo.put(dir, (dirListingSig(spark, blockmaxPath(dir)),
-      covered))
+    blockCoveredMemo.put(dir, (dirListingSig(spark, side), covered))
   }
 
   /** File-coverage-keyed extension — a no-op on stores that never
@@ -4321,7 +4318,7 @@ object TextIndex {
       // memo the post-write coverage under the post-write signature:
       // the extension covered `missing`, and a fold only drops rows
       // of non-live files, which `missing` never re-lists
-      memoBlockCovered(spark, dir, covered ++ missing)
+      memoBlockCovered(spark, dir, side, covered ++ missing)
     }
     ()
   }

@@ -13,6 +13,9 @@ import org.apache.spark.sql.functions.col
   * zone_index (w-zone sidecar), list_written (file listings),
   * doclen_write (delete-pricing sidecar from the written files),
   * doclen_residual, stats_row, sidecar_folds, tombstone_clash_check.
+  * zone_index, doclen_write, blockmax_extend and vocab_extend run as
+  * concurrent branches of one ingest, so their seconds overlap: the
+  * `accounted` sum can exceed `total`, and `plan+obs` can go negative.
   *
   * usage: runMain graft.tools.IngestProfile <sfDir> [repeat]
   */

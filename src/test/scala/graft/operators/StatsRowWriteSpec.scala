@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Pins the driver-side `_corpus_stats` row write (r16) to the Spark
   * write it replaced: a store ingested with the direct writer must
   * read back IDENTICAL stats (n, sdl, nbuckets, term filter, df
-  * sketch) to one ingested with GRAFT_STATS_DRIVER_WRITE=false, and a
+  * sketch) to one ingested with the Spark writer
+  * ([[TextIndex.statsDriverWrite]] off), and a
   * MIXED sidecar (one file from each writer) must merge cleanly. */
 class StatsRowWriteSpec extends SparkSpec {
 
@@ -25,9 +26,9 @@ class StatsRowWriteSpec extends SparkSpec {
   }
 
   private def withSparkWrite[T](f: => T): T = {
-    java.lang.System.setProperty("GRAFT_STATS_DRIVER_WRITE", "false")
+    TextIndex.statsDriverWrite = false
     try f
-    finally java.lang.System.clearProperty("GRAFT_STATS_DRIVER_WRITE")
+    finally TextIndex.statsDriverWrite = true
   }
 
   private def statsRows(dir: String): Seq[String] =
