@@ -1198,6 +1198,7 @@ object TextIndex {
     require(filesPerBucket >= 1, "need at least one file per bucket")
     import graft.sinks.{HadoopSwap, SkippingStore}
     val (_, _, nb) = readStats(spark, storeDir)
+    val stats0 = statsSnapshot(spark, storeDir) // readStats memoed it
     val before = SkippingStore.listDataFileRelPaths(spark, storeDir).size
     val tmp = storeDir + "_compact_tmp"
     val aside = storeDir + "_compact_old"
@@ -1297,6 +1298,19 @@ object TextIndex {
     // check reads nothing
     if (hasBlockmax)
       memoBlockCovered(spark, storeDir, blockmaxPath(tmp), files.toSet)
+    // so are the carried stats (the entry snapshot plus the adjustment
+    // row, when no writer touched the live sidecar since) and the zone
+    // rows the index branch cached under the scaffold: the first serve
+    // or append after the swap collects neither
+    if (statsSidecarSig(spark, storeDir) == stats0.sig) {
+      val sig = dirListingSig(spark, statsPath(tmp))
+      if (statsSnapshotMemo.size > 64) statsSnapshotMemo.clear()
+      statsSnapshotMemo.put(storeDir,
+        if (ts.n > 0L) stats0.plus(sig, -1L, -ts.n, -ts.sdl, nb,
+          new Array[Long](TermFilterBits / 64), None)
+        else stats0.copy(sig = sig))
+    }
+    SkippingStore.memoZoneRowsAs(spark, tmp, storeDir)
     // the positional marker is part of the layout — carry it or the
     // compacted store would silently refuse phrase serves
     if (positional) writeMarker(spark, tmp)
@@ -1605,7 +1619,7 @@ object TextIndex {
     * [[topK]], so the oracle reproduces scores bit-for-bit. */
   def lmTopK(spark: SparkSession, storeDir: String, terms: Seq[String],
              k: Int, mu: Double = 2000.0): DataFrame =
-    rank(spark, storeDir, terms, k, Lm(mu))
+    rankSharded(spark, Seq(storeDir), terms, k, Lm(mu))
 
   /** BATCHED Dirichlet LM ranking — [[lmTopK]] for a whole query
     * FRAME `(idCol, termsCol: array<string>)`, served in ONE job with
@@ -1621,7 +1635,8 @@ object TextIndex {
   def lmTopKBatch(spark: SparkSession, storeDir: String,
                   queries: DataFrame, idCol: String, termsCol: String,
                   k: Int, mu: Double = 2000.0): DataFrame =
-    rankBatch(spark, storeDir, queries, idCol, termsCol, k, Lm(mu))
+    rankShardedBatch(spark, Seq(storeDir), queries, idCol, termsCol, k,
+      Lm(mu))
 
   /** SPAN-NOT search — occurrences of `a` NOT within `slop` positions
     * of any `b` (the Lucene SpanNot shape, [[nearSearch]]'s exclusion
@@ -2202,23 +2217,6 @@ object TextIndex {
       row.schema.fieldNames.zip(row.toSeq).toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-  /** Materialize a batched serve's query frame (localCheckpoint) and
-    * return whether it is EMPTY, observed during the checkpoint's own
-    * job ([[checkpointWithBuckets]]'s idiom) instead of a separate
-    * `limit(1).count()` — one fixed-cost job per batched pruned serve
-    * removed. */
-  private def checkpointWithNonEmpty(frame: DataFrame)
-      : (DataFrame, Boolean) = {
-    val obs = Observation()
-    val cp = frame.observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint()
-    val n = awaitObserved(obs).get("n") match {
-      case Some(l: java.lang.Long) => l.longValue
-      case _ => addPhase(ObserveMiss, 1); cp.limit(1).count()
-    }
-    (cp, n > 0L)
-  }
-
   /** Materialize a batched serve's slot frame (localCheckpoint) and
     * return it with its distinct probed buckets — collected DURING
     * the checkpoint's own job via an Observation (`collect_set(tb)`)
@@ -2235,19 +2233,28 @@ object TextIndex {
     * only `isin`s them, so order never reaches an answer. */
   private[graft] def checkpointWithBuckets(frame: DataFrame)
       : (DataFrame, Seq[Int]) = {
+    val (cp, byShard) = checkpointWithShardBuckets(frame, lit(0))
+    (cp, byShard.getOrElse(0, Seq.empty))
+  }
+
+  /** [[checkpointWithBuckets]] for a frame keyed by store: the sorted
+    * probed buckets of each value of `shard` (an int column); a store
+    * with no row has no entry. */
+  private def checkpointWithShardBuckets(frame: DataFrame,
+                                         shard: org.apache.spark.sql.Column)
+      : (DataFrame, Map[Int, Seq[Int]]) = {
     val obs = Observation()
-    val cp = frame.observe(obs, collect_set(col("tb")).as("tbs"))
+    val cp = frame.observe(obs, collect_set(struct(shard, col("tb"))).as("stbs"))
       .localCheckpoint()
-    val buckets = awaitObserved(obs).get("tbs") match {
-      case Some(s: Seq[_]) =>
-        s.map(_.asInstanceOf[Number].intValue).toSeq
-      case Some(a: Array[_]) =>
-        a.toSeq.map(_.asInstanceOf[Number].intValue)
+    val pairs = awaitObserved(obs).get("stbs") match {
+      case Some(s: scala.collection.Seq[_]) =>
+        s.map { case r: Row => (r.getInt(0), r.getInt(1)) }.toSeq
       case _ =>
         addPhase(ObserveMiss, 1)
-        cp.select(col("tb")).distinct().collect().map(_.getInt(0)).toSeq
+        cp.select(shard, col("tb")).distinct().collect()
+          .map(r => (r.getInt(0), r.getInt(1))).toSeq
     }
-    (cp, buckets.distinct.sorted)
+    (cp, pairs.groupBy(_._1).map { case (i, ps) => i -> ps.map(_._2).sorted })
   }
 
   /** Whether a row's `w` may be in the store whose OR'd term bitset
@@ -2388,56 +2395,8 @@ object TextIndex {
   def topKBatch(spark: SparkSession, storeDir: String, queries: DataFrame,
                 idCol: String, termsCol: String, k: Int,
                 k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    rankBatch(spark, storeDir, queries, idCol, termsCol, k, Bm25(k1, b))
-
-  /** [[topKBatch]] / [[lmTopKBatch]]: one store, a query frame. */
-  private def rankBatch(spark: SparkSession, storeDir: String,
-                        queries: DataFrame, idCol: String,
-                        termsCol: String, k: Int, sc: Scorer): DataFrame = {
-    val (n, sdl, nb) = readStats(spark, storeDir)
-    val exploded = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        explode(array_distinct(col(termsCol))).as("w"))
-      .filter(col("w").isNotNull)
-    // drop provably-absent (query, term) pairs engine-side: an absent
-    // term contributes no posting and no score in the single serve
-    // either
-    val livePairs = dropAbsentTermRows(spark, storeDir, exploded)
-    // union of probed buckets: ≤ nBuckets ints, driver-held by design
-    // — collected during the checkpoint job itself
-    val (qt, buckets) = checkpointWithBuckets(livePairs
-      .withColumn("tb", pmod(xxhash64(col("w")), lit(nb)).cast("int"))
-      .repartition(spark.sessionState.conf.numShufflePartitions))
-    if (buckets.isEmpty)
-      return emptyTopKBatch(spark)
-    val wanted = qt.select(col("w")).distinct()
-    val tf = minusTombstones(spark, storeDir,
-      readKnown(spark, storeDir)
-        .filter(col("tb").isin(buckets: _*))
-        .drop("tb")
-        .join(wanted, Seq("w")))
-    // the exact corpus statistic from the read postings — shared by
-    // every query carrying the term
-    val statT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
-    val contrib = sc.score(broadcast(statT), n, sdl)(tf)
-      .select(col("w"), col("doc_id"), col("c"))
-    val scored = contrib
-      .join(qt.select(col("query_id"), col("w")), Seq("w"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("c")).cast("double").as("score"))
-    // bounded per-query top-k (map-side partials, k tuples per task);
-    // n_terms rides THROUGH the aggregator as the tag, so no winners
-    // back-join re-shuffles (and re-scans) the scored subtree
-    scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-        col("score"), col("n_terms")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("hit"))
-      .select(col("query_id"), col("hit._1").as("doc_id"),
-        col("hit._3").as("n_terms"), col("hit._2").as("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
+    rankShardedBatch(spark, Seq(storeDir), queries, idCol, termsCol, k,
+      Bm25(k1, b))
 
   /** SELECTIVE compaction: rewrite only the term buckets whose file
     * count exceeds `maxFilesPerBucket` — append decay is term-skewed
@@ -2564,43 +2523,7 @@ object TextIndex {
     * folding runs the identical Catalyst math once at plan time. */
   def topK(spark: SparkSession, storeDir: String, terms: Seq[String],
            k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    rank(spark, storeDir, terms, k, Bm25(k1, b))
-
-  /** [[topK]] / [[lmTopK]]: one store, one driver-held term set. */
-  private def rank(spark: SparkSession, storeDir: String,
-                   terms: Seq[String], k: Int, sc: Scorer): DataFrame = {
-    require(terms.nonEmpty, "need at least one query term")
-    // either store layout serves ranking since the stats unification —
-    // positional postings carry the bag contract's exact (w, tf, dl)
-    // ([[tokenizedPositional]]); the pos column is pruned at the scan
-    val (n, sdl, nb) = readStats(spark, storeDir)
-    // the term-presence filter drops provably-absent terms BEFORE any
-    // bucket opens: an absent term contributes no posting and no score,
-    // so dropping it is free correctness-wise and saves its bucket's
-    // whole read. All terms absent → the exact empty answer, zero
-    // data files opened.
-    val live = readTermFilter(spark, storeDir)
-      .fold(terms)(bits => presentTerms(spark, terms, bits))
-    if (live.isEmpty)
-      return readKnown(spark, storeDir).select(col("doc_id")).limit(0)
-        .withColumn("n_terms", lit(0L)).withColumn("score", lit(0.0))
-    val buckets = bucketsOf(live, nb)
-    // tombstoned docs drop BEFORE the statistic: every scoring input
-    // is exactly what a rebuild on the surviving corpus would produce
-    val tf = minusTombstones(spark, storeDir,
-      readKnown(spark, storeDir)
-        .filter(col("tb").isin(buckets: _*))
-        .filter(col("w").isin(live: _*)))
-    // a term's postings live entirely inside its bucket, so the
-    // statistic over the READ postings is the exact corpus one
-    val statT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
-    sc.score(broadcast(statT), n, sdl)(tf)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("c")).cast("double").as("score"))
-      .orderBy(col("score").desc, col("doc_id"))
-      .limit(k)
-  }
+    rankSharded(spark, Seq(storeDir), terms, k, Bm25(k1, b))
 
   // ------------------------------------------------------------------
   // VOCABULARY sidecar + multi-term expansion (wildcard / fuzzy /
@@ -3614,11 +3537,11 @@ object TextIndex {
   /** BATCHED scatter-gather BM25 — [[topKSharded]] for a whole
     * `(idCol, termsCol: array<string>)` query frame: per-query rows
     * bit-identical to [[topKBatch]] over one store holding the union.
-    * Global df is the per-shard terms-sized counting union (one
-    * exchange for the WHOLE batch); each shard reads its probed
-    * buckets once for every query, keeps a k-bounded per-(query)
-    * top through the bounded TopK aggregator, and the gather re-ranks
-    * shards×k rows per query — never a doc-set. */
+    * One plan over the shards' tagged union: each shard reads its
+    * probed buckets once for every query, global df is one terms-sized
+    * aggregate over the union (one exchange for the WHOLE batch), and
+    * one bounded TopK per query ranks (shard, doc) candidates — never a
+    * doc-set gather. */
   def topKShardedBatch(spark: SparkSession, shardDirs: Seq[String],
                        queries: DataFrame, idCol: String,
                        termsCol: String, k: Int, k1: Double = 1.2,
@@ -3626,7 +3549,8 @@ object TextIndex {
     rankShardedBatch(spark, shardDirs, queries, idCol, termsCol, k,
       Bm25(k1, b))
 
-  /** [[topKShardedBatch]] / [[lmTopKShardedBatch]]. */
+  /** [[topKShardedBatch]] / [[lmTopKShardedBatch]] — and, as a fleet
+    * of one, [[topKBatch]] / [[lmTopKBatch]]. */
   private def rankShardedBatch(spark: SparkSession, shardDirs: Seq[String],
                                queries: DataFrame, idCol: String,
                                termsCol: String, k: Int,
@@ -3636,49 +3560,65 @@ object TextIndex {
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
-    val qt = queries
+    val (pairs, buckets) = shardPairs(spark, shardDirs, stats.map(_._3),
+      queries, idCol, termsCol)
+    if (buckets.isEmpty)
+      return emptyTopKBatch(spark)
+    // ONE plan over the tagged union: each probed shard reads its
+    // buckets once for every query, the global statistic is one
+    // terms-sized aggregate over the union (a term's postings live
+    // entirely inside its bucket, so the statistic over the READ
+    // postings is the exact corpus one), and docs key on (shard, doc_id)
+    val tf = buckets.toSeq.sortBy(_._1).map { case (i, bs) =>
+      minusTombstones(spark, shardDirs(i), readKnown(spark, shardDirs(i))
+        .filter(col("tb").isin(bs: _*))
+        .select(col("doc_id"), col("w"), col("tf"), col("dl"),
+          lit(i).as("_shard")))
+    }.reduce(_.unionByName(_))
+      .join(pairs.select(col("_shard"), col("w")).distinct(),
+        Seq("_shard", "w"))
+    val statT = tf.groupBy(col("w")).agg(sc.statAgg.as(sc.stat))
+    topKPerQuery(sc.score(broadcast(statT), n, sdl)(tf)
+      .select(col("_shard"), col("w"), col("doc_id"), col("c"))
+      .join(pairs.select(col("query_id"), col("_shard"), col("w")),
+        Seq("_shard", "w"))
+      .groupBy(col("query_id"), col("_shard"), col("doc_id"))
+      .agg(count(lit(1)).as("n_terms"),
+        sum(col("c")).cast("double").as("score")), k)
+  }
+
+  /** A batched serve's query pairs over a fleet: `queries` exploded to
+    * distinct (query_id, w) pairs, each shard's arm dropping the terms
+    * its own term filter proves absent ([[dropAbsentTermRows]] — a
+    * term absent HERE may live elsewhere) and keying the rest by
+    * `_shard` and that shard's frozen bucket `tb`, checkpointed in ONE
+    * job that also observes every shard's probed buckets
+    * ([[checkpointWithShardBuckets]]). A shard with no live pair has
+    * no entry, so an empty map means an empty answer. */
+  private def shardPairs(spark: SparkSession, shardDirs: Seq[String],
+                         nbs: Seq[Int], queries: DataFrame, idCol: String,
+                         termsCol: String): (DataFrame, Map[Int, Seq[Int]]) = {
+    val exploded = queries
       .select(col(idCol).cast("long").as("query_id"),
         explode(array_distinct(col(termsCol))).as("w"))
       .filter(col("w").isNotNull)
-      .localCheckpoint()
-    val wanted = qt.select(col("w")).distinct().localCheckpoint()
-    // per-shard Bloom drop: a term absent HERE may live elsewhere —
-    // probed buckets for every shard in one collected job
-    val shardBuckets = collectStoreBuckets(spark,
-      shardDirs.zip(stats).map { case (dir, (_, _, nb)) => (dir, nb) },
-      wanted)
-    val reads = shardDirs.zip(shardBuckets).flatMap {
-      case (dir, buckets) =>
-      val wantedS = dropAbsentTermRows(spark, dir, wanted)
-      if (buckets.isEmpty) None
-      else Some(minusTombstones(spark, dir,
-        readKnown(spark, dir)
-          .filter(col("tb").isin(buckets: _*))
-          .drop("tb")
-          .join(wantedS, Seq("w"))
-          .select(col("doc_id"), col("w"), col("tf"), col("dl"))))
-    }
-    if (reads.isEmpty)
-      return emptyTopKBatch(spark)
-    val statT = reads.map(_.groupBy(col("w")).agg(sc.statAgg.as(sc.stat)))
-      .reduce(_.unionByName(_))
-      .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))
-    val scoreOf = sc.score(broadcast(statT), n, sdl) _
-    val perShard = reads.map { tf =>
-      scoreOf(tf)
-        .select(col("w"), col("doc_id"), col("c"))
-        .join(qt, Seq("w"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg(count(lit(1)).as("n_terms"),
-          sum(col("c")).cast("double").as("score"))
-        .groupBy(col("query_id"))
-        .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-          col("score"), col("n_terms")).as("hits"))
-        .select(col("query_id"), explode(col("hits")).as("hit"))
-        .select(col("query_id"), col("hit._1").as("doc_id"),
-          col("hit._3").as("n_terms"), col("hit._2").as("score"))
-    }
-    perShard.reduce(_.unionByName(_))
+    checkpointWithShardBuckets(shardDirs.zip(nbs).zipWithIndex.map {
+        case ((dir, nb), i) =>
+          dropAbsentTermRows(spark, dir, exploded)
+            .select(col("query_id"), col("w"), lit(i).as("_shard"),
+              pmod(xxhash64(col("w")), lit(nb)).cast("int").as("tb"))
+      }.reduce(_.unionByName(_))
+      .repartition(spark.sessionState.conf.numShufflePartitions),
+      col("_shard"))
+  }
+
+  /** Per-query bounded top-k of scored `(query_id, doc_id, n_terms,
+    * score)` candidates through the [[graft.functions.TopK]]
+    * aggregator (map-side partials, k tuples per task); n_terms rides
+    * THROUGH it as the tag, so no winners back-join re-shuffles (and
+    * re-scans) the scored subtree. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    scored
       .groupBy(col("query_id"))
       .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
         col("score"), col("n_terms")).as("hits"))
@@ -3686,17 +3626,16 @@ object TextIndex {
       .select(col("query_id"), col("hit._1").as("doc_id"),
         col("hit._3").as("n_terms"), col("hit._2").as("score"))
       .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
 
   /** [[topKShardedBatch]] with per-shard BLOCK-MAX pruning — the
     * batched q277 composition: global df sums from the shards'
     * sidecars (zero data files), ONE cross-shard probe union sets a
     * per-QUERY global θ (the k-th partial over every shard's
     * per-term best-cap files, which dominates any shard-local θ),
-    * and each shard then runs the distributed batched prune algebra
-    * under that shared θ frame before the k-bounded gather. Pending
-    * tombstones, an un-opted shard, or a failed heal delegate to
-    * [[topKShardedBatch]]. */
+    * and every shard's survivors follow from its own caps under that
+    * θ, in one plan keyed by shard (see [[topKPrunedBatch]] for the
+    * distributed algebra). Pending tombstones, an un-opted shard, or a
+    * failed heal delegate to [[topKShardedBatch]]. */
   def topKShardedPrunedBatch(spark: SparkSession, shardDirs: Seq[String],
                              queries: DataFrame, idCol: String,
                              termsCol: String, k: Int, k1: Double = 1.2,
@@ -3704,7 +3643,12 @@ object TextIndex {
     rankShardedPrunedBatch(spark, shardDirs, queries, idCol, termsCol, k,
       Bm25(k1, b))
 
-  /** [[topKShardedPrunedBatch]] / [[lmTopKShardedPrunedBatch]]. */
+  /** [[topKShardedPrunedBatch]] / [[lmTopKShardedPrunedBatch]] — and,
+    * as a fleet of one, [[topKPrunedBatch]] / [[lmTopKPrunedBatch]].
+    * The bound algebra is [[prunedServe]]'s, floors included, run
+    * distributed over the sidecar frame with every key carrying
+    * `_shard`: caps, rest-mass and survivors are per shard, θ and the
+    * floors global. */
   private def rankShardedPrunedBatch(spark: SparkSession,
                                      shardDirs: Seq[String],
                                      queries: DataFrame, idCol: String,
@@ -3713,12 +3657,14 @@ object TextIndex {
     require(shardDirs.nonEmpty, "need at least one shard")
     require(k >= 1, "need at least one result slot")
     import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
     lastPruneStats = None
-    // out-of-monotone-range params delegate — see [[rankPruned]]
+    // out-of-monotone-range params delegate — see [[rankPruned]]; a
+    // mixed fleet delegates too, while a lone un-opted store refuses
+    // below, as [[topKPruned]] does
     if (!sc.monotone ||
         shardDirs.exists(d => tombstoneCount(spark, d) > 0L) ||
-        shardDirs.exists(d =>
-          !graft.sinks.HadoopSwap.exists(spark, blockmaxPath(d))) ||
+        (shardDirs.size > 1 && !shardDirs.forall(hasBlockmax(spark, _))) ||
         shardDirs.exists(d => !tryEnsureBlockCoverage(spark, d))) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
       return rankShardedBatch(spark, shardDirs, queries, idCol, termsCol,
@@ -3727,111 +3673,135 @@ object TextIndex {
     val stats = shardDirs.map(d => readStats(spark, d))
     val n = stats.map(_._1).sum
     val sdl = stats.map(_._2).sum
-    val (qt, qtNonEmpty) = checkpointWithNonEmpty(queries
-      .select(col(idCol).cast("long").as("query_id"),
-        explode(array_distinct(col(termsCol))).as("w"))
-      .filter(col("w").isNotNull)
-      .repartition(spark.sessionState.conf.numShufflePartitions))
-    if (!qtNonEmpty)
+    val (qs, live) = shardPairs(spark, shardDirs, stats.map(_._3), queries,
+      idCol, termsCol)
+    if (live.isEmpty)
       return emptyTopKBatch(spark)
-    val termsF = qt.select(col("w")).distinct()
-    // per-shard sidecar frames for the union terms (live-file-pruned,
-    // raced-heal-deduped — the prunedBatchFrames read, per shard)
-    val bsByShard = shardDirs.map { dir =>
-      val liveFiles = graft.sinks.SkippingStore
-        .listDataFileRelPaths(spark, dir)
-      graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(dir))
-      dir -> graft.sinks.SidecarFold.withReadRetry() {
-        readKnown(spark, blockmaxPath(dir))
-          .join(broadcast(termsF), Seq("w"))
-          .join(broadcast(liveFiles.toDF("file")), Seq("file"),
-            "left_semi")
-          .dropDuplicates("file", "w")
-          .localCheckpoint()
-      }
+    val pairs = qs.select(col("query_id"), col("_shard"), col("w"))
+    // every shard's sidecar rows for the batch's terms in one frame,
+    // live files only, deduped by (shard, file, w): racing serve-time
+    // heals can land duplicate coverage rows between folds, and Σcnt
+    // over them would inflate df
+    val liveFiles = shardDirs.zipWithIndex.flatMap { case (dir, i) =>
+      graft.sinks.SkippingStore.listDataFileRelPaths(spark, dir)
+        .map(f => (i, f))
+    }.toDF("_shard", "file")
+    shardDirs.foreach { d =>
+      graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(d))
+      require(hasBlockmax(spark, d), s"$d has no _blockmax sidecar — " +
+        "buildBlockStats() creates it; the unpruned batch serves work " +
+        "without one")
+    }
+    val bs = graft.sinks.SidecarFold.withReadRetry() {
+      shardDirs.zipWithIndex.map { case (dir, i) =>
+        readKnown(spark, blockmaxPath(dir)).withColumn("_shard", lit(i))
+      }.reduce(_.unionByName(_))
+        .join(broadcast(pairs.select(col("w")).distinct()), Seq("w"))
+        // inner, not left-semi: (shard, file) is unique in liveFiles, and
+        // Catalyst pushes a semi join into every union arm — one
+        // broadcast job per shard
+        .join(broadcast(liveFiles), Seq("_shard", "file"))
+        .dropDuplicates("_shard", "file", "w")
+        .localCheckpoint()
     }
     // GLOBAL statistic from the sidecars alone — zero data files
-    val scoreOf = sc.score(broadcast(
-      bsByShard.map(_._2.groupBy(col("w"))
-          .agg(sum(col(sc.sidecarCol)).as(sc.stat)))
-        .reduce(_.unionByName(_))
-        .groupBy(col("w")).agg(sum(col(sc.stat)).as(sc.stat))), n, sdl) _
+    val scoreOf = sc.score(broadcast(bs.groupBy(col("w"))
+      .agg(sum(col(sc.sidecarCol)).as(sc.stat))), n, sdl) _
     val cm = (col("c") * 1000000L).cast("long")
-    // per-QUERY global θ: per-shard per-term best-cap probe files,
-    // one union read, per-query k-th partial, GLOBAL floors (BM25's
-    // are zero; kept general through the same least(cm, 0) fold)
-    val bsUnion = bsByShard.map(_._2).reduce(_.unionByName(_))
-    val floors = scoreOf(bsUnion.groupBy(col("w"))
-        .agg(max(col("maxdl")).as("dl")).withColumn("tf", lit(1L)))
-      .select(col("w"), least(cm, lit(0L)).as("floor"))
-    val negAdj = qt.join(broadcast(floors), Seq("w"))
+    val capsDF = scoreOf(bs.select(col("_shard"), col("file"), col("w"),
+        col("maxtf").as("tf"), col("mindl").as("dl")))
+      .select(col("_shard"), col("file"), col("w"), cm.as("cap"))
+      .localCheckpoint() // tiny: files×union-terms rows
+    // per-(query, shard, term) rest-mass: the query's other terms'
+    // plus-truncated caps in that shard
+    val capPlus = capsDF.groupBy(col("_shard"), col("w"))
+      .agg(greatest(max(col("cap")), lit(0L)).as("cap_plus"))
+    val qrest = pairs.join(broadcast(capPlus), Seq("_shard", "w"))
+      .withColumn("rest_plus", sum(col("cap_plus"))
+        .over(Window.partitionBy(col("query_id"), col("_shard"))) -
+        col("cap_plus"))
+    // GLOBAL floors, at the per-term max maxdl across every shard; a
+    // (query, term) counts once, on the lowest shard holding the term —
+    // a shard with sidecar rows for w cannot Bloom-drop w, so that
+    // shard's pair exists
+    val floors = scoreOf(bs.groupBy(col("w"))
+        .agg(max(col("maxdl")).as("dl"), min(col("_shard")).as("_shard"))
+        .withColumn("tf", lit(1L)))
+      .select(col("_shard"), col("w"), least(cm, lit(0L)).as("floor"))
+    val negAdj = pairs.join(broadcast(floors), Seq("_shard", "w"))
       .groupBy(col("query_id")).agg(sum(col("floor")).as("neg_adj"))
-    // per-shard per-term best-cap probe files in ONE collected job
-    // for the whole fleet (the window partitions by (_shard, w), so
-    // each shard's winners are exactly the per-shard job's — only the
-    // job count changes: S fixed-cost collects -> 1)
-    val wprobe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("_shard"), col("w"))
-      .orderBy(col("cap").desc, col("file"))
-    val probeFilesByShard: Map[Int, Seq[String]] =
-      bsByShard.zipWithIndex.map { case ((_, bsDF), i) =>
-        scoreOf(bsDF.select(col("file"), col("w"),
-            col("maxtf").as("tf"), col("mindl").as("dl")))
-          .select(lit(i).as("_shard"), col("file"), col("w"),
-            cm.as("cap"))
-      }.reduce(_.unionByName(_))
-        .withColumn("_r", row_number().over(wprobe))
-        .filter(col("_r") === 1)
-        .select(col("_shard"), col("file")).distinct()
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (i, rs) =>
-          i -> rs.map(_.getString(1)).toSeq.sorted }
-    val probeReads = bsByShard.zipWithIndex.flatMap { case ((dir, _), i) =>
-      val files = probeFilesByShard.getOrElse(i, Seq.empty)
-      if (files.isEmpty) None
-      else Some(readKnownUnder(spark, dir, files)
-        .join(broadcast(termsF), Seq("w")))
-    }
-    if (probeReads.isEmpty)
+    // `files` of each shard, every shard in ONE tagged union, scored
+    // and keyed to the queries carrying each term
+    def scan(files: Seq[(Int, String)]) = scoreOf(files.groupBy(_._1)
+        .toSeq.sortBy(_._1).map { case (i, fs) =>
+          readKnownUnder(spark, shardDirs(i), fs.map(_._2))
+            .select(col("doc_id"), col("w"), col("tf"), col("dl"),
+              lit(i).as("_shard"))
+        }.reduce(_.unionByName(_)))
+      .join(pairs, Seq("_shard", "w"))
+    def shardFiles(df: DataFrame) = df.select(col("_shard"), col("file"))
+      .distinct().collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+      .sorted
+    val relevant = shardFiles(capsDF)
+    if (relevant.isEmpty) { // no live file holds a batch term
+      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = false))
       return emptyTopKBatch(spark)
-    val wrank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("s").desc, col("doc_id"))
-    val thetaQ = scoreOf(probeReads.reduce(_.unionByName(_)))
-      .join(qt.select(col("query_id"), col("w")), Seq("w"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg((sum(col("c")) * 1000000L).cast("long").as("s"))
-      .withColumn("_r", row_number().over(wrank)).filter(col("_r") === k)
-      .join(negAdj, Seq("query_id"))
-      .select(col("query_id"), (col("s") + col("neg_adj")).as("theta"))
-      .localCheckpoint()
-    var acc = PruneStats(0, 0, 0, None, delegated = false)
-    val perShard = bsByShard.map { case (dir, bsDF) =>
-      val served = prunedServeBatch(spark, dir, qt, k, bsDF, scoreOf,
-        sharedThetaQ = Some(thetaQ))
-      lastPruneStats.foreach(s => acc = PruneStats(
-        acc.relevantFiles + s.relevantFiles,
-        acc.survivors + s.survivors,
-        acc.skipped + s.skipped, None, delegated = false))
-      served
     }
-    lastPruneStats = Some(acc)
-    perShard.reduce(_.unionByName(_))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-        col("score"), col("n_terms")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("hit"))
-      .select(col("query_id"), col("hit._1").as("doc_id"),
-        col("hit._3").as("n_terms"), col("hit._2").as("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
+    // probe: every shard's per-term best-cap file, one shared read; θ
+    // is the per-query k-th probe partial across ALL shards plus the
+    // floor adjustment
+    val thetaQ = scan(shardFiles(capsDF
+        .withColumn("_r", row_number().over(Window
+          .partitionBy(col("_shard"), col("w"))
+          .orderBy(col("cap").desc, col("file"))))
+        .filter(col("_r") === 1)))
+        .groupBy(col("query_id"), col("_shard"), col("doc_id"))
+        .agg((sum(col("c")) * 1000000L).cast("long").as("s"))
+        .withColumn("_r", row_number().over(Window
+          .partitionBy(col("query_id")).orderBy(col("s").desc, col("doc_id"))))
+        .filter(col("_r") === k)
+        .join(negAdj, Seq("query_id"))
+        .select(col("query_id"), (col("s") + col("neg_adj")).as("theta"))
+    // survivor union: a file lives iff SOME query's bound reaches its θ
+    // (a query with no θ row — fewer than k probe docs — keeps all)
+    val survivors = shardFiles(capsDF
+      .join(qrest.select(col("query_id"), col("_shard"), col("w"),
+        col("rest_plus")), Seq("_shard", "w"))
+      .join(thetaQ, Seq("query_id"), "left")
+      .filter(col("theta").isNull ||
+        greatest(col("cap"), lit(0L)) + col("rest_plus") >= col("theta")))
+    val skipped = relevant.filterNot(survivors.toSet)
+    lastPruneStats = Some(PruneStats(relevant.size, survivors.size,
+      skipped.size, None, delegated = false))
+    if (survivors.isEmpty) // every query provably sub-θ everywhere
+      return emptyTopKBatch(spark)
+    // per-(query, shard) unseen-mass terms: postings left in that
+    // shard's skipped files
+    val scored = scan(survivors)
+      .groupBy(col("query_id"), col("_shard"), col("doc_id"))
+      .agg(count(lit(1)).as("n_terms"),
+        sum(col("c")).cast("double").as("score"),
+        collect_set(col("w")).as("ws"))
+    topKPerQuery(
+      if (skipped.isEmpty) scored
+      else scored.join(capsDF
+          .filter(skipped.groupBy(_._1).map { case (i, fs) =>
+            col("_shard") === i && col("file").isInCollection(fs.map(_._2))
+          }.reduce(_ || _))
+          .select(col("_shard"), col("w")).distinct()
+          .join(pairs, Seq("_shard", "w"))
+          .groupBy(col("query_id"), col("_shard"))
+          .agg(collect_set(col("w")).as("outs")),
+          Seq("query_id", "_shard"), "left")
+        .filter(col("outs").isNull ||
+          size(array_except(col("outs"), col("ws"))) === 0), k)
   }
 
   /** BATCHED scatter-gather Dirichlet LM — [[lmTopKSharded]] for a
     * whole query frame, per-query rows bit-identical to
     * [[lmTopKBatch]] over the union store: one terms-sized global ctf
-    * union for the whole batch, per-shard bounded tops, a shards×k
-    * gather per query. */
+    * aggregate for the whole batch over the shards' tagged union and
+    * one bounded top-k per query. */
   def lmTopKShardedBatch(spark: SparkSession, shardDirs: Seq[String],
                          queries: DataFrame, idCol: String,
                          termsCol: String, k: Int,
@@ -3842,8 +3812,8 @@ object TextIndex {
     * LM face of [[topKShardedPrunedBatch]]: global ctf from the
     * shards' sidecars (zero data files), one cross-shard probe union
     * setting the per-query global θ WITH global floors (the generic
-    * least(c, 0) fold — negative for the LM length norm), then each
-    * shard's distributed batched prune under the shared frame.
+    * least(c, 0) fold — negative for the LM length norm), then every
+    * shard's survivors under that frame in one plan keyed by shard.
     * Pending tombstones, an un-opted shard, or a failed heal delegate
     * to [[lmTopKShardedBatch]]. */
   def lmTopKShardedPrunedBatch(spark: SparkSession,
@@ -3874,9 +3844,9 @@ object TextIndex {
   //     max(cap, 0) + restPlus(w) ≥ θ, which with one file per term
   //     reads totalPlus ≥ θ; and θ ≤ the k-th exact score ≤ totalPlus.
   //     Every relevant file survives, so the pruned route would read
-  //     each twice (probe, survivors) plus the sidecar — 13 jobs where
-  //     topK runs 5. Appends land files whose zones overlap the old
-  //     ones, which brings pruning back until the next compact;
+  //     each twice (probe, survivors) plus the sidecar and skip nothing.
+  //     Appends land files whose zones overlap the old ones, which
+  //     brings pruning back until the next compact;
   //   - a missing zone sidecar, or one not covering every live file,
   //     proves nothing and keeps the pruned route;
   //   - a store without `_blockmax` serves unpruned.
@@ -3944,21 +3914,17 @@ object TextIndex {
     val local = storeDirs.size == 1
     val pruned = prunes(spark, storeDirs)
     lastServeRoute = Some(sc.route(cell(local, pruned, batch = false)))
-    (local, pruned) match {
-      case (true, true) => rankPruned(spark, storeDirs.head, terms, k, sc)
-      case (true, false) => rank(spark, storeDirs.head, terms, k, sc)
-      case (false, true) => rankShardedPruned(spark, storeDirs, terms, k, sc)
-      case (false, false) => rankSharded(spark, storeDirs, terms, k, sc)
-    }
+    if (!pruned) rankSharded(spark, storeDirs, terms, k, sc)
+    else if (local) rankPruned(spark, storeDirs.head, terms, k, sc)
+    else rankShardedPruned(spark, storeDirs, terms, k, sc)
   }
 
   /** [[serve]] for a whole `(idCol, termsCol: array<string>)` query
     * frame — the batched column of the same dispatch matrix, under the
     * same rule: one opted-in store whose bucket files share no term
     * serves through [[topKBatch]] / [[lmTopKBatch]] (the batched
-    * survivor rule keeps every relevant file there too — 13 jobs
-    * instead of 45 for a batch of 16), a fleet or an overlapping store
-    * through the pruned batch. */
+    * survivor rule keeps every relevant file there too), a fleet or an
+    * overlapping store through the pruned batch. */
   def serveBatch(spark: SparkSession, storeDirs: Seq[String],
                  queries: DataFrame, idCol: String, termsCol: String,
                  k: Int, scorer: String = "bm25", k1: Double = 1.2,
@@ -3968,18 +3934,9 @@ object TextIndex {
     val local = storeDirs.size == 1
     val pruned = prunes(spark, storeDirs)
     lastServeRoute = Some(sc.route(cell(local, pruned, batch = true)))
-    (local, pruned) match {
-      case (true, true) =>
-        rankPrunedBatch(spark, storeDirs.head, queries, idCol, termsCol,
-          k, sc)
-      case (true, false) =>
-        rankBatch(spark, storeDirs.head, queries, idCol, termsCol, k, sc)
-      case (false, true) =>
-        rankShardedPrunedBatch(spark, storeDirs, queries, idCol, termsCol,
-          k, sc)
-      case (false, false) =>
-        rankShardedBatch(spark, storeDirs, queries, idCol, termsCol, k, sc)
-    }
+    if (pruned)
+      rankShardedPrunedBatch(spark, storeDirs, queries, idCol, termsCol, k, sc)
+    else rankShardedBatch(spark, storeDirs, queries, idCol, termsCol, k, sc)
   }
 
   /** The front door's scorer argument: "bm25" or "lm", any case. */
@@ -4413,7 +4370,8 @@ object TextIndex {
 
   /** Live-data-file count above which the SINGLE-query pruned serves
     * run the DISTRIBUTED batched cap algebra (a one-row query frame
-    * through [[prunedServeBatch]]) instead of collecting
+    * through [[rankShardedPrunedBatch]], the store a fleet of one)
+    * instead of collecting
     * (files-with-term × terms) cap tuples on the driver. The default
     * keeps the driver state in the same order as Spark's own file
     * index for any store below it; million-file stores switch to the
@@ -4652,12 +4610,12 @@ object TextIndex {
     // over-pruning
     if (!sc.monotone) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return rank(spark, storeDir, terms, k, sc)
+      return rankSharded(spark, Seq(storeDir), terms, k, sc)
     }
     val ts = tombSnapshot(spark, storeDir)
     if (ts.n > tombstonePruneMaxIds) {
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return rank(spark, storeDir, terms, k, sc)
+      return rankSharded(spark, Seq(storeDir), terms, k, sc)
     }
     val (n, sdl, nb) = readStats(spark, storeDir)
     val live = readTermFilter(spark, storeDir)
@@ -4672,7 +4630,7 @@ object TextIndex {
     if (graft.sinks.SkippingStore.listDataFileRelPaths(spark, storeDir)
           .size > distributedCapsFileThreshold) {
       lastPruneDistributed = true
-      return rankPrunedBatch(spark, storeDir,
+      return rankShardedPrunedBatch(spark, Seq(storeDir),
           Seq((0L, live)).toDF("query_id", "terms"), "query_id",
           "terms", k, sc)
         .select(col("doc_id"), col("n_terms"), col("score"))
@@ -4681,7 +4639,7 @@ object TextIndex {
       // read-only mount / failed heal write: pruning without full
       // file coverage is unsound — serve exactly, unpruned
       lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return rank(spark, storeDir, terms, k, sc)
+      return rankSharded(spark, Seq(storeDir), terms, k, sc)
     }
     val Seq(bs) = readBlockRows(spark, Seq(storeDir -> live))
     if (bs.isEmpty) return emptyTopK(spark, storeDir)
@@ -4710,43 +4668,6 @@ object TextIndex {
                    mu: Double = 2000.0): DataFrame =
     rankPruned(spark, storeDir, terms, k, Lm(mu))
 
-  /** The batched prune prologue shared by the ranked batch serves:
-    * explode + Bloom-drop the query frame, heal sidecar coverage,
-    * and read the union terms' block rows. Left(empty frame) when no
-    * live (query, term) pair survives. */
-  private def prunedBatchFrames(spark: SparkSession, storeDir: String,
-                                queries: DataFrame, idCol: String,
-                                termsCol: String)
-      : Either[DataFrame, (DataFrame, DataFrame)] = {
-    import spark.implicits._
-    val exploded = queries
-      .select(col(idCol).cast("long").as("query_id"),
-        explode(array_distinct(col(termsCol))).as("w"))
-      .filter(col("w").isNotNull)
-    val (qt, nonEmpty) = checkpointWithNonEmpty(
-      dropAbsentTermRows(spark, storeDir, exploded)
-        .repartition(spark.sessionState.conf.numShufflePartitions))
-    if (!nonEmpty)
-      return Left(emptyTopKBatch(spark))
-    require(graft.sinks.HadoopSwap.exists(spark, blockmaxPath(storeDir)),
-      s"$storeDir has no _blockmax sidecar — buildBlockStats() creates " +
-        "it; the unpruned batch serves work without one")
-    val liveFiles = graft.sinks.SkippingStore
-      .listDataFileRelPaths(spark, storeDir)
-    val termsF = qt.select(col("w")).distinct()
-    graft.sinks.SidecarFold.restoreAside(spark, blockmaxPath(storeDir))
-    // dedupe by (file, w): racing serve-time heals can land duplicate
-    // coverage rows between folds, and Σcnt over them would inflate df
-    val bsDF = graft.sinks.SidecarFold.withReadRetry() {
-      readKnown(spark, blockmaxPath(storeDir))
-        .join(broadcast(termsF), Seq("w"))
-        .join(broadcast(liveFiles.toDF("file")), Seq("file"), "left_semi")
-        .dropDuplicates("file", "w")
-        .localCheckpoint()
-    }
-    Right((qt, bsDF))
-  }
-
   /** BATCHED block-max-pruned BM25 — [[topKPruned]] for a whole query
     * FRAME, per-query rows bit-identical to [[topKBatch]] (hence to
     * [[topK]]). The prune algebra runs DISTRIBUTED over the sidecar
@@ -4764,33 +4685,8 @@ object TextIndex {
                       queries: DataFrame, idCol: String, termsCol: String,
                       k: Int, k1: Double = 1.2,
                       b: Double = 0.75): DataFrame =
-    rankPrunedBatch(spark, storeDir, queries, idCol, termsCol, k,
-      Bm25(k1, b))
-
-  /** [[topKPrunedBatch]] / [[lmTopKPrunedBatch]]. */
-  private def rankPrunedBatch(spark: SparkSession, storeDir: String,
-                              queries: DataFrame, idCol: String,
-                              termsCol: String, k: Int,
-                              sc: Scorer): DataFrame = {
-    require(k >= 1, "need at least one result slot")
-    lastPruneStats = None
-    // out-of-monotone-range params delegate — see [[rankPruned]]
-    if (!sc.monotone || tombstoneCount(spark, storeDir) > 0L ||
-        !tryEnsureBlockCoverage(spark, storeDir)) {
-      lastPruneStats = Some(PruneStats(0, 0, 0, None, delegated = true))
-      return rankBatch(spark, storeDir, queries, idCol, termsCol, k, sc)
-    }
-    val (n, sdl, _) = readStats(spark, storeDir)
-    val (qt, bsDF) =
-      prunedBatchFrames(spark, storeDir, queries, idCol, termsCol) match {
-        case Left(empty) => return empty
-        case Right(t) => t
-      }
-    val statFrame = broadcast(
-      bsDF.groupBy(col("w")).agg(sum(col(sc.sidecarCol)).as(sc.stat)))
-    prunedServeBatch(spark, storeDir, qt, k, bsDF,
-      sc.score(statFrame, n, sdl))
-  }
+    rankShardedPrunedBatch(spark, Seq(storeDir), queries, idCol, termsCol,
+      k, Bm25(k1, b))
 
   /** Block-max-pruned BATCHED Dirichlet LM — [[lmTopKBatch]]'s rows
     * through the distributed prune algebra: ctf from the sidecar's
@@ -4801,112 +4697,8 @@ object TextIndex {
                         queries: DataFrame, idCol: String,
                         termsCol: String, k: Int,
                         mu: Double = 2000.0): DataFrame =
-    rankPrunedBatch(spark, storeDir, queries, idCol, termsCol, k, Lm(mu))
-
-  /** The distributed batched prune core (see [[topKPrunedBatch]]'s
-    * doc for the plan shape and [[prunedServe]]'s for the bound
-    * algebra, floors included). `sharedThetaQ`: an EXTERNALLY-derived
-    * per-query threshold frame `(query_id, theta)` (micros, floors
-    * already applied) that replaces the local probe —
-    * [[topKShardedPrunedBatch]] passes the cross-shard global θ,
-    * which dominates any shard-local probe. The caller owns its
-    * validity for the scorer. */
-  private def prunedServeBatch(spark: SparkSession, storeDir: String,
-                               qt: DataFrame, k: Int, bsDF: DataFrame,
-                               scoreOf: DataFrame => DataFrame,
-                               sharedThetaQ: Option[DataFrame] = None)
-      : DataFrame = {
-    import spark.implicits._
-    val termsF = qt.select(col("w")).distinct()
-    val cm = (col("c") * 1000000L).cast("long")
-    val capsDF = scoreOf(bsDF.select(col("file"), col("w"),
-        col("maxtf").as("tf"), col("mindl").as("dl")))
-      .select(col("file"), col("w"), cm.as("cap"))
-      .localCheckpoint() // tiny: files×union-terms rows
-    val capPlusG = capsDF.groupBy(col("w"))
-      .agg(greatest(max(col("cap")), lit(0L)).as("cap_plus"))
-    // per-(query, term) rest-mass + per-query floor adjustment
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-    val qrest = qt.join(broadcast(capPlusG), Seq("w"))
-      .withColumn("rest_plus",
-        sum(col("cap_plus")).over(wq) - col("cap_plus"))
-    val thetaQ = sharedThetaQ.getOrElse {
-      val floors = scoreOf(bsDF.groupBy(col("w"))
-          .agg(max(col("maxdl")).as("dl")).withColumn("tf", lit(1L)))
-        .select(col("w"), least(cm, lit(0L)).as("floor"))
-      val negAdj = qt.join(broadcast(floors), Seq("w"))
-        .groupBy(col("query_id")).agg(sum(col("floor")).as("neg_adj"))
-      // probe: every term's best-cap file, one shared read
-      val wprobe = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("w")).orderBy(col("cap").desc, col("file"))
-      val probeFiles = capsDF
-        .withColumn("_r", row_number().over(wprobe))
-        .filter(col("_r") === 1)
-        .select(col("file")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
-      val wrank = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("query_id"))
-        .orderBy(col("s").desc, col("doc_id"))
-      scoreOf(
-          readKnownUnder(spark, storeDir, probeFiles)
-            .join(broadcast(termsF), Seq("w")))
-        .join(qt.select(col("query_id"), col("w")), Seq("w"))
-        .groupBy(col("query_id"), col("doc_id"))
-        .agg((sum(col("c")) * 1000000L).cast("long").as("s"))
-        .withColumn("_r", row_number().over(wrank))
-        .filter(col("_r") === k)
-        .join(negAdj, Seq("query_id"))
-        .select(col("query_id"), (col("s") + col("neg_adj")).as("theta"))
-    }
-    // survivor union: a file lives iff SOME query's bound reaches its θ
-    // (a query with no θ row — fewer than k probe docs — keeps all)
-    val survivors = capsDF
-      .join(qrest.select(col("query_id"), col("w"), col("rest_plus")),
-        Seq("w"))
-      .join(thetaQ, Seq("query_id"), "left")
-      .filter(col("theta").isNull ||
-        greatest(col("cap"), lit(0L)) + col("rest_plus") >= col("theta"))
-      .select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    val relevant = capsDF.select(col("file")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val skipped = relevant.filterNot(survivors.toSet).sorted
-    lastPruneStats = Some(PruneStats(relevant.size, survivors.size,
-      skipped.size, None, delegated = false))
-    if (survivors.isEmpty) // every query provably sub-θ everywhere
-      return emptyTopKBatch(spark)
-    // per-query unseen-mass terms: postings left OUTSIDE the union
-    val outArr =
-      if (skipped.isEmpty) null
-      else capsDF.filter(col("file").isInCollection(skipped))
-        .select(col("w")).distinct()
-        .join(qt.select(col("query_id"), col("w")), Seq("w"))
-        .groupBy(col("query_id")).agg(collect_set(col("w")).as("outs"))
-    val contrib = scoreOf(
-        readKnownUnder(spark, storeDir, survivors)
-          .join(broadcast(termsF), Seq("w")))
-      .select(col("w"), col("doc_id"), col("c"))
-    val scored0 = contrib
-      .join(qt.select(col("query_id"), col("w")), Seq("w"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(count(lit(1)).as("n_terms"),
-        sum(col("c")).cast("double").as("score"),
-        collect_set(col("w")).as("ws"))
-    val scored =
-      if (outArr == null) scored0
-      else scored0.join(outArr, Seq("query_id"), "left")
-        .filter(col("outs").isNull ||
-          size(array_except(col("outs"), col("ws"))) === 0)
-    scored
-      .groupBy(col("query_id"))
-      .agg(graft.functions.TopK.top_k_tagged(k)(col("doc_id"),
-        col("score"), col("n_terms")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("hit"))
-      .select(col("query_id"), col("hit._1").as("doc_id"),
-        col("hit._3").as("n_terms"), col("hit._2").as("score"))
-      .orderBy(col("query_id"), col("score").desc, col("doc_id"))
-  }
+    rankShardedPrunedBatch(spark, Seq(storeDir), queries, idCol, termsCol,
+      k, Lm(mu))
 
   // ------------------------------------------------------------------
   // BLOCK-MAX pruning for the MULTI-FIELD serve (BM25F). The single-

@@ -409,15 +409,10 @@ object SkippingStore {
     walk(root)
   }
 
-  /** A/B kill-switch for the footer-stats zone derivation (default ON;
-    * set env var or sysprop GRAFT_ZONE_FOOTER_STATS=false to force the
-    * original data-scan path). Answer-preserving by construction: both
-    * paths produce bit-identical sidecar rows (spec-pinned), the switch
-    * exists only to price the derivation in isolation. */
-  private def footerStatsEnabled: Boolean =
-    !sys.env.get("GRAFT_ZONE_FOOTER_STATS")
-      .orElse(Option(java.lang.System.getProperty("GRAFT_ZONE_FOOTER_STATS")))
-      .exists(_.equalsIgnoreCase("false"))
+  /** Whether zone rows come from parquet footers (default) or from the
+    * column-pruned data scan — a test hook: specs switch it off to prove
+    * both paths produce bit-identical sidecar rows. */
+  @volatile private[graft] var footerStats: Boolean = true
 
   /** File count past which [[footerZoneRows]] declines and the caller
     * runs the distributed data scan instead — driver-side footer reads
@@ -471,7 +466,7 @@ object SkippingStore {
   private def footerZoneRows(spark: SparkSession, dir: String,
                              relFiles: Seq[String], cols: Seq[String])
       : Option[DataFrame] = {
-    if (!footerStatsEnabled || relFiles.size > footerZoneMaxFiles)
+    if (!footerStats || relFiles.size > footerZoneMaxFiles)
       return None
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1014,6 +1009,18 @@ object SkippingStore {
         loaded
       })
   }
+
+  /** Cache `from`'s zone rows under `to` too — for a scaffold about to
+    * be renamed into place as `to`: a rename keeps every file's name,
+    * length and mtime, so the fingerprint matches after the swap, and a
+    * swap that never happens leaves an entry no listing matches. */
+  private[graft] def memoZoneRowsAs(spark: SparkSession, from: String,
+                                    to: String): Unit =
+    for {
+      fp <- sidecarFingerprint(spark, s"$from/_zonemap_multi")
+      rows <- Option(sidecarCache.get(
+        (Constraints.qualified(spark, from), "zone", fp)))
+    } sidecarCache.put((Constraints.qualified(spark, to), "zone", fp), rows)
 
   /** [[loadMultiSidecar]] through the cross-query cache: the
     * sidecar-rows collect runs once per sidecar VERSION, the coverage

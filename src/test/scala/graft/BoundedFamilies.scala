@@ -118,14 +118,12 @@ object BoundedFamilies {
         "q263_bm25f" -> Set(Set("df", "w")),
         "q264_bm25f_batch" -> Set(Set("df", "w")),
         // the block-max pruned serves inline the SIDECAR-derived df /
-        // ctf (exact on a tombstone-free store, still terms-sized);
-        // the batched form also broadcasts the union-terms frame into
-        // the sidecar read (query-terms-sized by construction)
+        // ctf (exact on a tombstone-free store, still terms-sized)
         "q266_pruned_rank" -> Set(Set("df", "w")),
         "q267_pruned_multi" -> Set(Set("df", "w")),
         "q268_pruned_lm" -> Set(Set("ctf", "w")),
-        "q269_pruned_batch" -> Set(Set("df", "w"), Set("w")),
-        "q276_pruned_lm_batch" -> Set(Set("ctf", "w"), Set("w")),
+        "q269_pruned_batch" -> Set(Set("df", "w")),
+        "q276_pruned_lm_batch" -> Set(Set("ctf", "w")),
         // positional field stores serve the same BM25F df table
         "q271_bm25f_positional" -> Set(Set("df", "w")),
         // suffix expansion delegates to topK's terms-sized df table
@@ -147,8 +145,8 @@ object BoundedFamilies {
         // the LM scatter's global ctf union (zero data files when
         // pruned — summed from the shards' sidecars)
         "q279_sharded_lm" -> Set(Set("ctf", "w")),
-        // the batched scatter: global df + the union-terms frame
-        "q280_sharded_batch" -> Set(Set("df", "w"), Set("w")),
+        // the batched scatter: global df
+        "q280_sharded_batch" -> Set(Set("df", "w")),
         // pruning through tombstones: sidecar df minus the tombstoned
         // postings' point-lookup counts — still terms-sized
         "q281_tombstone_prune" -> Set(Set("df", "w")),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * data-scan path it replaced: [[SkippingStore.indexPartitioned]] must
   * produce BIT-IDENTICAL `_zonemap_multi` rows whether stats come from
   * parquet footers (default) or the original column-pruned leaf scan
-  * (GRAFT_ZONE_FOOTER_STATS=false) — strings with nulls, longs, empty
+  * (`SkippingStore.footerStats` off) — strings with nulls, longs, empty
   * and all-null slices, build and incremental append alike. Both paths
   * index the SAME store (sidecar dropped in between), so rows compare
   * bit-for-bit, file keys included. */
@@ -47,9 +47,9 @@ class FooterZoneStatsSpec extends SparkSpec {
       .write.partitionBy("tb").mode(mode).parquet(dir)
 
   private def withScanPath[T](f: => T): T = {
-    java.lang.System.setProperty("GRAFT_ZONE_FOOTER_STATS", "false")
+    SkippingStore.footerStats = false
     try f
-    finally java.lang.System.clearProperty("GRAFT_ZONE_FOOTER_STATS")
+    finally SkippingStore.footerStats = true
   }
 
   test("footer stats == data-scan stats on build (strings+nulls, longs)") {
